@@ -1,7 +1,11 @@
 package graft.api
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, InSet, Literal}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.types.LongType
 import graft.engine.GraftTable
 import graft.tableformat.SchemaHistory
 
@@ -99,15 +103,35 @@ object Serving {
 
   /** GET /<table>/row/<key> — equality filter on a key column
     * (apiv15.py:219 `WHERE Index = {id}`), parameterized not f-string'd.
+    *
+    * The key binds as a one-element `InSet` of the column's own type,
+    * through the pruned read: manifest bounds and partition transforms
+    * drop the files that cannot hold it, and because `InSet` holds its
+    * set by reference the generated code is the same for every key (a
+    * literal would be inlined — one fresh compile per key). `InSet`
+    * skips the analyzer's type coercion, so the value is cast here; a
+    * key the column cannot represent is NotFound.
     */
-  def getRowsByKey(t: GraftTable, keyCol: String, value: Long): Result =
-    SchemaHistory.resolve(t.meta, keyCol) match {
-      case SchemaHistory.Current(n) =>
-        Ok(jsonRecords(t.read().filter(col(s"`$n`") === value)))
-      case SchemaHistory.Renamed(n, _, _) =>
-        Ok(jsonRecords(t.read().filter(col(s"`$n`") === value)))
-      case _ => NotFound(s"key column '$keyCol' does not exist")
+  def getRowsByKey(t: GraftTable, keyCol: String, value: Long): Result = {
+    val m = t.meta
+    val name = SchemaHistory.resolve(m, keyCol) match {
+      case SchemaHistory.Current(n)       => n
+      case SchemaHistory.Renamed(n, _, _) => n
+      case _ => return NotFound(s"key column '$keyCol' does not exist")
     }
+    val dt = m.currentSchema.fieldByName(name).get.sparkType
+    val key =
+      if (!Cast.canAnsiCast(LongType, dt)) None
+      else try Option(Cast(Literal(value), dt, evalMode = EvalMode.ANSI).eval())
+      catch { case scala.util.control.NonFatal(_) => None }
+    key match {
+      case Some(k) =>
+        Ok(jsonRecords(t.readWhere(graftshim.columnOf(
+          InSet(UnresolvedAttribute.quoted(name), Set(k))))))
+      case None =>
+        NotFound(s"key $value is not a value of column '$name' ($dt)")
+    }
+  }
 
   /** GET /<table>/history (apiv15.py:80). */
   def getHistory(t: GraftTable): Result = Ok(jsonRecords(t.history))

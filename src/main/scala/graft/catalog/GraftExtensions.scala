@@ -445,9 +445,6 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
     // current schema's ids; a drifted schema falls to the scan)
     val snap = h.pinnedSnapshot.orElse(m.currentSnapshot)
     if (h.pinnedSnapshot.exists(_.schemaId != m.currentSchemaId)) return None
-    // MoR delete files make every manifest count/bound unsound (stale
-    // positional pointers, uncounted equality keys) — scan instead
-    if (snap.exists(_.deleteFiles.nonEmpty)) return None
     val files0 = snap.map(_.files).getOrElse(Vector.empty)
     // WHERE: inclusive pruning drops the files wholly outside the
     // predicate; the survivors must ALL be wholly inside (strict
@@ -463,6 +460,10 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
           cand
         else return None
     }
+    // MoR deletes reaching the answering files make every manifest
+    // count/bound unsound (repeated positional pointers, uncounted
+    // equality keys) — scan instead
+    if (snap.exists(t.deletesReaching(_, files).nonEmpty)) return None
     val nRows = files.map(_.recordCount).sum
     def boundLit(a: AttributeReference, lower: Boolean): Option[Literal] =
       for {
@@ -502,7 +503,7 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
     * manifest arithmetic over each cell's file slice: the per-(region,
     * day) rollup on a so-partitioned 100 TB table without opening a
     * file. Bails (None → ordinary scan) whenever assignment isn't
-    * sound: delete files, an older-spec file missing a value, a type
+    * sound: live delete files, an older-spec file missing a value, a type
     * whose identity rendering doesn't round-trip exactly
     * (timestamp/float/double), or a string value colliding with the
     * NULL-directory sentinel (a NULL group is otherwise supported —
@@ -521,7 +522,6 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
     val m = t.meta
     val snap = h.pinnedSnapshot.orElse(m.currentSnapshot)
     if (h.pinnedSnapshot.exists(_.schemaId != m.currentSchemaId)) return None
-    if (snap.exists(_.deleteFiles.nonEmpty)) return None
     val files0 = snap.map(_.files).getOrElse(Vector.empty)
     // WHERE: same all-or-nothing strict gate as the groupless flavor —
     // surviving files must be wholly inside the predicate, so each
@@ -534,6 +534,7 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
           cand
         else return None
     }
+    if (snap.exists(t.deletesReaching(_, files).nonEmpty)) return None
     val NullDir = "__HIVE_DEFAULT_PARTITION__"
     def keyOf(dt: DataType, v: String): Option[Any] =
       if (v == NullDir) {

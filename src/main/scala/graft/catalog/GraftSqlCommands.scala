@@ -1,8 +1,8 @@
 package graft.catalog
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Between, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.graftshim
@@ -23,6 +23,14 @@ import graft.engine.GraftTable
 object GraftSqlCommands {
 
   def unbind(e: Expression): Expression = e.transform {
+    // BETWEEN carries a prebuilt replacement (a `With` over a common
+    // expression typed from the bound input): unbinding the attribute
+    // inside it leaves a typed reference to an unresolved child, which
+    // throws on rebuild. Go back to the parser's own form instead —
+    // the registry rebuilds BETWEEN once the input has re-resolved.
+    case b: Between =>
+      UnresolvedFunction("between", Seq(b.input, b.lower, b.upper),
+        isDistinct = false)
     case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
     case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression =>
       s.withNewPlan(unbindPlan(s.plan))

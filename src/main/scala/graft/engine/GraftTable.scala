@@ -86,17 +86,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
   }
 
-  /** Exact row count of the current snapshot. When the snapshot carries
-    * no delete files the answer is manifest arithmetic — the sum of
-    * per-file record counts, ZERO data I/O and zero Spark jobs (the
-    * same shortcut as Iceberg's count(*) aggregate pushdown): at
-    * 100 TB this answers in driver-side milliseconds from O(#files)
-    * metadata. With merge-on-read delete files present the manifest
-    * alone is unsound — positional pointers can go stale (double
-    * deletes, compacted targets) and equality deletes can't be counted
-    * without reading keys — so the count falls back to the merged
-    * read; `rewriteDeleteFiles()`/`rewriteDataFiles()` restore the
-    * fast path.
+  /** Exact row count of the current snapshot. When no delete file
+    * reaches the snapshot's data files ([[deletesReaching]]) the answer
+    * is manifest arithmetic — the sum of per-file record counts, ZERO
+    * data I/O and zero Spark jobs (the same shortcut as Iceberg's
+    * count(*) aggregate pushdown): at 100 TB this answers in
+    * driver-side milliseconds from O(#files) metadata. With live
+    * merge-on-read deletes the manifest alone is unsound — positional
+    * pointers can repeat (double deletes) and equality deletes can't be
+    * counted without reading keys — so the count falls back to the
+    * merged read; `rewriteDeletedDataFiles()` restores the fast path.
     */
   def countRows(): Long = {
     val m = meta
@@ -107,7 +106,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       // table reads one manifest list, not a million JSON lines (the
       // per-entry sum here measured 4.5 s cold at the 1M soak shape;
       // the ref sum is milliseconds)
-      case Some(s) if s.deleteFiles.isEmpty => s.totalRecords
+      case Some(s) if deletesReaching(s, s.files).isEmpty => s.totalRecords
       case Some(s) => liveRows(m, s, s.files).count()
     }
   }
@@ -119,15 +118,17 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * their manifest record counts, and only the ambiguous boundary
     * files have their rows read. A time-range count over a
     * time-clustered 100 TB table reads two boundary files' data and
-    * answers the rest from O(#files) metadata. MoR delete files force
-    * the exact merged-scan count (same soundness rule as
-    * [[countRows]]).
+    * answers the rest from O(#files) metadata. MoR deletes reaching the
+    * candidate files force the exact merged-scan count (same soundness
+    * rule as [[countRows]]).
     */
   def countWhere(cond: Column): Long = {
     val m = meta
     m.currentSnapshot match {
       case None => 0L
-      case Some(s) if s.deleteFiles.nonEmpty => readWhere(cond).count()
+      case Some(s) if deletesReaching(s,
+          prunedSnapshotFiles(m, s, exprOf(cond))).nonEmpty =>
+        readWhere(cond).count()
       case Some(s) =>
         val e = exprOf(cond)
         // manifest tier first (sealed snapshots): a summary-strict
@@ -156,7 +157,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** Manifest-only COUNT(col) — non-null count, completing Iceberg's
     * pushed-aggregate trio (COUNT(*), COUNT(col), MIN/MAX): per-file
     * recordCount minus nullCount, summed. None whenever unsound —
-    * delete files present, or any file missing the field's null count
+    * live delete files, or any file missing the field's null count
     * (pre-ADD-COLUMN files null-fill the column but record nothing).
     */
   def countNonNull(name: String): Option[Long] = countNonNull(meta, name)
@@ -171,7 +172,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       // a never-committed table is EMPTY, not unknown: COUNT(col) = 0
       // (mirrors countRows' None => 0L), provided the column exists
       case None => m.currentSchema.fieldByName(name).map(_ => 0L)
-      case Some(s) if s.deleteFiles.nonEmpty => None
+      case Some(s) if deletesReaching(s, s.files).nonEmpty => None
       case Some(s) => countNonNullIn(m, s.files, name)
     }
 
@@ -195,7 +196,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * of Iceberg's aggregate pushdown next to [[countRows]]. Returns
     * the (lower, upper) pair in the manifest's string encoding, or
     * None whenever manifest arithmetic would be UNSOUND:
-    *   - delete files present (a delete may have removed the extreme
+    *   - live delete files (a delete may have removed the extreme
     *     row — file bounds are inclusive ranges, not live extremes);
     *   - any data file missing a bound for the field (an all-NULL
     *     file records none — harmless, NULLs don't participate in
@@ -212,8 +213,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private[graft] def columnBounds(m: TableMetadata,
       name: String): Option[(String, String)] =
     m.currentSnapshot match {
-      case Some(s) if s.deleteFiles.isEmpty => columnBoundsIn(m, s.files, name)
-      case _                                => None
+      case Some(s) if deletesReaching(s, s.files).isEmpty =>
+        columnBoundsIn(m, s.files, name)
+      case _ => None
     }
 
   /** [[columnBounds]] restricted to a file subset — see
@@ -287,11 +289,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
               r.partitionCombos.exists(keep))
             .flatMap(r => Manifests.readEntries(location, r))
         }
-        val kept = files.filter(f => keep(f.partitionValues))
-        // positional deletes apply to pruned reads too — skipping them
-        // would resurrect MoR-deleted rows in every pruned query
-        if (s.deleteFiles.isEmpty) readFiles(m, kept)
-        else liveRows(m, s, kept).drop("_g_path", "_g_pos")
+        liveRead(m, s, files.filter(f => keep(f.partitionValues)))
     }
   }
 
@@ -335,9 +333,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val (pruneCond, extras) = SubqueryPruning.augmentSplit(spark, cond)
     val kept = prunedSnapshotFiles(m, s, pruneCond)
     GraftTable.lastPrunedReadFiles.set(kept.size.toLong)
-    val base =
-      if (s.deleteFiles.isEmpty) readFiles(m, kept)
-      else liveRows(m, s, kept).drop("_g_path", "_g_pos")
+    val base = liveRead(m, s, kept)
     // evaluated domains — the caller's `residual` (join-key IN-set /
     // range, retained by NOTHING above the swapped scan) plus the
     // subquery extras (retained only as the original, unevaluated
@@ -432,13 +428,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   private def readSnapshot(m: TableMetadata, snap: Option[Snapshot]): DataFrame =
     snap match {
-      case None => emptyDf(m)
-      case Some(s) if s.deleteFiles.isEmpty => readFiles(m, s.files)
-      case Some(s) =>
-        // merge-on-read: positional deletes anti-join by (path, pos),
-        // equality deletes by key value + sequence; both delete sides
-        // are small relative to data, so they broadcast
-        liveRows(m, s, s.files).drop("_g_path", "_g_pos")
+      case None    => emptyDf(m)
+      case Some(s) => liveRead(m, s, s.files)
     }
 
   /** Field-id mapped read core: group files by written schema, read
@@ -659,12 +650,54 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** Live (delete-applied) tagged rows of `files` under snapshot
     * `snap` — the ONE read every DML/merge/upsert path uses, so no
     * writer can ever resurrect a row hidden by either delete kind.
+    * Only the deletes reaching `files` join in.
     */
   private def liveRows(m: TableMetadata, snap: Snapshot,
+      files: Vector[DataFileEntry]): DataFrame = {
+    val dels = deletesReaching(snap, files)
+    applyEqDeletes(m, applyDeletes(readFilesTagged(m, files), dels),
+      files, dels)
+  }
+
+  /** [[liveRows]] without the provenance columns — and a plain scan,
+    * with no delete read and no anti-join, when no delete of `snap`
+    * reaches `files`. Every untagged read of a snapshot goes through
+    * here: positional deletes anti-join by (path, pos), equality
+    * deletes by key value + sequence, both broadcast (delete sides are
+    * small relative to data).
+    */
+  private def liveRead(m: TableMetadata, snap: Snapshot,
       files: Vector[DataFileEntry]): DataFrame =
-    applyEqDeletes(m,
-      applyDeletes(readFilesTagged(m, files), snap.deleteFiles),
-      files, snap.deleteFiles)
+    if (deletesReaching(snap, files).isEmpty) readFiles(m, files)
+    else liveRows(m, snap, files).drop("_g_path", "_g_pos")
+
+  /** The delete files of `snap` that can hide a row of `files`,
+    * decided from manifest metadata alone:
+    *   - a positional delete reaches a file it records as a target
+    *     (`referencedDataFiles`, under any [[relDataPathForms]]
+    *     spelling, so clones and rehomed files still match); one with
+    *     no recorded targets reaches every file;
+    *   - an equality delete reaches a file committed strictly before
+    *     it (the sequence rule [[applyEqDeletes]] evaluates per row).
+    * Reads apply only these, and every commit that removes data files
+    * carries only the deletes reaching its survivors: a delete whose
+    * targets were all rewritten away is dead, and dropping it keeps a
+    * later [[addFiles]] re-import of the same path from inheriting it.
+    * `files` is only evaluated when the snapshot has deletes.
+    */
+  private[graft] def deletesReaching(snap: Snapshot,
+      files: => Vector[DataFileEntry]): Vector[DataFileEntry] =
+    if (snap.deleteFiles.isEmpty) Vector.empty
+    else {
+      val fs = files
+      lazy val forms = fs.iterator.flatMap(f => relDataPathForms(f.path)).toSet
+      val minSeq = fs.iterator.map(_.seq).minOption
+      snap.deleteFiles.filter { d =>
+        if (d.equalityIds.nonEmpty) minSeq.exists(_ < d.seq)
+        else fs.nonEmpty && (d.referencedDataFiles.isEmpty ||
+          d.referencedDataFiles.exists(p => relDataPathForms(p).exists(forms)))
+      }
+    }
 
   // ----------------------------------------------------------------- write
 
@@ -1246,7 +1279,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
               col("_g_pos").as("pos"))
             if (delRows.isEmpty) None
             else {
-              val delEntries = writeDeleteFile(m, delRows)
+              val delEntries = writeDeleteFile(m, delRows, candidates)
               val written = assignments match {
                 case None => Vector.empty[DataFileEntry]
                 case Some(as) => writeFiles(m, applyAssignments(
@@ -1306,9 +1339,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
               touchedAbs.contains(normalizePath(absPath(f.path))))
             // rewriting must not resurrect rows a positional delete
             // already removed (write modes can change between commits)
-            val survivors0 =
-              if (snap.deleteFiles.isEmpty) readFiles(m, touched)
-              else liveRows(m, snap, touched).drop("_g_path", "_g_pos")
+            val survivors0 = liveRead(m, snap, touched)
             val survivors = op match {
               case "delete" => survivors0.filter(!coalesce(cond, lit(false)))
               case _        => transform(survivors0)
@@ -1333,8 +1364,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         case Some((touchedPaths, written)) =>
           val untouched = curFiles.filterNot(f =>
             touchedPaths.contains(normalizePath(absPath(f.path))))
-          withSnapshot(cur, op, untouched ++ written, curDeletes,
-            tsHint = Some(sharedTs))
+          withSnapshot(cur, op, untouched ++ written,
+            deletesKept(cur, untouched), tsHint = Some(sharedTs))
       }
     }
   }
@@ -1615,6 +1646,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       withSnapshot(cur, op, files, deleteFiles)
     }
 
+  /** The delete files a commit that replaces some of `cur`'s data files
+    * keeps: those reaching a `carried` file ([[deletesReaching]]). The
+    * commit's freshly written files need none — no positional key names
+    * a new path, and they sequence after every existing equality
+    * delete — so a delete whose targets were all rewritten drops here.
+    */
+  private def deletesKept(cur: TableMetadata,
+      carried: Vector[DataFileEntry]): Vector[DataFileEntry] =
+    cur.currentSnapshot.map(deletesReaching(_, carried)).getOrElse(Vector.empty)
+
   /** New-snapshot metadata transform — pure function of `cur`, safe to
     * re-run inside the optimistic-commit retry loop. `tsHint` lets a
     * multi-table transaction stamp every table's snapshot with ONE
@@ -1785,7 +1826,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
               .persist() // consumed twice: emptiness gate + the write
             try {
               if (doomed.isEmpty) Vector.empty
-              else writeDeleteFile(m, doomed)
+              else writeDeleteFile(m, doomed, bounded)
             } finally doomed.unpersist()
           }
         }
@@ -1903,9 +1944,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Write a positional-delete parquet from (file_path, pos) rows and
     * return its manifest entries — the one writer all merge-on-read
-    * paths (DML, MERGE, upsert) share.
+    * paths (DML, MERGE, upsert) share. `targets` are the data files the
+    * rows were read from (the writer's candidate set, already on the
+    * driver); each positional entry records those whose scan-side key
+    * lies inside its own `file_path` footer bounds, so reads and
+    * rewrites can tell which files it reaches ([[deletesReaching]])
+    * without opening it.
     */
   private def writeDeleteFile(m: TableMetadata, delRows: DataFrame,
+      targets: Vector[DataFileEntry],
       equalityIds: Vector[Int] = Vector.empty): Vector[DataFileEntry] = {
     val codec = m.properties.getOrElse("write.parquet.compression-codec", "zstd")
     val delRel = s"data/${UUID.randomUUID().toString}-deletes"
@@ -1914,11 +1961,44 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       .parquet(delAbs)
     listParquet(delAbs).map { abs =>
       val rel = s"$delRel/${abs.stripPrefix(delAbs + "/")}"
-      DataFileEntry(rel, readFooter(abs).rowCount, m.currentSchemaId,
+      val footer = readFooter(abs)
+      DataFileEntry(rel, footer.rowCount, m.currentSchemaId,
         equalityIds = equalityIds,
-        fileSizeBytes = io.size(abs))
+        fileSizeBytes = io.size(abs),
+        referencedDataFiles =
+          if (equalityIds.nonEmpty) Vector.empty
+          else targetsWithin(targets, footer.lower.get("file_path"),
+            footer.upper.get("file_path")))
     }
   }
+
+  /** Manifest paths of `targets` with a scan-side key inside the
+    * positional delete file's `[lo, hi]` bounds, compared in parquet's
+    * unsigned UTF-8 byte order. A key is checked in every spelling it
+    * can take in the delete rows — the [[relDataPathForms]] ones plus
+    * the percent-encoded URI path the scan reports — and a target is
+    * dropped only when all of them fall outside. Absent bounds keep
+    * every target.
+    */
+  private def targetsWithin(targets: Vector[DataFileEntry],
+      lo: Option[String], hi: Option[String]): Vector[String] =
+    (lo, hi) match {
+      case (Some(l), Some(h)) =>
+        def utf8(x: String) = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val (lb, hb) = (utf8(l), utf8(h))
+        targets.map(_.path).filter { p =>
+          val uriForm =
+            try Seq(relDataPathStr(
+              new org.apache.hadoop.fs.Path(absPath(p)).toUri.getRawPath))
+            catch { case _: Exception => Nil }
+          (relDataPathForms(p) ++ uriForm).exists { k =>
+            val kb = utf8(k)
+            java.util.Arrays.compareUnsigned(lb, kb) <= 0 &&
+              java.util.Arrays.compareUnsigned(kb, hb) <= 0
+          }
+        }
+      case _ => targets.map(_.path)
+    }
 
   /** O(batch)-commit CDC apply: the EQUALITY-delete variant of
     * [[upsertIfNewMarker]]. No join against existing data at write
@@ -1975,7 +2055,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           // file per batch keeps the manifest O(#batches), not
           // O(#batches * shuffle partitions)
           .coalesce(1),
-        equalityIds = ids)
+        targets = Vector.empty, equalityIds = ids)
     val written =
       try writeFiles(m, df)
       catch {
@@ -2008,10 +2088,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   /** Merge-on-read row-level DML: stats-pruned candidate scan finds
     * matching rows; their (file_path, row_index) pairs land in a new
-    * positional delete file; UPDATE additionally appends the updated
-    * copies. Data files are never rewritten — the write cost is
-    * O(matched rows), the read cost an anti-join against (small,
-    * broadcast) delete files until `rewriteDataFiles()` compacts.
+    * positional delete file that records the candidates as its targets;
+    * UPDATE additionally appends the updated copies. Data files are
+    * never rewritten — the write cost is O(matched rows). The read cost
+    * is a broadcast anti-join, paid only by reads whose files the
+    * delete reaches ([[deletesReaching]]), and only until a rewrite
+    * (binpack, copy-on-write DML, `rewriteDeletedDataFiles()`) replaces
+    * the files it targets — that commit drops the delete.
     */
   private def mergeOnReadDml(m: TableMetadata, cond: Column,
       assignments: Option[Map[String, Column]]): GraftTable = {
@@ -2032,7 +2115,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         relDataPath(col("_g_path")).as("file_path"),
         col("_g_pos").as("pos"))
       if (delRows.isEmpty) return this
-      val delEntries = writeDeleteFile(m, delRows)
+      val delEntries = writeDeleteFile(m, delRows, candidates)
       val (dataFiles, op) = assignments match {
         case None => (snap.files, "delete")
         case Some(as) =>
@@ -2313,7 +2396,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           return (if (staging) aligned else Left(this))
         val delEntries =
           if (delRows.isEmpty) Vector.empty[DataFileEntry]
-          else writeDeleteFile(m, delRows)
+          else writeDeleteFile(m, delRows, touched)
         val written = newData.map(d => writeFiles(m, d)).getOrElse(Vector.empty)
         if (staging)
           // staged merge-on-read merge: delete file + appended copies
@@ -2385,15 +2468,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                       s"staged MERGE of $location — re-run the transaction")
                 val curFiles =
                   curM.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-                val curDeletes =
-                  curM.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
                 val untouched = curFiles.filterNot(f => touchedPaths(f.path))
                 withSnapshot(curM, "overwrite", untouched ++ written,
-                  curDeletes, tsHint = Some(sharedTs))
+                  deletesKept(curM, untouched), tsHint = Some(sharedTs))
               })
             } else {
               val untouchedF = files0.filterNot(f => touchedPaths(f.path))
-              commitSnapshot(m, "overwrite", untouchedF ++ writeFiles(m, rows), dels0)
+              commitSnapshot(m, "overwrite", untouchedF ++ writeFiles(m, rows),
+                deletesKept(m, untouchedF))
               Left(this)
             }
           }
@@ -2641,16 +2723,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       touchedAbs.contains(normalizePath(absPath(f.path))))
     // rewriting a file must not resurrect rows a positional delete
     // already removed (tables can switch write modes between commits)
-    val survivors0 =
-      if (snap.deleteFiles.isEmpty) readFiles(m, touched)
-      else liveRows(m, snap, touched).drop("_g_path", "_g_pos")
+    val survivors0 = liveRead(m, snap, touched)
     val survivors = op match {
       // keep rows where cond is not TRUE (NULL-safe: NULL keeps the row)
       case "delete" => survivors0.filter(!coalesce(cond, lit(false)))
       case _        => transform(survivors0)
     }
     val written = writeFiles(m, survivors)
-    commitSnapshot(m, op, untouched ++ written, snap.deleteFiles)
+    commitSnapshot(m, op, untouched ++ written, deletesKept(m, untouched))
     this
   }
 
@@ -2869,13 +2949,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * `minInputFiles` sub-threshold files (one small file compacts to
     * itself — wasted I/O).
     *
-    * Merge-on-read interaction: selected rows are read with ALL
-    * deletes applied (materializing them into the rewrite), and every
-    * delete file is carried for the untouched data files — positional
-    * entries pointing at replaced paths match nothing, and equality
-    * deletes skip the rewritten rows because the new files sequence
-    * AFTER them (strictly-older rule). `rewriteDeleteFiles()` reclaims
-    * the dead delete entries separately.
+    * Merge-on-read interaction: selected rows are read with their
+    * deletes applied (materializing them into the rewrite), and the
+    * commit keeps only the delete files that still reach a carried
+    * data file ([[deletesKept]]): a positional delete whose recorded
+    * targets were all packed, or an equality delete every carried file
+    * sequences after, drops with this commit, so reads of the result
+    * pay no anti-join for it and [[countRows]] answers from the
+    * manifest again. Positional entries written before targets were
+    * recorded reach every file and stay until `rewriteDeleteFiles()`
+    * drops their dead rows.
     */
   def rewriteDataFilesBinpack(minFileSizeBytes: Long = 32L << 20,
       targetFileSizeBytes: Long = 128L << 20,
@@ -2891,9 +2974,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       .groupBy(_.partitionValues).filter(_._2.size >= minInputFiles)
       .values.flatten.toVector
     if (selected.isEmpty) return this
-    val rows =
-      if (snap.deleteFiles.isEmpty) readFiles(m, selected)
-      else liveRows(m, snap, selected).drop("_g_path", "_g_pos")
+    val rows = liveRead(m, snap, selected)
     val written =
       if (m.currentSpec.fields.isEmpty) {
         // size the pack from real on-disk bytes (the manifest), not
@@ -2912,7 +2993,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       }
     val selPaths = selected.map(_.path).toSet
     val carried = snap.files.filterNot(f => selPaths(f.path))
-    commitSnapshot(m, "replace", carried ++ written, snap.deleteFiles)
+    commitSnapshot(m, "replace", carried ++ written, deletesKept(m, carried))
     this
   }
 
@@ -3044,8 +3125,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         eqMaxSeq.exists(f.seq < _))
     val written =
       if (affected.isEmpty) Vector.empty[DataFileEntry]
-      else writeFiles(m,
-        liveRows(m, snap, affected).drop("_g_path", "_g_pos"))
+      else writeFiles(m, liveRead(m, snap, affected))
     commitSnapshot(m, "replace", untouched ++ written, Vector.empty)
     this
   }
@@ -3143,7 +3223,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
               val ranged =
                 if (targetFiles > 0) rows.repartitionByRange(targetFiles, keys: _*)
                 else rows.repartitionByRange(keys: _*)
-              writeDeleteFile(m, ranged.sortWithinPartitions(keys: _*))
+              writeDeleteFile(m, ranged.sortWithinPartitions(keys: _*),
+                snap.files)
             }
           } finally rows.unpersist()
       }
@@ -3965,7 +4046,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * aggregate trio — record count, non-null count, and min/max bounds
     * (the manifest's string encodings). NULL cells where manifest
     * arithmetic would be unsound ([[countNonNull]]/[[columnBounds]]
-    * rules: delete files present, missing per-file stats, or an
+    * rules: live delete files, missing per-file stats, or an
     * unordered type). Zero data I/O always — the conservative cells go
     * NULL rather than triggering a scan, so a scheduler can poll this
     * on a 100 TB table for free.
@@ -3973,9 +4054,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   def statsDf: DataFrame = {
     val m = meta
     val nRows = m.currentSnapshot match {
-      case Some(s) if s.deleteFiles.isEmpty =>
+      case Some(s) if deletesReaching(s, s.files).isEmpty =>
         Some(s.files.map(_.recordCount).sum)
-      case Some(_) => None // MoR deletes: exact count needs the scan
+      case Some(_) => None // live MoR deletes: exact count needs the scan
       case None    => Some(0L)
     }
     m.currentSchema.fields.map { f =>
@@ -4317,9 +4398,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val newDels = toSnap.deleteFiles.filterNot(f => fromDelPaths(f.path))
     val newPos = newDels.filter(_.equalityIds.isEmpty)
     val newEq = newDels.filter(_.equalityIds.nonEmpty)
-    val inserts =
-      if (addedData.isEmpty) emptyDf(m)
-      else liveRows(m, toSnap, addedData).drop("_g_path", "_g_pos")
+    val inserts = liveRead(m, toSnap, addedData)
     val posDeletes: Option[DataFrame] =
       if (newPos.isEmpty) None
       else {

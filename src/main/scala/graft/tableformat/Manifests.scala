@@ -164,6 +164,7 @@ object Manifests {
       var nulls = Map.empty[String, Long]
       var size = 0L; var seq = 0L
       var eq = Vector.empty[Int]
+      var refs = Vector.empty[String]
       require(p.nextToken() == JsonToken.START_OBJECT, s"not an object: $line")
       while (p.nextToken() != JsonToken.END_OBJECT) {
         val name = p.currentName(); p.nextToken()
@@ -181,12 +182,16 @@ object Manifests {
             val b = Vector.newBuilder[Int]
             while (p.nextToken() != JsonToken.END_ARRAY) b += p.getIntValue
             eq = b.result()
+          case "referencedDataFiles" =>
+            val b = Vector.newBuilder[String]
+            while (p.nextToken() != JsonToken.END_ARRAY) b += p.getText
+            refs = b.result()
           case _ => p.skipChildren() // forward-compat: unknown fields
         }
       }
       require(path != null, s"manifest entry without path: $line")
       DataFileEntry(path, recordCount, schemaId, pv, lo, hi, nulls,
-        size, seq, eq)
+        size, seq, eq, refs)
     } finally p.close()
   }
 
@@ -217,6 +222,11 @@ object Manifests {
     if (e.equalityIds.nonEmpty) {
       g.writeArrayFieldStart("equalityIds")
       e.equalityIds.foreach(g.writeNumber)
+      g.writeEndArray()
+    }
+    if (e.referencedDataFiles.nonEmpty) {
+      g.writeArrayFieldStart("referencedDataFiles")
+      e.referencedDataFiles.foreach(g.writeString)
       g.writeEndArray()
     }
     g.writeEndObject()

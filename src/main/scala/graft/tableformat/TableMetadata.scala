@@ -109,7 +109,13 @@ final case class DataFileEntry(path: String, recordCount: Long,
     // field-ids of the equality-delete key columns; non-empty marks a
     // deleteFiles entry as an EQUALITY delete (rows keyed by value, not
     // position — Iceberg format-v2's second delete kind)
-    equalityIds: Vector[Int] = Vector.empty)
+    equalityIds: Vector[Int] = Vector.empty,
+    // POSITIONAL deletes only: the manifest paths of the data files
+    // this delete's rows can point at (Iceberg's referenced_data_file,
+    // widened to a set). Empty = unknown, and an unknown delete reaches
+    // every data file — entries written before targets were recorded
+    // keep their old every-read anti-join.
+    referencedDataFiles: Vector[String] = Vector.empty)
 
 /** A committed table version: provenance + the file inventory.
   * operation: "append" | "overwrite" | "delete" | "replace".

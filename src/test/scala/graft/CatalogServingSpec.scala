@@ -192,6 +192,47 @@ class CatalogServingSpec extends AnyFunSuite {
       r.contains("\"record_count\":2")))
   }
 
+  test("serving: getRowsByKey reads a pruned file set with a key bound " +
+      "in the column's own type; new keys compile nothing") {
+    import spark.implicits._
+    import graft.engine.GraftTable
+    val cat = freshCat()
+    val t = cat.createTable("db", "keyed",
+      Seq("k" -> "long", "small" -> "int", "v" -> "string"))
+    (0 until 4).foreach(i => t.append((i * 10L until i * 10L + 10L)
+      .map(k => (k, k.toInt, s"v$k")).toDF("k", "small", "v").coalesce(1)))
+    def viaFilter(name: String, key: Long) =
+      t.read().filter(col(s"`$name`") === key).toJSON.collect().toSeq
+    val cand = t.candidateFiles(col("k") === 23L).size
+    assert(cand == 1)
+    GraftTable.lastPrunedReadFiles.set(-1L)
+    val Serving.Ok(rows) = Serving.getRowsByKey(t, "k", 23L): @unchecked
+    assert(rows == viaFilter("k", 23L) && rows.size == 1)
+    val planned = GraftTable.lastPrunedReadFiles.get()
+    assert(planned >= 0L && planned <= cand, s"planned $planned files")
+    // a second, different key reuses the generated code
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val Serving.Ok(rows2) = Serving.getRowsByKey(t, "k", 37L): @unchecked
+    assert(compiles.getCount == before, "a new key compiled code")
+    assert(rows2 == viaFilter("k", 37L) && rows2.size == 1)
+    // the key binds to the column's own type: an int column matches
+    // in range and is NotFound beyond it
+    val Serving.Ok(small) = Serving.getRowsByKey(t, "small", 7L): @unchecked
+    assert(small == viaFilter("small", 7L) && small.size == 1)
+    assert(Serving.getRowsByKey(t, "small", 1L << 40)
+      .isInstanceOf[Serving.NotFound])
+    // renamed key column: the old name still serves, same rows
+    t.renameColumn("k", "key")
+    val Serving.Ok(renamed) = Serving.getRowsByKey(t, "k", 23L): @unchecked
+    assert(renamed == viaFilter("key", 23L) && renamed.size == 1)
+    val Serving.Ok(current) = Serving.getRowsByKey(t, "key", 23L): @unchecked
+    assert(current == renamed)
+    assert(Serving.getRowsByKey(t, "nope", 1L).isInstanceOf[Serving.NotFound])
+    assert(Serving.getRowsByKey(t, "k", 99L) == Serving.Ok(Nil))
+  }
+
   test("H4: schema evolution records provenance properties") {
     val cat = freshCat()
     val t = employeeTable(cat)

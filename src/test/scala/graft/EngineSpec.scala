@@ -1219,8 +1219,11 @@ class EngineSpec extends AnyFunSuite {
       t.append(Seq((i * 2L, "a"), (i * 2L + 1L, "a")).toDF("id", "cat")))
     t.append((100L to 105L).map((_, "b")).toDF("id", "cat").repartition(1))
     t.delete(col("id") === 1L) // MoR: delete file against a small 'a' file
+    val aDeletes = t.meta.currentSnapshot.get.deleteFiles
     t.delete(col("id") === 100L) // MoR: delete file against the 'b' file
     val before = t.meta.currentSnapshot.get
+    val bDeletes = before.deleteFiles.filterNot(aDeletes.contains)
+    assert(bDeletes.size == 1)
     val bPaths = before.files.filter(_.partitionValues("cat") == "b")
       .map(_.path).toSet
     t.rewriteDataFilesBinpack()
@@ -1229,8 +1232,9 @@ class EngineSpec extends AnyFunSuite {
     assert(after.files.filter(_.partitionValues("cat") == "a").size == 1)
     assert(after.files.filter(_.partitionValues("cat") == "b")
       .map(_.path).toSet == bPaths)
-    // delete files carried: 'b' still masks 100; 'a' materialized its delete
-    assert(after.deleteFiles.nonEmpty)
+    // exactly 'b''s delete file is carried (it still masks 100); 'a''s
+    // delete was materialized into the pack and dropped with its target
+    assert(after.deleteFiles == bDeletes)
     assert(t.read().as[(Long, String)].collect().sorted.toSeq ==
       Seq((0L, "a"), (2L, "a"), (3L, "a"), (4L, "a"), (5L, "a"),
         (101L, "b"), (102L, "b"), (103L, "b"), (104L, "b"), (105L, "b")))

@@ -199,4 +199,44 @@ class EqualityDeleteSpec extends AnyFunSuite {
     t.rewriteDeleteFiles()
     assert(t.read().orderBy("doc_id").as[(Long, String)].collect().toSeq == expect2)
   }
+
+  test("a rewrite drops an equality delete once every surviving file " +
+      "sequences after it, and keeps it while one older file survives") {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp(), "eqreach",
+      Seq("id" -> "long", "cat" -> "string", "v" -> "string"),
+      partition = Seq("cat" -> "identity"))
+    def add(rows: (Long, String, String)*): Unit =
+      t.append(rows.toDF("id", "cat", "v").coalesce(1))
+    add((1L, "a", "x"), (2L, "a", "x"))
+    add((3L, "a", "x"))
+    add((10L, "b", "x"))
+    val up = GraftTableSink.upsertBatchEq(t, Seq("id"), "eqreach")
+    up(Seq((1L, "a", "y")).toDF("id", "cat", "v"), 0L)
+    val eqSeq = t.meta.currentSnapshot.get.deleteFiles
+      .filter(_.equalityIds.nonEmpty).map(_.seq)
+    assert(eqSeq.size == 1)
+    def rows() = t.read().orderBy("id").as[(Long, String, String)]
+      .collect().toSeq
+    val expect1 = Seq((1L, "a", "y"), (2L, "a", "x"), (3L, "a", "x"),
+      (10L, "b", "x"))
+    assert(rows() == expect1)
+    // packs 'a' (three files); the lone 'b' file is older than the
+    // delete and survives, so the delete must stay
+    t.rewriteDataFilesBinpack()
+    val s1 = t.meta.currentSnapshot.get
+    assert(s1.files.count(_.partitionValues("cat") == "a") == 1)
+    assert(s1.deleteFiles.map(_.seq) == eqSeq, "an older file survives")
+    assert(rows() == expect1)
+    // fragment 'b' and pack it: every surviving file now sequences
+    // after the delete, which drops with this commit
+    add((11L, "b", "x"))
+    t.rewriteDataFilesBinpack()
+    val s2 = t.meta.currentSnapshot.get
+    assert(s2.files.forall(_.seq > eqSeq.head))
+    assert(s2.deleteFiles.isEmpty)
+    assert(rows() == expect1 :+ ((11L, "b", "x")))
+    assert(t.countRows() == 5L)
+    assert(antiJoins(t.read()) == 0)
+  }
 }

@@ -368,4 +368,192 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(t.read().orderBy("id").as[(Long, Int)].collect().toSeq ==
       Seq((1L, 1), (2L, 20)))
   }
+
+  // ---- delete reach: positional deletes record their target files, so
+  // ---- reads skip deletes they cannot touch and rewrites drop dead ones
+
+  /** Two single-file appends: ids 1..10 and 11..20. */
+  private def twoFileMorTable(name: String): GraftTable = {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp(), name,
+      Seq("id" -> "long", "name" -> "string", "age" -> "int"),
+      properties = Map("write.delete.mode" -> "merge-on-read",
+        "write.update.mode" -> "merge-on-read"))
+    Seq(1L to 10L, 11L to 20L).foreach(r => t.append(
+      r.map(i => (i, s"n$i", i.toInt)).toDF("id", "name", "age").coalesce(1)))
+    t
+  }
+
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val attachedAt = System.currentTimeMillis()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.time >= attachedAt) n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { val r = body; Thread.sleep(300); (r, n.get()) }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  private def planOf(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString
+
+  test("a binpack that rewrites every target of a positional delete " +
+      "commits no delete file; counts answer from the manifest again") {
+    import spark.implicits._
+    val t = twoFileMorTable("reach_bp")
+    t.delete(col("id") === 3L)
+    t.update(col("id") === 15L, Map("age" -> lit(150)))
+    val before = t.meta.currentSnapshot.get
+    assert(before.deleteFiles.size == 2)
+    // each delete records exactly the one file its row came from
+    assert(before.deleteFiles.map(_.referencedDataFiles.size) == Vector(1, 1))
+    assert(before.deleteFiles.flatMap(_.referencedDataFiles).toSet ==
+      before.files.take(2).map(_.path).toSet)
+    val expect = t.read().orderBy("id").as[(Long, String, Int)].collect().toSeq
+    t.rewriteDataFilesBinpack()
+    val after = t.meta.currentSnapshot.get
+    assert(after.operation == "replace")
+    assert(after.deleteFiles.isEmpty,
+      "every delete target was rewritten: no delete file may be carried")
+    assert(t.read().orderBy("id").as[(Long, String, Int)].collect().toSeq ==
+      expect)
+    assert(!planOf(t.read()).contains("LeftAnti"))
+    // manifest-only count: zero Spark jobs
+    val (n, jobs) = jobsDuring(t.countRows())
+    assert(n == 19L && jobs == 0, s"n=$n jobs=$jobs")
+    assert(t.statsDf.filter(col("col_name") === "id")
+      .select("record_count").as[Long].head() == 19L)
+    // the changelog across a rewrite that dropped deletes has no rows
+    assert(t.changelog(Some(before.snapshotId), after.snapshotId)
+      .count() == 0L)
+    // history keeps its deletes: the pre-binpack snapshot still hides
+    assert(t.readAsOfVersion(before.snapshotId).count() == 19L)
+  }
+
+  test("a dead positional delete does not hide rows of a re-imported " +
+      "add_files file") {
+    import spark.implicits._
+    val ext = tmp()
+    Seq(0L until 10L, 10L until 20L).foreach(r =>
+      r.map(i => (i, s"n$i", i.toInt)).toDF("id", "name", "age")
+        .coalesce(1).write.mode("append").parquet(ext))
+    val t = GraftTable.create(spark, tmp(), "reimport",
+      Seq("id" -> "long", "name" -> "string", "age" -> "int"),
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    t.addFiles(ext)
+    t.delete(col("id") === 3L)
+    assert(t.read().count() == 19L)
+    // binpack rewrites both imports; the delete's pointer (the external
+    // path, pos 3) names a file that left the table...
+    t.rewriteDataFilesBinpack()
+    assert(t.meta.currentSnapshot.get.deleteFiles.isEmpty)
+    // ...so re-importing the same files must show every one of their rows
+    t.addFiles(ext)
+    assert(t.read().count() == 39L)
+    assert(t.read().filter(col("id") === 3L).count() == 1L)
+  }
+
+  test("a pruned read that no delete reaches plans a plain scan, on the " +
+      "current and on a time-travel snapshot") {
+    import spark.implicits._
+    val t = twoFileMorTable("reach_read")
+    t.delete(col("id") === 3L) // reaches the 1..10 file only
+    val s1 = t.meta.currentSnapshot.get
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").as[Long].collect().sorted.toSeq
+    val far = t.readWhere(col("id") >= 12L)
+    assert(!planOf(far).contains("LeftAnti") &&
+      !planOf(far).contains("BroadcastExchange"), planOf(far))
+    assert(ids(far) == ids(t.read().filter(col("id") >= 12L)))
+    assert(ids(far) == (12L to 20L))
+    // the reached file still merges
+    val near = t.readWhere(col("id") <= 5L)
+    assert(planOf(near).contains("LeftAnti"))
+    assert(ids(near) == Seq(1L, 2L, 4L, 5L))
+    // a later commit adds a file and a delete reaching it; the pruned
+    // read of the OLD snapshot applies that snapshot's reach
+    t.append((21L to 30L).map(i => (i, s"n$i", i.toInt))
+      .toDF("id", "name", "age").coalesce(1))
+    t.delete(col("id") === 25L)
+    val m = t.meta
+    val cond = org.apache.spark.sql.graftshim.expressionOf(col("id") >= 12L)
+    val old = t.readPrunedIn(m, s1, cond).filter(col("id") >= 12L)
+    assert(!planOf(old).contains("LeftAnti") &&
+      !planOf(old).contains("BroadcastExchange"), planOf(old))
+    assert(ids(old) ==
+      ids(t.readAsOfVersion(s1.snapshotId).filter(col("id") >= 12L)))
+    val oldNear = t.readPrunedIn(m, s1,
+      org.apache.spark.sql.graftshim.expressionOf(col("id") <= 5L))
+    assert(planOf(oldNear).contains("LeftAnti"))
+    assert(ids(oldNear.filter(col("id") <= 5L)) == Seq(1L, 2L, 4L, 5L))
+    assert(ids(t.read()) == (1L to 30L).filterNot(Set(3L, 25L)))
+  }
+
+  test("delete targets survive partition paths the scan percent-encodes") {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp(), "reach_enc",
+      Seq("id" -> "long", "cat" -> "string"),
+      partition = Seq("cat" -> "identity"),
+      properties = Map("write.delete.mode" -> "merge-on-read"))
+    val cats = Seq("a b", "c:d", "e%f", "plain")
+    t.append(cats.zipWithIndex.flatMap { case (c, i) =>
+      (0L until 3L).map(k => (i * 10L + k, c)) }.toDF("id", "cat")
+      .coalesce(1))
+    val files = t.meta.currentSnapshot.get.files
+    cats.zipWithIndex.foreach { case (c, i) =>
+      t.delete(col("id") === i * 10L + 1L)
+      val d = t.meta.currentSnapshot.get.deleteFiles.last
+      assert(d.referencedDataFiles ==
+        files.filter(_.partitionValues("cat") == c).map(_.path),
+        s"$c: recorded targets ${d.referencedDataFiles}")
+    }
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
+      cats.indices.flatMap(i => Seq(i * 10L, i * 10L + 2L)))
+    cats.foreach { c =>
+      val one = t.readWhere(col("cat") === c)
+      assert(one.count() == 2L, c)
+    }
+  }
+
+  test("delete entries without recorded targets (older manifests) still " +
+      "reach every file") {
+    import spark.implicits._
+    import graft.tableformat.MetadataIO
+    val t = twoFileMorTable("reach_legacy")
+    t.delete(col("id") === 3L)
+    // strip the targets, as a manifest written before they existed
+    MetadataIO.commitRetry(t.location) { cur =>
+      cur.copy(snapshots = cur.snapshots.map { s =>
+        if (!cur.currentSnapshotId.contains(s.snapshotId)) s
+        else s.copy(inlineFiles = s.files,
+          inlineDeleteFiles =
+            s.deleteFiles.map(_.copy(referencedDataFiles = Vector.empty)),
+          manifestList = None)
+      })
+    }
+    val snap = t.meta.currentSnapshot.get
+    val delManifests = snap.manifests.filter(_.kind == "delete")
+    assert(delManifests.nonEmpty)
+    delManifests.foreach { r =>
+      val raw = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"${t.location}/${r.path}")), "UTF-8")
+      assert(!raw.contains("referencedDataFiles"), raw)
+    }
+    assert(snap.deleteFiles.forall(_.referencedDataFiles.isEmpty))
+    // an unknown delete joins every read, even one pruned away from it
+    val far = t.readWhere(col("id") >= 12L)
+    assert(planOf(far).contains("LeftAnti"))
+    assert(far.count() == 9L)
+    assert(t.read().filter(col("id") === 3L).count() == 0L)
+    // and a rewrite of its real target cannot prove it dead while
+    // another data file survives
+    t.setProperties(Map("write.delete.mode" -> "copy-on-write"))
+    t.delete(col("id") === 4L)
+    assert(t.meta.currentSnapshot.get.deleteFiles.size == 1)
+    assert(t.read().select("id").as[Long].collect().sorted.toSeq ==
+      (1L to 20L).filterNot(Set(3L, 4L)))
+  }
 }

@@ -180,6 +180,32 @@ class NativeSqlSpec extends AnyFunSuite {
       .head().getLong(0) == 3)
   }
 
+  test("DELETE and UPDATE accept BETWEEN in WHERE, matching the " +
+      ">= AND <= form, in both write modes") {
+    val cat = freshCat()
+    cat.createDatabase("btw")
+    def rows(n: String) = spark.sql(s"SELECT id, v FROM graft.btw.$n ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    Seq("copy-on-write", "merge-on-read").zipWithIndex.foreach { case (mode, i) =>
+      val (a, b) = (s"a$i", s"b$i")
+      Seq(a, b).foreach { n =>
+        spark.sql(s"""CREATE TABLE graft.btw.$n (id BIGINT, v STRING)
+                     |TBLPROPERTIES ('write.delete.mode'='$mode',
+                     |  'write.update.mode'='$mode')""".stripMargin)
+        spark.sql(s"""INSERT INTO graft.btw.$n VALUES (1, 'x'), (5, 'x'),
+                     |  (10, 'x'), (15, 'x'), (20, 'x'), (25, 'x')""".stripMargin)
+      }
+      spark.sql(s"UPDATE graft.btw.$a SET v = 'u' WHERE id BETWEEN 10 AND 20")
+      spark.sql(s"UPDATE graft.btw.$b SET v = 'u' WHERE id >= 10 AND id <= 20")
+      spark.sql(s"DELETE FROM graft.btw.$a WHERE id BETWEEN 1 AND 5")
+      spark.sql(s"DELETE FROM graft.btw.$b WHERE id >= 1 AND id <= 5")
+      spark.sql(s"DELETE FROM graft.btw.$a WHERE id NOT BETWEEN 1 AND 22")
+      spark.sql(s"DELETE FROM graft.btw.$b WHERE NOT (id >= 1 AND id <= 22)")
+      assert(rows(a) == rows(b), mode)
+      assert(rows(a) == Seq((10L, "u"), (15L, "u"), (20L, "u")), mode)
+    }
+  }
+
   test("SQL DML honors merge-on-read mode") {
     val cat = freshCat()
     cat.createDatabase("mor")

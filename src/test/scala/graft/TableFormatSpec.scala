@@ -330,6 +330,9 @@ class TableFormatSpec extends AnyFunSuite {
         nullCounts = Map("1" -> 0L, "2" -> 123456789012L),
         fileSizeBytes = Long.MaxValue, seq = 42L,
         equalityIds = Vector(1, 7, 2)),
+      DataFileEntry("data/u-deletes/part-0.parquet", 3, 1,
+        referencedDataFiles = Vector("data/a/part-0.parquet",
+          "/ext/dir with space/ü.parquet")),
       DataFileEntry("data/negative.parquet", Long.MaxValue, Int.MaxValue,
         fileSizeBytes = 1L))
     cases.foreach { e =>
@@ -349,6 +352,14 @@ class TableFormatSpec extends AnyFunSuite {
     val extra = """{"path":"p","recordCount":1,"schemaId":0,""" +
       """"future":{"nested":[1,2]},"alsoNew":"x"}"""
     assert(Manifests.parseEntryLine(extra) == DataFileEntry("p", 1, 0))
+    // a delete entry written before targets were recorded: no
+    // referencedDataFiles field, read as "unknown" (reaches every file)
+    val legacyDelete = Manifests.parseEntryLine(
+      """{"path":"data/x-deletes/p.parquet","recordCount":2,"schemaId":0,""" +
+        """"fileSizeBytes":10,"seq":3}""")
+    assert(legacyDelete.referencedDataFiles.isEmpty)
+    assert(legacyDelete == DataFileEntry("data/x-deletes/p.parquet", 2, 0,
+      fileSizeBytes = 10, seq = 3))
   }
 
   test("manifest line codec: property round-trip over arbitrary " +
@@ -366,7 +377,9 @@ class TableFormatSpec extends AnyFunSuite {
       size <- Gen.chooseNum(0L, Long.MaxValue)
       seq <- Gen.chooseNum(0L, Long.MaxValue)
       eq <- Gen.listOf(Gen.chooseNum(1, 1000)).map(_.toVector)
-    } yield DataFileEntry(path, rc, sid, pv, lo, hi, nulls, size, seq, eq)
+      refs <- Gen.listOf(Arbitrary.arbitrary[String]).map(_.toVector)
+    } yield DataFileEntry(path, rc, sid, pv, lo, hi, nulls, size, seq, eq,
+      refs)
     val prop = Prop.forAll(entryGen) { e =>
       // the codec writes JSON-LINES: entries containing raw newlines in
       // strings must be escaped by the writer (jackson always does) so
