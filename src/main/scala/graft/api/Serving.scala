@@ -12,9 +12,10 @@ import graft.tableformat.SchemaHistory
 /** Serving edge: the reference's Flask endpoint semantics as plain
   * functions (SURVEY §2.1 S8 + §3.1). Every reference endpoint ends in
   * `df.toPandas().to_dict(orient="records")` (apiv15.py:66) — JSON row
-  * records; here that's `jsonRecords` (`df.toJSON().collect()`). The
-  * HTTP framing is deliberately absent: the capability is
-  * "collect-as-JSON-rows + endpoint semantics", transport-agnostic.
+  * records; here that's `jsonRecords`, one `to_json` projection inside
+  * the query that reads the rows. The HTTP framing is deliberately
+  * absent: the capability is "collect-as-JSON-rows + endpoint
+  * semantics", transport-agnostic.
   *
   * Error surface mirrors the reference's HTTP codes as a sealed result
   * (Ok / NotFound / BadRequest) so callers — or a thin HTTP wrapper —
@@ -23,6 +24,8 @@ import graft.tableformat.SchemaHistory
   *
   * Scale note: the serving edge COLLECTS — it exists for endpoint-sized
   * results (single columns, filtered rows, snapshots of small tables).
+  * A data endpoint runs exactly one query, encoding on the executors;
+  * the manifest-only endpoints (`getHistory`, `getStats`) run none.
   * Analytics paths return DataFrames and never pass through here.
   */
 object Serving {
@@ -32,8 +35,18 @@ object Serving {
   final case class NotFound(message: String) extends Result
   final case class BadRequest(message: String) extends Result
 
-  /** DataFrame -> JSON row records (the reference's to_dict shape). */
-  def jsonRecords(df: DataFrame): Seq[String] = df.toJSON.collect().toSeq
+  /** DataFrame -> JSON row records (the reference's to_dict shape).
+    *
+    * The encoding is a `to_json(struct(*))` projection on top of the
+    * reading plan, so it runs inside that query: the same
+    * `JacksonGenerator`, session time zone and `ignoreNullFields` conf
+    * as `Dataset.toJSON`, hence the same bytes, but with no `Row`
+    * round trip. Over a local relation (every manifest-only metadata
+    * frame) the optimizer folds the projection at planning time and
+    * the call launches no Spark job.
+    */
+  def jsonRecords(df: DataFrame): Seq[String] =
+    df.select(to_json(struct(col("*")))).collect().map(_.getString(0)).toSeq
 
   /** GET /<table> — full scan (apiv15.py:65). */
   def getTable(t: GraftTable): Result = Ok(jsonRecords(t.read()))
@@ -69,22 +82,27 @@ object Serving {
 
   /** GET /<table>/snapshot/<date> — FOR SYSTEM_TIME AS OF with the
     * reference's input normalization (apiv15.py:136,153: pandas
-    * to_datetime then %Y-%m-%d). Accepts date or timestamp strings,
-    * interpreted in UTC (commit timestamps are epoch millis and the
-    * session timezone is pinned UTC — a JVM-default-zone parse would
-    * make the same call return different snapshots on different hosts).
+    * to_datetime then %Y-%m-%d). Accepts date or timestamp strings; a
+    * timestamp may carry an ISO-8601 offset or `Z`, and without one it
+    * is read in UTC, as is a date (commit timestamps are epoch millis
+    * and the session timezone is pinned UTC — a JVM-default-zone parse
+    * would make the same call return different snapshots on different
+    * hosts).
     */
   def getSnapshot(t: GraftTable, asOf: String): Result = {
-    import java.time.{LocalDate, LocalDateTime, ZoneOffset}
+    import java.time.{LocalDate, LocalDateTime, OffsetDateTime, ZoneOffset}
     val ts =
       try {
-        val s = asOf.trim
-        if (s.contains(":"))
-          LocalDateTime.parse(s.replace(" ", "T"))
-            .toInstant(ZoneOffset.UTC).toEpochMilli
-        else // end of the named day, inclusive
+        val s = asOf.trim.replace(" ", "T")
+        if (!s.contains(":")) // end of the named day, inclusive
           LocalDate.parse(s).plusDays(1).atStartOfDay
             .toInstant(ZoneOffset.UTC).toEpochMilli - 1L
+        // the date's own hyphens end before the `T` at index 10, so a
+        // later `Z`, `+` or `-` starts a zone offset
+        else if (s.lastIndexWhere(c => c == 'Z' || c == '+' || c == '-') > 10)
+          OffsetDateTime.parse(s).toInstant.toEpochMilli
+        else
+          LocalDateTime.parse(s).toInstant(ZoneOffset.UTC).toEpochMilli
       } catch {
         case _: java.time.format.DateTimeParseException =>
           return BadRequest(s"unparseable timestamp '$asOf'")

@@ -57,8 +57,9 @@ object ApiSurface {
       """)),
 
     // S8: the serving edge's JSON row records — every reference endpoint
-    // ends in to_dict(orient="records"); ours is toJSON.collect, and the
-    // record strings themselves are the checked output.
+    // ends in to_dict(orient="records"); ours is a to_json projection
+    // collected from the reading query, and the record strings
+    // themselves are the checked output.
     QueryDef(
       "q67_serving_records",
       (s, d) => {
