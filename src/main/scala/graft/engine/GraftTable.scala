@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.tableformat._
 import graft.tableformat.FileIO.io
+import DeletionVectors.relDataPathStr
 
 /** Spark-native versioned table: the engine facade binding the
   * tableformat metadata layer to SparkSession (SURVEY.md §7 module 2).
@@ -503,15 +504,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     if (files.isEmpty) emptyDf(m).withColumn("_graft_file", lit(""))
     else mappedRead(m, files, Seq(input_file_name().as("_graft_file")))
 
-  /** Location-relative form of a data-file path or URI: everything from
-    * the last "/data/" boundary on. Data and delete files always live
-    * under `<location>/data/<uuid>/…` and Spark percent-escapes '/'
-    * inside partition values, so the last literal "/data/" is the
-    * table's data root — making the result independent of where the
-    * table directory is mounted. Positional delete files store keys in
-    * this form, and BOTH join sides normalize again on read (so
-    * pre-existing absolute keys still match): absolute keys would
-    * silently resurrect MoR-deleted rows if the table directory moved.
+  /** Column twin of [[DeletionVectors.relDataPathStr]]: the
+    * location-relative form of a data-file path or URI, everything from
+    * the last "/data/" boundary on. Positional delete rows are written
+    * with scan-side keys in this form (absolute keys would resurrect
+    * MoR-deleted rows once the table directory moved); the read path
+    * applies those rows as deletion vectors keyed by the same form, and
+    * the remaining joins of scan paths against manifest paths (the
+    * equality-delete sequence lookup, MERGE's touched files, delete-file
+    * compaction) normalize with this.
     */
   private def relDataPath(c: Column): Column =
     // second pass: a path with NO data/ segment (an add_files import)
@@ -521,23 +522,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     regexp_replace(
       regexp_replace(c, "^.*/data/", "data/"),
       "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/{0,2}(?=/)", "")
-
-  /** Driver-side twin of [[relDataPath]] for MANIFEST-recorded paths.
-    * Table-managed files record location-relative `data/...` keys and
-    * pass through unchanged; add_files imports record their original
-    * absolute (scheme-less) path, while delete keys derived from the
-    * scan side carry a `file:///...` URI — so every join between
-    * delete keys and manifest paths must normalize BOTH sides to one
-    * form, or imported files silently stop matching (MoR-deleted rows
-    * resurrect on compaction, merges skip their files, CDC misses
-    * their changes).
-    */
-  private def relDataPathStr(p: String): String = {
-    if (p.startsWith("data/")) return p
-    val i = p.lastIndexOf("/data/")
-    if (i >= 0) p.substring(i + 1)
-    else p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.\\-]*:/{0,2}(?=/)", "")
-  }
 
   /** Every spelling a MANIFEST path can take on the scan side. A
     * `data/...` key has one canonical form; an absolute add_files
@@ -560,18 +544,32 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
   }
 
+  /** Apply POSITIONAL deletes inside the scan: one codegen predicate,
+    * `NOT deleted(_g_path, _g_pos)`, over the tagged rows — no join, no
+    * exchange and no Spark job for the delete side. The positional
+    * delete files are read on the driver when the DataFrame is built
+    * (where a `spark.read.parquet` of them used to resolve and stat the
+    * same files), once per file per JVM, into per-data-file position
+    * bitmaps shipped in one broadcast per delete-file set
+    * ([[DeletionVectors]]). The scan path is normalized with the same
+    * [[DeletionVectors.relDataPathStr]] as the delete keys, so clones,
+    * moved tables and add_files imports match exactly as before.
+    */
   private def applyDeletes(tagged: DataFrame,
       deletes: Vector[DataFileEntry]): DataFrame = {
     val pos = deletes.filter(_.equalityIds.isEmpty) // positional kind only
-    if (pos.isEmpty) return tagged
-    val delDf = spark.read
-      .schema("file_path STRING, pos BIGINT")
-      .parquet(pos.map(f => absPath(f.path)): _*)
-    tagged.join(broadcast(delDf),
-      relDataPath(tagged("_g_path")) === relDataPath(delDf("file_path")) &&
-        tagged("_g_pos") === delDf("pos"),
-      "left_anti")
+    if (pos.isEmpty) tagged else tagged.filter(!deletedBy(pos))
   }
+
+  /** Deletion vectors of the positional delete files `pos`. */
+  private def positionVectors(pos: Vector[DataFileEntry])
+      : org.apache.spark.broadcast.Broadcast[DeletionVectors] =
+    DeletionVectors.broadcastOf(spark.sparkContext,
+      pos.map(f => absPath(f.path)), spark.sessionState.newHadoopConf())
+
+  /** Whether a tagged row (`_g_path`, `_g_pos`) is hidden by `pos`. */
+  private def deletedBy(pos: Vector[DataFileEntry]): Column =
+    DeletionVectors.deleted(col("_g_path"), col("_g_pos"), positionVectors(pos))
 
   /** Apply EQUALITY deletes: hide every data row whose key columns
     * equal a delete row's and whose file was committed STRICTLY before
@@ -650,7 +648,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** Live (delete-applied) tagged rows of `files` under snapshot
     * `snap` — the ONE read every DML/merge/upsert path uses, so no
     * writer can ever resurrect a row hidden by either delete kind.
-    * Only the deletes reaching `files` join in.
+    * Only the deletes reaching `files` apply.
     */
   private def liveRows(m: TableMetadata, snap: Snapshot,
       files: Vector[DataFileEntry]): DataFrame = {
@@ -660,11 +658,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** [[liveRows]] without the provenance columns — and a plain scan,
-    * with no delete read and no anti-join, when no delete of `snap`
+    * with no delete read, filter or join, when no delete of `snap`
     * reaches `files`. Every untagged read of a snapshot goes through
-    * here: positional deletes anti-join by (path, pos), equality
-    * deletes by key value + sequence, both broadcast (delete sides are
-    * small relative to data).
+    * here: positional deletes filter inside the scan by (path, pos)
+    * ([[applyDeletes]]), equality deletes anti-join by key value +
+    * sequence against broadcast delete rows.
     */
   private def liveRead(m: TableMetadata, snap: Snapshot,
       files: Vector[DataFileEntry]): DataFrame =
@@ -1874,7 +1872,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * (reference: TBLPROPERTIES, cell 18): copy-on-write (default)
     * rewrites the touched files; merge-on-read writes positional
     * delete files (`*-deletes.parquet` on disk like the reference's
-    * table3/table2) that readers anti-join.
+    * table3/table2) that readers apply inside the scan.
     *
     * SQL three-valued logic: only rows where cond is TRUE are removed;
     * rows where cond evaluates to NULL survive (plain `!cond` would drop
@@ -2091,10 +2089,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * positional delete file that records the candidates as its targets;
     * UPDATE additionally appends the updated copies. Data files are
     * never rewritten — the write cost is O(matched rows). The read cost
-    * is a broadcast anti-join, paid only by reads whose files the
-    * delete reaches ([[deletesReaching]]), and only until a rewrite
-    * (binpack, copy-on-write DML, `rewriteDeletedDataFiles()`) replaces
-    * the files it targets — that commit drops the delete.
+    * is a deletion-vector filter inside the scan, paid only by reads
+    * whose files the delete reaches ([[deletesReaching]]), and only
+    * until a rewrite (binpack, copy-on-write DML,
+    * `rewriteDeletedDataFiles()`) replaces the files it targets — that
+    * commit drops the delete.
     */
   private def mergeOnReadDml(m: TableMetadata, cond: Column,
       assignments: Option[Map[String, Column]]): GraftTable = {
@@ -2955,7 +2954,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * data file ([[deletesKept]]): a positional delete whose recorded
     * targets were all packed, or an equality delete every carried file
     * sequences after, drops with this commit, so reads of the result
-    * pay no anti-join for it and [[countRows]] answers from the
+    * pay no delete filter for it and [[countRows]] answers from the
     * manifest again. Positional entries written before targets were
     * recorded reach every file and stay until `rewriteDeleteFiles()`
     * drops their dead rows.
@@ -3097,10 +3096,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * touch — the targeted middle ground between [[rewriteDeleteFiles]]
     * (compacts tombstones, data untouched, merge cost remains) and a
     * full [[rewriteDataFiles]] (rewrites everything). Affected files:
-    * positional-tombstone targets (one tombstone-sized scan finds the
-    * distinct paths) plus, when equality deletes exist, every file the
-    * strictly-older sequence rule exposes to them (conservative —
-    * CDC streams compact those with [[rewriteDeleteFiles]] first).
+    * positional-tombstone targets (the keys of the delete files'
+    * cached deletion vectors, no Spark job) plus, when equality
+    * deletes exist, every file the strictly-older sequence rule
+    * exposes to them (conservative — CDC streams compact those with
+    * [[rewriteDeleteFiles]] first).
     * Affected files are rewritten with all deletes applied; untouched
     * files carry over; every delete file drops (no live target can
     * remain). Restores the manifest fast paths ([[countRows]],
@@ -3115,11 +3115,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val eqMaxSeq = snap.deleteFiles.filter(_.equalityIds.nonEmpty)
       .map(_.seq).maxOption
     val posTargets: Set[String] =
-      if (pos.isEmpty) Set.empty
-      else spark.read.schema("file_path STRING, pos BIGINT")
-        .parquet(pos.map(f => absPath(f.path)): _*)
-        .select(relDataPath(col("file_path")).as("p")).distinct()
-        .collect().map(_.getString(0)).toSet // O(#affected files) paths
+      if (pos.isEmpty) Set.empty else positionVectors(pos).value.paths
     val (affected, untouched) = snap.files.partition(f =>
       relDataPathForms(f.path).exists(posTargets) ||
         eqMaxSeq.exists(f.seq < _))
@@ -3143,7 +3139,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *     (file, pos) pairs; the value-keyed files then disappear,
     *     taking their one-read-time-anti-join-per-group with them;
     *   - survivors compact into range-sorted positional files — the
-    *     read path pays ONE broadcast anti-join total afterwards.
+    *     read path then applies them inside the scan as one deletion-
+    *     vector set (no join), with no equality-delete anti-join left.
     *
     * The intended user is a long-running CDC stream
     * ([[upsertEqIfNewMarker]]): until now only a full
@@ -4108,13 +4105,14 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     if (pos.isEmpty)
       return Seq.empty[(String, Long, String, Long)]
         .toDF("file_path", "pos", "delete_file_path", "sequence_number")
-    val seqByPath = pos.map(f => (f.path, f.seq))
-      .toDF("delete_file_path", "sequence_number")
+    // keyed by the location-relative form on both sides: a clone's
+    // inherited delete files are recorded by absolute path
+    val seqByPath = pos.map(f => (relDataPathStr(f.path), f.path, f.seq))
+      .toDF("__del_key", "delete_file_path", "sequence_number")
     spark.read.schema("file_path STRING, pos BIGINT")
       .parquet(pos.map(f => absPath(f.path)): _*)
-      .withColumn("delete_file_path",
-        regexp_replace(col("_metadata.file_path"), "^.*/data/", "data/"))
-      .join(broadcast(seqByPath), "delete_file_path")
+      .withColumn("__del_key", relDataPath(col("_metadata.file_path")))
+      .join(broadcast(seqByPath), "__del_key")
       .select(col("file_path"), col("pos"), col("delete_file_path"),
         col("sequence_number"))
   }
@@ -4381,11 +4379,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *             deleted-within-the-range row correctly nets out;
     *   deletes = rows of FROM's files, visible under FROM's delete
     *             set, hidden by a NEW delete file: positional hits
-    *             come from a semi-join against the new delete rows
-    *             reading ONLY the files those rows reference (the
-    *             referenced-path list is manifest-bounded), equality
-    *             hits from the per-group key semi-join under the seq
-    *             rule, restricted to files old enough to be affected.
+    *             are the rows the new deletes' deletion vectors mark,
+    *             reading ONLY the files those vectors key (no Spark
+    *             job finds them), equality hits come from the
+    *             per-group key semi-join under the seq rule,
+    *             restricted to files old enough to be affected.
     *
     * No exceptAll, no scan of unchanged files — at 100 TB a CDC
     * consumer pays O(delta), not O(table), per poll.
@@ -4402,19 +4400,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val posDeletes: Option[DataFrame] =
       if (newPos.isEmpty) None
       else {
-        val delDf = spark.read.schema("file_path STRING, pos BIGINT")
-          .parquet(newPos.map(f => absPath(f.path)): _*)
-        val refd = delDf.select(relDataPath(col("file_path")).as("p"))
-          .distinct().collect().map(_.getString(0)).toSet
+        val refd = positionVectors(newPos).value.paths
         val files = fromSnap.files.filter(f =>
           relDataPathForms(f.path).exists(refd))
         if (files.isEmpty) None
-        else {
-          val live = liveRows(m, fromSnap, files)
-          Some(live.join(broadcast(delDf),
-            relDataPath(live("_g_path")) === relDataPath(delDf("file_path")) &&
-              live("_g_pos") === delDf("pos"), "left_semi"))
-        }
+        else Some(liveRows(m, fromSnap, files).filter(deletedBy(newPos)))
       }
     val eqDeletes: Option[DataFrame] =
       if (newEq.isEmpty) None

@@ -558,6 +558,12 @@ object Dedup {
     * filters key on batch-derived keys and never on candidate ids.
     * Output-preserving by construction: a history row dropped here
     * joins nothing downstream.
+    *
+    * Building the returned frame runs Spark jobs: the batch-side
+    * shingle index and band relation are materialized by an eager
+    * `localCheckpoint()` inside this call, so constructing or
+    * explaining the result already executes the batch's shingling and
+    * MinHash, before any action on it.
     */
   def nearDupMinhashIncremental(batch: DataFrame, idCol: String,
       textCol: String, histBands: DataFrame, histShingles: DataFrame,
@@ -648,6 +654,12 @@ object Dedup {
     * [[nearDupEmbeddingLsh]]. Pinned in PipelineSpec equal to the full
     * nearDupEmbeddingLsh run restricted to batch-touching pairs.
     * Output: (id1 = batch id, id2 = matched id, sim).
+    *
+    * Building the returned frame runs Spark jobs: the batch-side
+    * bucket relation is materialized by an eager `localCheckpoint()`
+    * inside this call, so constructing or explaining the result
+    * already executes the batch's hyperplane hashing, before any
+    * action on it.
     */
   def nearDupEmbeddingIncremental(batch: DataFrame, idCol: String,
       vecCol: String, histBuckets: DataFrame, histVectors: DataFrame,

@@ -81,12 +81,20 @@ class CatalogServingSpec extends AnyFunSuite {
     assert(j.count() == 2)
   }
 
+  /** `ms` as the `yyyy-MM-dd HH:mm:ss.SSS` literal the SQL rewrite
+    * parses as UTC, whatever the JVM's default zone.
+    */
+  private def utcLiteral(ms: Long): String =
+    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+      .withZone(java.time.ZoneOffset.UTC)
+      .format(java.time.Instant.ofEpochMilli(ms))
+
   test("SQL text: FOR SYSTEM_TIME AS OF resolves a past snapshot") {
     import spark.implicits._
     val cat = freshCat()
     val t = cat.createTable("db", "t", Seq("id" -> "long"))
     t.append(Seq(1L, 2L).toDF("id"))
-    val ts = new java.sql.Timestamp(t.meta.currentSnapshot.get.timestampMs)
+    val ts = utcLiteral(t.meta.currentSnapshot.get.timestampMs)
     Thread.sleep(5)
     t.append(Seq(3L).toDF("id"))
     val got = cat.sql(
@@ -109,7 +117,7 @@ class CatalogServingSpec extends AnyFunSuite {
       .as[Long].collect()
     assert(got.toSeq == Seq(1L), got.mkString(","))
     // lowercase time-travel keywords work like every other SQL surface
-    val ts = new java.sql.Timestamp(t.meta.currentSnapshot.get.timestampMs)
+    val ts = utcLiteral(t.meta.currentSnapshot.get.timestampMs)
     Thread.sleep(5)
     t.append(Seq((3L, "x")).toDF("id", "src"))
     val past = cat.sql(

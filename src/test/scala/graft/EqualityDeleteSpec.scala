@@ -159,12 +159,15 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(snap0.deleteFiles.count(_.equalityIds.isEmpty) >= 1)
     val expect = Seq((1L, "a"), (2L, "b1"), (3L, "c1"), (5L, "e"))
     assert(t.read().orderBy("doc_id").as[(Long, String)].collect().toSeq == expect)
-    // read plan before: anti-joins for 2 eq groups + the positional set
-    // (Catalyst may clone anti-joins through the schema-group Union, so
-    // compare counts rather than pin an absolute node total)
+    // read plan before: anti-joins for the 2 eq groups (Catalyst may
+    // clone anti-joins through the schema-group Union, so compare
+    // counts rather than pin an absolute node total); the positional
+    // set filters inside the scan as deletion vectors, with no join
     val joinsBefore = antiJoins(t.read())
-    assert(joinsBefore >= 3)
-    assert(t.read().queryExecution.executedPlan.toString.contains("_k_"))
+    assert(joinsBefore >= 2)
+    val planBefore = t.read().queryExecution.executedPlan.toString
+    assert(planBefore.contains("_k_"))
+    assert(planBefore.contains(graft.engine.DeletionVectors.PrettyName + "("))
 
     t.rewriteDeleteFiles()
     val snap1 = t.meta.currentSnapshot.get
@@ -174,11 +177,12 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(t.read().orderBy("doc_id").as[(Long, String)].collect().toSeq == expect)
     // the per-group eq anti-joins (and their seq join) are gone: no
     // equality-key or delete-seq attributes remain — only the single
-    // positional delete set is joined (its node may be cloned through
-    // the schema-group Union, so absolute node counts are not pinned)
+    // positional delete set applies, inside the scan, with no join
     val planAfter = t.read().queryExecution.executedPlan.toString
     assert(!planAfter.contains("_k_") && !planAfter.contains("__del_seq"))
     assert(!planAfter.contains("LeftOuter"), "seq-lookup join must be gone")
+    assert(antiJoins(t.read()) == 0)
+    assert(planAfter.contains(graft.engine.DeletionVectors.PrettyName + "("))
     // the compacted rows are exactly the hidden positions: old copies
     // of keys 2 and 3, and the deleted rows 4 and 6
     assert(snap1.deleteFiles.map(_.recordCount).sum == 4)

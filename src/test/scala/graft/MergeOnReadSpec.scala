@@ -400,6 +400,17 @@ class MergeOnReadSpec extends AnyFunSuite {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Positional deletes apply inside the scan: the deletion-vector
+    * predicate is in the plan exactly when a delete reaches the read,
+    * and no read broadcasts anything for them.
+    */
+  private def assertDeletes(df: org.apache.spark.sql.DataFrame,
+      reached: Boolean): Unit = {
+    val p = planOf(df)
+    assert(p.contains(graft.engine.DeletionVectors.PrettyName + "(") == reached, p)
+    assert(!p.contains("BroadcastExchange") && !p.contains("LeftAnti"), p)
+  }
+
   test("a binpack that rewrites every target of a positional delete " +
       "commits no delete file; counts answer from the manifest again") {
     import spark.implicits._
@@ -420,7 +431,7 @@ class MergeOnReadSpec extends AnyFunSuite {
       "every delete target was rewritten: no delete file may be carried")
     assert(t.read().orderBy("id").as[(Long, String, Int)].collect().toSeq ==
       expect)
-    assert(!planOf(t.read()).contains("LeftAnti"))
+    assertDeletes(t.read(), reached = false)
     // manifest-only count: zero Spark jobs
     val (n, jobs) = jobsDuring(t.countRows())
     assert(n == 19L && jobs == 0, s"n=$n jobs=$jobs")
@@ -465,13 +476,12 @@ class MergeOnReadSpec extends AnyFunSuite {
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.select("id").as[Long].collect().sorted.toSeq
     val far = t.readWhere(col("id") >= 12L)
-    assert(!planOf(far).contains("LeftAnti") &&
-      !planOf(far).contains("BroadcastExchange"), planOf(far))
+    assertDeletes(far, reached = false)
     assert(ids(far) == ids(t.read().filter(col("id") >= 12L)))
     assert(ids(far) == (12L to 20L))
     // the reached file still merges
     val near = t.readWhere(col("id") <= 5L)
-    assert(planOf(near).contains("LeftAnti"))
+    assertDeletes(near, reached = true)
     assert(ids(near) == Seq(1L, 2L, 4L, 5L))
     // a later commit adds a file and a delete reaching it; the pruned
     // read of the OLD snapshot applies that snapshot's reach
@@ -481,13 +491,12 @@ class MergeOnReadSpec extends AnyFunSuite {
     val m = t.meta
     val cond = org.apache.spark.sql.graftshim.expressionOf(col("id") >= 12L)
     val old = t.readPrunedIn(m, s1, cond).filter(col("id") >= 12L)
-    assert(!planOf(old).contains("LeftAnti") &&
-      !planOf(old).contains("BroadcastExchange"), planOf(old))
+    assertDeletes(old, reached = false)
     assert(ids(old) ==
       ids(t.readAsOfVersion(s1.snapshotId).filter(col("id") >= 12L)))
     val oldNear = t.readPrunedIn(m, s1,
       org.apache.spark.sql.graftshim.expressionOf(col("id") <= 5L))
-    assert(planOf(oldNear).contains("LeftAnti"))
+    assertDeletes(oldNear, reached = true)
     assert(ids(oldNear.filter(col("id") <= 5L)) == Seq(1L, 2L, 4L, 5L))
     assert(ids(t.read()) == (1L to 30L).filterNot(Set(3L, 25L)))
   }
@@ -543,9 +552,10 @@ class MergeOnReadSpec extends AnyFunSuite {
       assert(!raw.contains("referencedDataFiles"), raw)
     }
     assert(snap.deleteFiles.forall(_.referencedDataFiles.isEmpty))
-    // an unknown delete joins every read, even one pruned away from it
+    // an unknown delete applies to every read, even one pruned away
+    // from it
     val far = t.readWhere(col("id") >= 12L)
-    assert(planOf(far).contains("LeftAnti"))
+    assertDeletes(far, reached = true)
     assert(far.count() == 9L)
     assert(t.read().filter(col("id") === 3L).count() == 0L)
     // and a rewrite of its real target cannot prove it dead while
