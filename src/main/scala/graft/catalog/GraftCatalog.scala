@@ -1,9 +1,7 @@
 package graft.catalog
 
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.engine.GraftTable
 import graft.tableformat.MetadataIO
 
@@ -39,66 +37,24 @@ object Tx {
   * the catalog; same here: db = directory, table = subdirectory with
   * `metadata/version-hint.text`.
   *
-  * SQL-text surface: `sql()` resolves `graft.db.table` identifiers
-  * (optionally suffixed `FOR SYSTEM_TIME AS OF '<ts>'` / `VERSION AS OF
-  * <id>`, the reference's time-travel syntax, apiv15.py:154-157 and
-  * notebook cells 42/45) into registered temp views and delegates to
-  * `spark.sql` — queries, joins, DDL-free SELECTs all work unchanged.
-  * Catalog ops are directory/metadata-only: nothing here reads data
-  * files, so SHOW/DESCRIBE stay O(#tables) at any scale.
+  * This class is the programmatic half: creating databases and tables,
+  * loading [[GraftTable]] handles, and multi-table transactions. All
+  * SQL text — queries, `VERSION AS OF` / `TIMESTAMP AS OF` /
+  * `FOR SYSTEM_TIME AS OF` time travel (the reference's syntax,
+  * apiv15.py:154-157), SHOW, DESCRIBE and DDL — goes through Spark's
+  * own parser via [[GraftExtensions]] and the `graft` catalog plugin
+  * ([[GraftNamespaceCatalog]]), which resolve against the warehouse
+  * this class points the session at.
   */
 final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
 
   // point native SQL resolution (GraftExtensions) at this warehouse;
-  // with several catalogs in one session the most recent wins — the
-  // sql() rewrite below is warehouse-explicit and unaffected
+  // with several catalogs in one session the most recent wins
   spark.conf.set("spark.graft.warehouse", warehouse)
-
-  @volatile private var currentDb: Option[String] = None
-
-  // ---------------------------------------------------------- D1: CREATE DB
 
   def createDatabase(db: String): Unit = {
     require(db.matches("[A-Za-z0-9_]+"), s"bad database name $db")
     Files.createDirectories(Paths.get(warehouse, db))
-  }
-
-  def use(db: String): Unit = {
-    require(Files.isDirectory(Paths.get(warehouse, db)), s"no database $db")
-    currentDb = Some(db)
-  }
-
-  // ------------------------------------------------------------- D7: SHOW
-
-  def listDatabases(): Seq[String] =
-    if (!Files.isDirectory(Paths.get(warehouse))) Nil
-    else {
-      val s = Files.list(Paths.get(warehouse)) // must close: directory fd
-      try s.iterator().asScala
-        .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
-
-  def listTables(db: String): Seq[String] = {
-    val d = Paths.get(warehouse, db)
-    if (!Files.isDirectory(d)) Nil
-    else {
-      val s = Files.list(d) // must close: directory fd
-      try s.iterator().asScala
-        .filter(p => MetadataIO.exists(p.toString))
-        .map(_.getFileName.toString).toSeq.sorted
-      finally s.close()
-    }
-  }
-
-  def showDatabases(): DataFrame = {
-    import spark.implicits._
-    listDatabases().toDF("namespace")
-  }
-
-  def showTables(db: String): DataFrame = {
-    import spark.implicits._
-    listTables(db).map(t => (db, t)).toDF("namespace", "tableName")
   }
 
   // --------------------------------------------------------- table access
@@ -283,132 +239,4 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
       }
     MetadataIO.commitSlots(slots)
   }
-
-  // --------------------------------------------------------- D8: DESCRIBE
-
-  /** DESCRIBE TABLE: column name / type / field-id rows. */
-  def describe(db: String, name: String): DataFrame = {
-    import spark.implicits._
-    table(db, name).meta.currentSchema.fields
-      .map(f => (f.name, f.dataType, f.id)).toDF("col_name", "data_type", "field_id")
-  }
-
-  /** DESCRIBE EXTENDED: schema rows plus metadata section (properties,
-    * partition spec, current snapshot), mirroring the notebook's
-    * DESCRIBE EXTENDED output shape (cells 15/20/69).
-    */
-  def describeExtended(db: String, name: String): DataFrame = {
-    import spark.implicits._
-    val m = table(db, name).meta
-    val schemaRows = m.currentSchema.fields.map(f =>
-      (f.name, f.dataType, s"field-id ${f.id}"))
-    val partRows = m.currentSpec.fields.map(pf =>
-      (s"# Partition ${pf.name}", pf.transform, s"source-id ${pf.sourceId}"))
-    val metaRows = Seq(
-      ("# Metadata", "", ""),
-      ("Name", m.name, ""),
-      ("Location", m.location, ""),
-      ("Format-version", m.formatVersion.toString, ""),
-      ("Current-snapshot", m.currentSnapshotId.map(_.toString).getOrElse("none"), ""),
-      ("Snapshots", m.snapshots.size.toString, "")) ++
-      m.properties.toSeq.sortBy(_._1).map { case (k, v) => (k, v, "property") }
-    (schemaRows ++ partRows ++ metaRows).toDF("col_name", "data_type", "comment")
-  }
-
-  // ------------------------------------------------- SQL-text entry point
-
-  // suffixes are SQL keywords — case-insensitive like every other
-  // SQL surface (the (?i) group applies to the keywords only; table
-  // identifiers stay case-preserving)
-  private val qualified =
-    """graft\.([A-Za-z0-9_]+)\.([A-Za-z0-9_]+)((?i:\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s+)'([^']+)'|(?i:\s+VERSION\s+AS\s+OF\s+)(\d+))?""".r
-
-  // single-quoted SQL string literals ('' = escaped quote): rewriting
-  // must never touch graft.db.t occurrences INSIDE them — a predicate
-  // like src_name = 'graft.db.t' would silently match nothing
-  private val sqlStringLiteral = """'(?:[^']|'')*'""".r
-
-  /** Run SQL text containing `graft.db.table` references (with optional
-    * time-travel suffixes). Each distinct (table, travel) reference is
-    * materialized as ONE temp view — repeated occurrences (e.g. a
-    * qualified column `graft.db.t.c` alongside `FROM graft.db.t`)
-    * rewrite to the same name, so qualifiers keep resolving. The
-    * rewritten text goes to spark.sql so Catalyst handles everything
-    * else (joins, aggregates, windows...). String literals pass
-    * through untouched.
-    */
-  def sql(query: String): DataFrame = spark.sql(rewriteSql(query))
-
-  /** The literal only attaches to the rewrite segment when what
-    * precedes `AS OF` is OUR time-travel form on a graft-qualified
-    * reference — anchoring to the reference pattern keeps every OTHER
-    * `AS OF` literal (e.g. Spark-native `TIMESTAMP AS OF` on a
-    * non-graft table whose timestamp text happens to contain
-    * `graft.db.t`) protected like any ordinary string.
-    */
-  private val graftAsOfPrefix =
-    ("""(?is).*graft\.[A-Za-z0-9_]+\.[A-Za-z0-9_]+""" +
-      """\s+FOR\s+SYSTEM_TIME\s+AS\s+OF\s*$""").r
-
-  /** The text-rewrite half of [[sql]], separated so specs can pin
-    * exactly what is (and is not) rewritten without executing the
-    * result.
-    */
-  private[graft] def rewriteSql(query: String): String = {
-    val views = scala.collection.mutable.Map[String, String]()
-    def rewriteSegment(seg: String): String =
-      qualified.replaceAllIn(seg, m => {
-        val (db, tbl) = (m.group(1), m.group(2))
-        val travel = Option(m.group(3)).getOrElse("")
-        views.getOrElseUpdate(s"$db.$tbl${travel.toUpperCase}", {
-          val t = table(db, tbl)
-          val df = (Option(m.group(4)), Option(m.group(5))) match {
-            case (Some(ts), _) => t.readAsOfTime(parseTs(ts))
-            case (_, Some(v))  => t.readAsOfVersion(v.toLong)
-            // plain reads take the session's transaction view (staged
-            // preview / begin-time pin) like the native-SQL path —
-            // cat.sql() inside an open transaction must not leak live
-            // state past the snapshot-isolation contract
-            case _ =>
-              GraftSqlTransactions.readView(spark, t.location, t.meta) match {
-                case Some(pm) => t.readPreview(pm)
-                case None     => t.read()
-              }
-          }
-          val view = s"graft_${db}_${tbl}_${views.size}"
-          df.createOrReplaceTempView(view)
-          view
-        })
-      })
-    // walk literal and non-literal segments: rewrite only outside
-    // quotes (the time-travel suffix's own quoted timestamp is inside
-    // `qualified` itself, so it still matches when the reference
-    // STARTS outside a literal)
-    val out = new StringBuilder
-    var last = 0
-    for (m <- sqlStringLiteral.findAllMatchIn(query)) {
-      val pre = query.substring(last, m.start)
-      // a literal directly preceded by OUR qualified time-travel form
-      // is its timestamp — keep it attached to the preceding segment
-      // so the qualified regex sees the whole reference
-      if (graftAsOfPrefix.matches(pre)) {
-        out ++= rewriteSegment(query.substring(last, m.end))
-      } else {
-        out ++= rewriteSegment(pre)
-        out ++= m.matched
-      }
-      last = m.end
-    }
-    out ++= rewriteSegment(query.substring(last))
-    out.toString
-  }
-
-  /** Timestamps/dates in SQL text are interpreted in UTC, matching the
-    * pinned session timezone — java.sql.Timestamp.valueOf would use the
-    * JVM default zone and shift results between hosts. One shared
-    * parser ([[GraftSqlTransactions.parseTsUtc]]) keeps every AS OF
-    * surface accepting the same formats.
-    */
-  private def parseTs(s: String): Long =
-    GraftSqlTransactions.parseTsUtc(s)
 }

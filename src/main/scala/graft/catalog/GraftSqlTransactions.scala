@@ -837,9 +837,7 @@ object GraftSqlTransactions {
 
   /** Timestamps/dates in the AS OF clause are interpreted in UTC,
     * matching the pinned session timezone and the engine's other
-    * time-travel surfaces. THE shared parser for every AS OF surface
-    * (cat.sql time travel and the extension path delegate here), so
-    * the accepted formats can never diverge between surfaces.
+    * time-travel surfaces.
     */
   private[catalog] def parseTsUtc(s: String): Long = {
     val t = s.trim

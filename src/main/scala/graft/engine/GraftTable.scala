@@ -523,25 +523,23 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       regexp_replace(c, "^.*/data/", "data/"),
       "^[a-zA-Z][a-zA-Z0-9+.\\-]*:/{0,2}(?=/)", "")
 
-  /** Every spelling a MANIFEST path can take on the scan side. A
-    * `data/...` key has one canonical form; an absolute add_files
-    * import has TWO — the decoded filesystem path the manifest records
-    * and the URI raw-path form `_metadata.file_path` reports (a space
-    * becomes `%20`). Joins between scan-derived delete keys and
-    * manifest paths must accept either, or an import under a
-    * URI-significant character silently stops matching (surfaced by
-    * the import-with-space probe: the read applied the delete, then
-    * compaction resurrected the row).
+  /** Every spelling a MANIFEST path can take on the scan side: the
+    * decoded filesystem path the manifest records, and the URI
+    * raw-path form `_metadata.file_path` reports (Hadoop's
+    * `Path.toUri`: a space becomes `%20`, a `%` becomes `%25`). The two
+    * differ for an add_files import under a URI-significant character
+    * and for a partition directory whose escaped value holds one
+    * (`cat=c%3Ad`). Joins between scan-derived delete keys and
+    * manifest paths must accept either, or such a file silently stops
+    * matching (surfaced by the import-with-space probe: the read
+    * applied the delete, then compaction resurrected the row).
     */
   private def relDataPathForms(p: String): Seq[String] = {
     val base = relDataPathStr(p)
-    if (base.startsWith("data/")) Seq(base)
-    else {
-      val enc =
-        try Paths.get(base).toUri.getRawPath
-        catch { case _: Exception => base }
-      Seq(base, enc).distinct
-    }
+    val enc =
+      try new org.apache.hadoop.fs.Path(base).toUri.getRawPath
+      catch { case _: Exception => base }
+    Seq(base, enc).distinct
   }
 
   /** Apply POSITIONAL deletes inside the scan: one codegen predicate,
@@ -571,20 +569,23 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def deletedBy(pos: Vector[DataFileEntry]): Column =
     DeletionVectors.deleted(col("_g_path"), col("_g_pos"), positionVectors(pos))
 
-  /** Apply EQUALITY deletes: hide every data row whose key columns
-    * equal a delete row's and whose file was committed STRICTLY before
-    * the delete (seq rule — the batch committed with the delete
-    * survives it). Delete-file key columns are stored under field-id
-    * names (`_k_<id>`), so key-column renames can't break the match;
-    * per-file sequences reach the data rows through a tiny broadcast
-    * path→seq lookup. Anti joins broadcast the (small, micro-batch-
-    * sized) delete rows; compaction reclaims them.
+  /** The equality-delete match rule, written once for the read path,
+    * delete-file compaction and the changelog: a row of `tagged` is
+    * hidden by a delete iff its key columns `<=>` the delete's
+    * `_k_<id>` and its file's sequence is STRICTLY below the delete's
+    * (seq rule — the batch committed with the delete survives it).
+    * Delete-file key columns are stored under field-id names, so
+    * key-column renames can't break the match; per-file sequences
+    * reach the rows through a tiny broadcast path→seq lookup over
+    * `files`, and each delete group's (small, micro-batch-sized) rows
+    * are broadcast too. `hidden = false` keeps the surviving rows (one
+    * anti join per group, folded); `hidden = true` returns the hidden
+    * rows (one semi join per group, unioned — a row hidden by two
+    * groups appears twice).
     */
-  private def applyEqDeletes(m: TableMetadata, tagged: DataFrame,
-      files: Vector[DataFileEntry],
-      deletes: Vector[DataFileEntry]): DataFrame = {
-    val eq = deletes.filter(_.equalityIds.nonEmpty)
-    if (eq.isEmpty) return tagged
+  private def matchEqDeletes(m: TableMetadata, tagged: DataFrame,
+      files: Vector[DataFileEntry], eq: Vector[DataFileEntry],
+      hidden: Boolean): DataFrame = {
     Seq("_g_seq", "__sf_path", "__del_seq").foreach(c =>
       require(m.currentSchema.fieldByName(c).isEmpty,
         s"column name $c is reserved by the equality-delete read path"))
@@ -598,22 +599,26 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // its WRITE-TIME key types then cast to the current type — exactly
     // how mappedRead treats data files, so type widening on a key
     // column cannot break existing delete files
-    val applied = eq.groupBy(f => (f.equalityIds, f.schemaId))
-      .foldLeft(withSeq) { case (df, ((ids, schemaId), fs)) =>
-        val (delAll, keyFields) = readEqGroup(m, ids, schemaId, fs)
-        val keysEqual = ids.zip(keyFields).map { case (id, f) =>
-          df(s"`${f.name}`") <=> delAll(s"_k_$id")
-        }.reduce(_ && _)
-        df.join(broadcast(delAll),
-          keysEqual && df("_g_seq") < delAll("__del_seq"), "left_anti")
-      }
-    applied.drop("_g_seq")
+    val groups = eq.groupBy(f => (f.equalityIds, f.schemaId)).toSeq
+    def join(df: DataFrame, how: String)(
+        group: ((Vector[Int], Int), Vector[DataFileEntry])): DataFrame = {
+      val ((ids, schemaId), fs) = group
+      val (delAll, keyFields) = readEqGroup(m, ids, schemaId, fs)
+      val keysEqual = ids.zip(keyFields).map { case (id, f) =>
+        df(s"`${f.name}`") <=> delAll(s"_k_$id")
+      }.reduce(_ && _)
+      df.join(broadcast(delAll),
+        keysEqual && df("_g_seq") < delAll("__del_seq"), how)
+    }
+    val out =
+      if (hidden) groups.map(join(withSeq, "left_semi")).reduce(_ unionByName _)
+      else groups.foldLeft(withSeq)((df, g) => join(df, "left_anti")(g))
+    out.drop("_g_seq")
   }
 
   /** One equality-delete group's rows (`_k_<id>` key columns cast to
-    * the CURRENT key types + `__del_seq`) and the current key fields —
-    * shared by the read path's anti-join and delete-file maintenance's
-    * semi-join.
+    * the CURRENT key types + `__del_seq`) and the current key fields,
+    * for [[matchEqDeletes]].
     */
   private def readEqGroup(m: TableMetadata, ids: Vector[Int],
       schemaId: Int, fs: Vector[DataFileEntry])
@@ -653,8 +658,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def liveRows(m: TableMetadata, snap: Snapshot,
       files: Vector[DataFileEntry]): DataFrame = {
     val dels = deletesReaching(snap, files)
-    applyEqDeletes(m, applyDeletes(readFilesTagged(m, files), dels),
-      files, dels)
+    val eq = dels.filter(_.equalityIds.nonEmpty)
+    val live = applyDeletes(readFilesTagged(m, files), dels)
+    if (eq.isEmpty) live else matchEqDeletes(m, live, files, eq, hidden = false)
   }
 
   /** [[liveRows]] without the provenance columns — and a plain scan,
@@ -676,7 +682,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *     spelling, so clones and rehomed files still match); one with
     *     no recorded targets reaches every file;
     *   - an equality delete reaches a file committed strictly before
-    *     it (the sequence rule [[applyEqDeletes]] evaluates per row).
+    *     it (the sequence rule [[matchEqDeletes]] evaluates per row).
     * Reads apply only these, and every commit that removes data files
     * carries only the deletes reaching its survivors: a delete whose
     * targets were all rewritten away is dead, and dropping it keeps a
@@ -1973,9 +1979,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** Manifest paths of `targets` with a scan-side key inside the
     * positional delete file's `[lo, hi]` bounds, compared in parquet's
     * unsigned UTF-8 byte order. A key is checked in every spelling it
-    * can take in the delete rows — the [[relDataPathForms]] ones plus
-    * the percent-encoded URI path the scan reports — and a target is
-    * dropped only when all of them fall outside. Absent bounds keep
+    * can take in the delete rows ([[relDataPathForms]]), and a target
+    * is dropped only when all of them fall outside. Absent bounds keep
     * every target.
     */
   private def targetsWithin(targets: Vector[DataFileEntry],
@@ -1985,11 +1990,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         def utf8(x: String) = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         val (lb, hb) = (utf8(l), utf8(h))
         targets.map(_.path).filter { p =>
-          val uriForm =
-            try Seq(relDataPathStr(
-              new org.apache.hadoop.fs.Path(absPath(p)).toUri.getRawPath))
-            catch { case _: Exception => Nil }
-          (relDataPathForms(p) ++ uriForm).exists { k =>
+          relDataPathForms(p).exists { k =>
             val kb = utf8(k)
             java.util.Arrays.compareUnsigned(lb, kb) <= 0 &&
               java.util.Arrays.compareUnsigned(kb, hb) <= 0
@@ -3131,8 +3132,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * delete file into minimal POSITIONAL form WITHOUT rewriting any
     * data file.
     *
-    *   - positional delete rows whose target data file left the
-    *     current snapshot are dead — dropped;
+    *   - positional deletes come from the cached deletion vectors
+    *     (no delete-file scan); a key whose data file left the current
+    *     snapshot is a dead pointer — dropped;
     *   - equality deletes are materialized into positions: one scan
     *     restricted to data files old enough to be affected (seq rule)
     *     and column-pruned to the key columns finds the hidden rows'
@@ -3156,51 +3158,37 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val pos = snap.deleteFiles.filter(_.equalityIds.isEmpty)
     val eq = snap.deleteFiles.filter(_.equalityIds.nonEmpty)
 
-    // surviving positional rows: normalize and drop dead pointers with
-    // a semi-join against the live file list (broadcast: the manifest
-    // already lives on the driver, so the path list is driver-scale)
+    // surviving positional rows, straight from the cached deletion
+    // vectors: keep the keys of live data files (a key whose file left
+    // the snapshot is a dead pointer) and expand each key's bitmap to
+    // (file_path, pos) rows inside the tasks, from the same broadcast
     val posRows: Option[DataFrame] =
       if (pos.isEmpty) None
       else {
-        val raw = spark.read.schema("file_path STRING, pos BIGINT")
-          .parquet(pos.map(f => absPath(f.path)): _*)
-          .select(relDataPath(col("file_path")).as("file_path"), col("pos"))
-        val live = spark.createDataFrame(
-          snap.files.flatMap(f => relDataPathForms(f.path)).map(Tuple1(_)))
-          .toDF("__live_path")
-        Some(raw.join(broadcast(live),
-          raw("file_path") === live("__live_path"), "left_semi"))
+        val dv = positionVectors(pos)
+        val live = snap.files.flatMap(f => relDataPathForms(f.path)).toSet
+        val keys = dv.value.paths.filter(live).toSeq
+        if (keys.isEmpty) None
+        else {
+          import spark.implicits._
+          Some(keys.toDS().flatMap { k =>
+            dv.value.positionsOf(org.apache.spark.unsafe.types.UTF8String
+              .fromString(k)).toArray.iterator.map(p => (k, p))
+          }.toDF("file_path", "pos"))
+        }
       }
 
-    // equality deletes → positions: semi-join (vs the read path's
-    // anti-join) over the same per-group delete rows and seq rule
+    // equality deletes → positions: the rows they hide, among data
+    // files old enough to be affected
     val eqRows: Option[DataFrame] =
       if (eq.isEmpty) None
       else {
         val affected = snap.files.filter(_.seq < eq.map(_.seq).max)
         if (affected.isEmpty) None
-        else {
-          val tagged = readFilesTagged(m, affected)
-          val seqDf = spark.createDataFrame(
-            affected.flatMap(f => relDataPathForms(f.path).map(_ -> f.seq)))
-            .toDF("__sf_path", "_g_seq")
-          val withSeq = tagged.join(broadcast(seqDf),
-            relDataPath(tagged("_g_path")) === seqDf("__sf_path"), "left")
-            .drop("__sf_path")
-          eq.groupBy(f => (f.equalityIds, f.schemaId)).toSeq
-            .map { case ((ids, schemaId), fs) =>
-              val (delAll, keyFields) = readEqGroup(m, ids, schemaId, fs)
-              val keysEqual = ids.zip(keyFields).map { case (id, f) =>
-                withSeq(s"`${f.name}`") <=> delAll(s"_k_$id")
-              }.reduce(_ && _)
-              withSeq.join(broadcast(delAll),
-                  keysEqual && withSeq("_g_seq") < delAll("__del_seq"),
-                  "left_semi")
-                .select(relDataPath(col("_g_path")).as("file_path"),
-                  col("_g_pos").as("pos"))
-            }
-            .reduceOption(_ unionByName _)
-        }
+        else Some(matchEqDeletes(m, readFilesTagged(m, affected), affected,
+            eq, hidden = true)
+          .select(relDataPath(col("_g_path")).as("file_path"),
+            col("_g_pos").as("pos")))
       }
 
     val newDeletes: Vector[DataFileEntry] =
@@ -4411,26 +4399,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       else {
         val affected = fromSnap.files.filter(_.seq < newEq.map(_.seq).max)
         if (affected.isEmpty) None
-        else {
-          val live = liveRows(m, fromSnap, affected)
-          val seqDf = spark.createDataFrame(
-            affected.flatMap(f => relDataPathForms(f.path).map(_ -> f.seq)))
-            .toDF("__sf_path", "_g_seq")
-          val withSeq = live.join(broadcast(seqDf),
-            relDataPath(live("_g_path")) === seqDf("__sf_path"), "left")
-            .drop("__sf_path")
-          newEq.groupBy(f => (f.equalityIds, f.schemaId)).toSeq
-            .map { case ((ids, schemaId), fs) =>
-              val (delAll, keyFields) = readEqGroup(m, ids, schemaId, fs)
-              val keysEqual = ids.zip(keyFields).map { case (id, f) =>
-                withSeq(s"`${f.name}`") <=> delAll(s"_k_$id")
-              }.reduce(_ && _)
-              withSeq.join(broadcast(delAll),
-                keysEqual && withSeq("_g_seq") < delAll("__del_seq"),
-                "left_semi")
-            }
-            .reduceOption(_ unionByName _).map(_.drop("_g_seq"))
-        }
+        else Some(matchEqDeletes(m, liveRows(m, fromSnap, affected),
+          affected, newEq, hidden = true))
       }
     // a row hidden by BOTH new delete kinds must surface once: dedupe
     // by physical position before dropping the tags

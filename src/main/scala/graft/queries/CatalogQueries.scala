@@ -100,7 +100,8 @@ object CatalogQueries {
 
   val all: Seq[QueryDef] = Seq(
 
-    // SQL text over registered names, with a join + agg through spark.sql
+    // SQL text over graft.db.t names, with a join + agg through Spark's
+    // own parser and the graft catalog (GraftExtensions)
     QueryDef(
       "q53_catalog_sql",
       (s, d) => {
@@ -112,7 +113,10 @@ object CatalogQueries {
           cat.createTableAs("db1", "nation_t", Tables.nation(s, d))
           w
         }
-        new GraftCatalog(s, wh).sql("""
+        // other queries repoint the session's graft warehouse between
+        // invocations — native resolution follows the conf, so pin it
+        s.conf.set("spark.graft.warehouse", wh)
+        s.sql("""
           SELECT r.r_name, count(*) AS n_nations
           FROM graft.db1.nation_t n
           JOIN graft.db1.region_t r ON n.n_regionkey = r.r_regionkey
@@ -157,7 +161,7 @@ object CatalogQueries {
       """))
   ) ++ Seq(
 
-    // SQL-text time travel: VERSION AS OF through the catalog
+    // SQL-text time travel: native VERSION AS OF on a graft table
     QueryDef(
       "q54_catalog_time_travel_sql",
       (s, d) => {
@@ -172,7 +176,8 @@ object CatalogQueries {
           t.append(sup.filter(col("s_suppkey") > 50))
           (w, java.lang.Long.valueOf(v0))
         }
-        new GraftCatalog(s, wh).sql(s"""
+        s.conf.set("spark.graft.warehouse", wh)
+        s.sql(s"""
           SELECT s_suppkey, s_name
           FROM graft.db1.supp_t VERSION AS OF ${v.longValue()}
           ORDER BY s_suppkey""")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.api.{ColumnResolver, Serving}
 import graft.catalog.GraftCatalog
 
-/** Catalog namespaces/SQL-text + serving-edge endpoints, replaying the
+/** Serving-edge endpoints over catalog tables, replaying the
   * reference's employee golden history (FIXTURES A2: create -> insert
   * -> rename Phone -> queries by old name keep working).
   */
@@ -28,126 +28,6 @@ class CatalogServingSpec extends AnyFunSuite {
       .toDF("Index", "First Name", "Phone"))
     t.renameColumn("Phone", "Phone number")
     t
-  }
-
-  test("D1/D7: databases and tables are listable") {
-    val cat = freshCat()
-    cat.createDatabase("a_db")
-    cat.createDatabase("b_db")
-    cat.createTable("a_db", "t1", Seq("id" -> "long"))
-    cat.createTable("a_db", "t2", Seq("id" -> "long"))
-    assert(cat.listDatabases() == Seq("a_db", "b_db"))
-    assert(cat.listTables("a_db") == Seq("t1", "t2"))
-    assert(cat.showDatabases().columns.toSeq == Seq("namespace"))
-    assert(cat.showTables("a_db").count() == 2)
-    cat.use("a_db")
-  }
-
-  test("D8: describe and describe extended") {
-    val cat = freshCat()
-    employeeTable(cat)
-    val desc = cat.describe("employee_db", "employee").collect()
-    assert(desc.map(_.getString(0)).toSeq ==
-      Seq("Index", "First Name", "Phone number"))
-    val ext = cat.describeExtended("employee_db", "employee")
-      .collect().map(_.getString(0))
-    assert(ext.contains("Format-version"))
-    assert(ext.contains("write.parquet.compression-codec"))
-  }
-
-  test("SQL text: quoted idents and historical reads via catalog") {
-    val cat = freshCat()
-    employeeTable(cat)
-    val rows = cat.sql(
-      "SELECT `Phone number` FROM graft.employee_db.employee ORDER BY `Phone number`")
-      .collect().map(_.getString(0))
-    assert(rows.toSeq == Seq("555-1", "555-2"))
-  }
-
-  test("SQL text: repeated and qualified references resolve to one view") {
-    val cat = freshCat()
-    employeeTable(cat)
-    // the qualified column reference must rewrite to the SAME view name
-    // as the FROM-clause reference
-    val n = cat.sql(
-      """SELECT graft.employee_db.employee.Index
-        |FROM graft.employee_db.employee
-        |WHERE graft.employee_db.employee.Index > 0""".stripMargin).count()
-    assert(n == 2)
-    // self-join: both occurrences share the view, aliases disambiguate
-    val j = cat.sql(
-      """SELECT a.Index FROM graft.employee_db.employee a
-        |JOIN graft.employee_db.employee b ON a.Index = b.Index""".stripMargin)
-    assert(j.count() == 2)
-  }
-
-  /** `ms` as the `yyyy-MM-dd HH:mm:ss.SSS` literal the SQL rewrite
-    * parses as UTC, whatever the JVM's default zone.
-    */
-  private def utcLiteral(ms: Long): String =
-    java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
-      .withZone(java.time.ZoneOffset.UTC)
-      .format(java.time.Instant.ofEpochMilli(ms))
-
-  test("SQL text: FOR SYSTEM_TIME AS OF resolves a past snapshot") {
-    import spark.implicits._
-    val cat = freshCat()
-    val t = cat.createTable("db", "t", Seq("id" -> "long"))
-    t.append(Seq(1L, 2L).toDF("id"))
-    val ts = utcLiteral(t.meta.currentSnapshot.get.timestampMs)
-    Thread.sleep(5)
-    t.append(Seq(3L).toDF("id"))
-    val got = cat.sql(
-      s"SELECT id FROM graft.db.t FOR SYSTEM_TIME AS OF '$ts' ORDER BY id")
-      .as[Long].collect()
-    assert(got.toSeq == Seq(1L, 2L))
-    assert(cat.sql("SELECT id FROM graft.db.t ORDER BY id").count() == 3)
-  }
-
-  test("SQL text: string literals never rewrite; time-travel keywords " +
-      "are case-insensitive") {
-    import spark.implicits._
-    val cat = freshCat()
-    val t = cat.createTable("db", "lit", Seq("id" -> "long", "src" -> "string"))
-    t.append(Seq((1L, "graft.db.lit"), (2L, "other")).toDF("id", "src"))
-    // the literal on the right of the predicate names the table — it
-    // must pass through verbatim, not rewrite into the temp-view name
-    val got = cat.sql(
-      "SELECT id FROM graft.db.lit WHERE src = 'graft.db.lit'")
-      .as[Long].collect()
-    assert(got.toSeq == Seq(1L), got.mkString(","))
-    // lowercase time-travel keywords work like every other SQL surface
-    val ts = utcLiteral(t.meta.currentSnapshot.get.timestampMs)
-    Thread.sleep(5)
-    t.append(Seq((3L, "x")).toDF("id", "src"))
-    val past = cat.sql(
-      s"select id from graft.db.lit for system_time as of '$ts' order by id")
-      .as[Long].collect()
-    assert(past.toSeq == Seq(1L, 2L))
-    val v1 = t.meta.snapshots.head.snapshotId
-    assert(cat.sql(s"select count(*) as n from graft.db.lit version as of $v1")
-      .head().getLong(0) == 2L)
-  }
-
-  test("AS OF attachment anchors to OUR qualified form: a foreign " +
-      "'TIMESTAMP AS OF' literal containing a graft name passes through") {
-    import spark.implicits._
-    val cat = freshCat()
-    val t = cat.createTable("db", "asof_t", Seq("id" -> "long"))
-    t.append(Seq(1L).toDF("id"))
-    // Spark-native time travel on some OTHER table whose timestamp
-    // literal happens to contain graft.db.t-shaped text: the literal
-    // must stay a literal (it used to attach to the rewrite segment
-    // and get its insides rewritten into a temp-view reference)
-    val foreign = cat.rewriteSql(
-      "SELECT * FROM delta_tbl TIMESTAMP AS OF 'graft.db.asof_t'")
-    assert(foreign.contains("'graft.db.asof_t'"), foreign)
-    // our own qualified form still attaches its timestamp and rewrites
-    val ts = new java.sql.Timestamp(t.meta.currentSnapshot.get.timestampMs)
-    val ours = cat.rewriteSql(
-      s"SELECT * FROM graft.db.asof_t FOR SYSTEM_TIME AS OF '$ts'")
-    assert(!ours.contains("graft.db.asof_t"), ours)
-    assert(ours.contains("graft_db_asof_t_0"), ours)
   }
 
   test("serving: getColumn fast path, history slow path, 404s") {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.{DeletionVectors, GraftTable}
-import graft.tableformat.{MetadataIO, Snapshot}
+import graft.tableformat.{DataFileEntry, MetadataIO, Snapshot}
 
 /** Positional deletes applied inside the scan as deletion vectors are
   * differential-tested against the anti-join they replaced: raw data
@@ -83,18 +83,44 @@ class DeletionVectorSpec extends AnyFunSuite {
     t
   }
 
-  /** Rewrite the current snapshot's delete entries in place, as an
-    * older or foreign writer could have left them.
+  /** Rewrite the current snapshot's delete entries (and, with `files`,
+    * its data entries) in place, as an older or foreign writer could
+    * have left them.
     */
-  private def editCurrentDeletes(t: GraftTable)(
-      f: Vector[graft.tableformat.DataFileEntry] => Vector[graft.tableformat.DataFileEntry]): Unit =
+  private def editCurrentDeletes(t: GraftTable,
+      files: Vector[DataFileEntry] => Vector[DataFileEntry] = identity)(
+      f: Vector[DataFileEntry] => Vector[DataFileEntry]): Unit =
     MetadataIO.commitRetry(t.location) { cur =>
       cur.copy(snapshots = cur.snapshots.map { s =>
         if (!cur.currentSnapshotId.contains(s.snapshotId)) s
-        else s.copy(inlineFiles = s.files,
+        else s.copy(inlineFiles = files(s.files),
           inlineDeleteFiles = f(s.deleteFiles), manifestList = None)
       })
     }
+
+  /** Delete-file compaction, checked differentially: `rewriteDeleteFiles`
+    * keeps every row the same; then the data file named `dead` leaves
+    * the snapshot with delete rows still naming it, and compaction
+    * drops exactly those dead pointers.
+    */
+  private def assertCompacts(t: GraftTable, where: Column,
+      dead: String): Unit = {
+    val before = rows(t.read())
+    t.rewriteDeleteFiles()
+    assertSameAsAntiJoin(t, where)
+    assert(rows(t.read()) == before)
+    def keys() = t.positionDeletesDf.select("file_path").collect()
+      .map(_.getString(0)).toSeq
+    val all = keys()
+    val deadRows = all.count(_.endsWith(dead))
+    assert(deadRows > 0 && deadRows < all.size, all)
+    editCurrentDeletes(t, _.filterNot(_.path.endsWith(dead)))(identity)
+    t.rewriteDeleteFiles()
+    assertSameAsAntiJoin(t, where)
+    val kept = keys()
+    assert(kept.size == all.size - deadRows && !kept.exists(_.endsWith(dead)),
+      kept)
+  }
 
   test("double deletes of one row, then MoR DELETE, UPDATE and MERGE " +
       "over rows already deleted") {
@@ -163,13 +189,17 @@ class DeletionVectorSpec extends AnyFunSuite {
     Seq(0L until 10L, 10L until 20L).foreach(r =>
       r.map(i => (i, s"n$i", i.toInt)).toDF("id", "name", "age")
         .coalesce(1).write.mode("append").parquet(ext))
-    val t = GraftTable.create(spark, tmp() + "/t", "dv_import",
-      Seq("id" -> "long", "name" -> "string", "age" -> "int"),
-      properties = Map("write.delete.mode" -> "merge-on-read",
-        "write.update.mode" -> "merge-on-read"))
-    t.addFiles(ext)
-    t.delete(col("id") === 3L || col("id") === 14L)
-    t.update(col("id") === 5L, Map("age" -> lit(500)))
+    def imported(name: String): GraftTable = {
+      val t = GraftTable.create(spark, tmp() + "/t", name,
+        Seq("id" -> "long", "name" -> "string", "age" -> "int"),
+        properties = Map("write.delete.mode" -> "merge-on-read",
+          "write.update.mode" -> "merge-on-read"))
+      t.addFiles(ext)
+      t.delete(col("id") === 3L || col("id") === 14L)
+      t.update(col("id") === 5L, Map("age" -> lit(500)))
+      t
+    }
+    val t = imported("dv_import")
     assertSameAsAntiJoin(t, col("id") >= 10L)
     assert(t.read().count() == 18L)
     // the targets from the deletion vectors find the import in its
@@ -178,22 +208,76 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(t.meta.currentSnapshot.get.deleteFiles.isEmpty)
     assert(t.read().count() == 18L)
     assert(t.read().filter(col("id").isin(3L, 14L)).count() == 0L)
+    // delete-file compaction keeps the rows; dropping the import file
+    // of id 14 leaves its delete row as a dead pointer
+    val second = spark.read.parquet(ext).filter(col("id") === 14L)
+      .select(input_file_name()).as[String].head()
+    assertCompacts(imported("dv_import_compact"), col("id") >= 10L,
+      second.substring(second.lastIndexOf('/') + 1))
+  }
+
+  /** Ids 0-2, 10-12, 20-22, 30-32 (`v` = "old") in one file per
+    * identity partition `"a b"`, `"c:d"`, `"e%f"`, `"plain"`: the first
+    * three directory names differ between the manifest path and the
+    * scan's URI path.
+    */
+  private def encodedTable(name: String,
+      properties: Map[String, String]): GraftTable = {
+    import spark.implicits._
+    val t = GraftTable.create(spark, tmp(), name,
+      Seq("id" -> "long", "cat" -> "string", "v" -> "string"),
+      partition = Seq("cat" -> "identity"), properties = properties)
+    t.append(Seq("a b", "c:d", "e%f", "plain").zipWithIndex.flatMap {
+      case (c, i) => (0L until 3L).map(k => (i * 10L + k, c, "old")) }
+      .toDF("id", "cat", "v").coalesce(1))
+    t
   }
 
   test("percent-encoded identity partition paths") {
-    import spark.implicits._
-    val t = GraftTable.create(spark, tmp(), "dv_enc",
-      Seq("id" -> "long", "cat" -> "string"),
-      partition = Seq("cat" -> "identity"),
-      properties = Map("write.delete.mode" -> "merge-on-read"))
-    val cats = Seq("a b", "c:d", "e%f", "plain")
-    t.append(cats.zipWithIndex.flatMap { case (c, i) =>
-      (0L until 3L).map(k => (i * 10L + k, c)) }.toDF("id", "cat")
-      .coalesce(1))
-    cats.indices.foreach(i => t.delete(col("id") === i * 10L + 1L))
+    val t = encodedTable("dv_enc", Map("write.delete.mode" -> "merge-on-read"))
+    val appended = t.meta.currentSnapshotId.get
+    (0 until 4).foreach(i => t.delete(col("id") === i * 10L + 1L))
     assertSameAsAntiJoin(t, col("cat") === "c:d")
     assert(t.read().count() == 8L)
-    cats.foreach(c => assert(t.readWhere(col("cat") === c).count() == 2L, c))
+    Seq("a b", "c:d", "e%f", "plain").foreach(c =>
+      assert(t.readWhere(col("cat") === c).count() == 2L, c))
+    // the changelog finds the file behind every delete key
+    assert(t.changelog(Some(appended), t.meta.currentSnapshotId.get)
+      .filter(col("_change_type") === "delete").select("id").collect()
+      .map(_.getLong(0)).sorted.toSeq == Seq(1L, 11L, 21L, 31L))
+    // every partition's file has the same name: keep the directory
+    val plain = t.meta.currentSnapshot.get.files.map(_.path)
+      .find(_.contains("cat=plain")).get
+    assertCompacts(t, col("cat") === "c:d",
+      plain.split('/').takeRight(2).mkString("/"))
+    assert(t.read().count() == 6L)
+    // so does the targeted data rewrite
+    val before = rows(t.read())
+    t.rewriteDeletedDataFiles()
+    assert(t.meta.currentSnapshot.get.deleteFiles.isEmpty)
+    assert(rows(t.read()) == before)
+  }
+
+  test("percent-encoded identity partition paths under an equality " +
+      "upsert and a copy-on-write MERGE") {
+    import spark.implicits._
+    import graft.engine.MergeUpdateClause
+    val keys = Seq(1L, 11L, 21L)
+    def values(t: GraftTable) = t.read().filter(col("id").isin(keys: _*))
+      .select("id", "v").as[(Long, String)].collect().toSeq.sorted
+    // the upsert's sequence lookup reaches rows in every partition
+    val eq = encodedTable("dv_enc_eq", Map.empty)
+    eq.upsertEqIfNewMarker(Seq((1L, "a b", "new"), (11L, "c:d", "new"),
+      (21L, "e%f", "new")).toDF("id", "cat", "v"), Seq("id"), "m", 0L)
+    assert(values(eq) == keys.map(_ -> "new"))
+    assert(eq.read().count() == 12L)
+    // MERGE rewrites the files its matches touch in every partition
+    val cow = encodedTable("dv_enc_merge", Map.empty)
+    cow.merge(keys.map(_ -> "x").toDF("sid", "sv"), col("id") === col("sid"),
+      matched = Seq(MergeUpdateClause(None, Map("v" -> col("sv")))),
+      notMatched = Nil)
+    assert(values(cow) == keys.map(_ -> "x"))
+    assert(cow.read().count() == 12L)
   }
 
   test("a legacy positional delete with no recorded targets") {

@@ -37,6 +37,19 @@ class NativeSqlSpec extends AnyFunSuite {
       GROUP BY p.name ORDER BY p.name""").collect()
       .map(r => (r.getString(0), r.getLong(1)))
     assert(got.toSeq == Seq(("ann", 2L), ("bo", 1L)))
+    // a string literal that names the table stays a literal
+    val t3 = cat.createTable("db", "lit", Seq("id" -> "long", "src" -> "string"))
+    t3.append(Seq((1L, "graft.db.lit"), (2L, "other")).toDF("id", "src"))
+    assert(spark.sql("SELECT id FROM graft.db.lit WHERE src = 'graft.db.lit'")
+      .as[Long].collect().toSeq == Seq(1L))
+    // self-join: two references to one table, aliases disambiguate
+    assert(spark.sql("""
+      SELECT a.id FROM graft.db.people a
+      JOIN graft.db.people b ON a.id = b.id""").count() == 2)
+    // a column qualified by the full three-part table name
+    assert(spark.sql("""
+      SELECT graft.db.people.id FROM graft.db.people
+      WHERE graft.db.people.id > 1""").as[Long].collect().toSeq == Seq(2L))
   }
 
   test("native VERSION AS OF and TIMESTAMP AS OF time travel") {
@@ -55,6 +68,13 @@ class NativeSqlSpec extends AnyFunSuite {
     assert(spark.sql(
       s"SELECT id FROM graft.db.v TIMESTAMP AS OF '$ts' ORDER BY id")
       .as[Long].collect().toSeq == Seq(1L, 2L))
+    // the reference's FOR SYSTEM_TIME AS OF spelling, and lowercase
+    // keywords, parse to the same time travel
+    for (q <- Seq(
+        s"SELECT id FROM graft.db.v FOR SYSTEM_TIME AS OF '$ts' ORDER BY id",
+        s"select id from graft.db.v for system_time as of '$ts' order by id",
+        s"select id from graft.db.v version as of ${snap.snapshotId} order by id"))
+      assert(spark.sql(q).as[Long].collect().toSeq == Seq(1L, 2L), q)
     assert(spark.sql("SELECT count(*) FROM graft.db.v").head().getLong(0) == 3L)
   }
 
@@ -131,6 +151,10 @@ class NativeSqlSpec extends AnyFunSuite {
     val desc = spark.sql("DESCRIBE TABLE graft.ddl.emp").collect()
       .map(_.getString(0))
     assert(desc.contains("id") && desc.contains("added_at"))
+    // DESCRIBE EXTENDED lists the table properties, defaults included
+    val ext = spark.sql("DESCRIBE TABLE EXTENDED graft.ddl.emp").collect()
+      .map(r => s"${r.getString(0)} ${r.getString(1)}").mkString("\n")
+    assert(ext.contains("write.parquet.compression-codec"), ext)
     // ALTER: rename + add + drop through Spark's DDL
     spark.sql("ALTER TABLE graft.ddl.emp RENAME COLUMN name TO full_name")
     spark.sql("ALTER TABLE graft.ddl.emp ADD COLUMN age INT")
@@ -1412,10 +1436,6 @@ class NativeSqlSpec extends AnyFunSuite {
     // filtered reads take the same pin (the Filter-case swap path)
     assert(spark.sql("SELECT count(*) FROM graft.db.si WHERE id >= 3")
       .head().getLong(0) == 0)
-    // the API-level cat.sql() text-rewrite path takes the same pin —
-    // no surface may leak live state past the transaction view
-    assert(cat.sql("SELECT count(*) AS n FROM graft.db.si")
-      .head().getLong(0) == 2)
     // explicit time travel names its own snapshot — it overrides
     val vNew = t.meta.currentSnapshot.get.snapshotId
     assert(spark.sql(

@@ -29,6 +29,35 @@ class PipelineSpec extends AnyFunSuite {
         greatest(lit(1), floor(size(toks) * lit(0.8)).cast("int")))).as("text")))
   }
 
+  /** `build()` twice with the incremental operators' touched-slice gate
+    * (`Dedup.atScale`) forced, shut then open, on the `history`
+    * relations. The gate fires once a relation's estimated bytes span
+    * the cores at maxPartitionBytes, and decides while the DataFrame is
+    * built, so that conf is set only around `build()`: 1 TB shuts it; a
+    * quarter of the smallest history's bytes per core opens it (any
+    * eager batch job then runs at that split size, still a handful of
+    * splits per file at these sizes). The conf is restored before
+    * either frame plans or runs. Asserts that only the open build
+    * carries the broadcast-semi pre-filter (more LeftSemi joins); the
+    * caller compares both frames' rows with its own run.
+    */
+  private def gateShutAndOpen(history: DataFrame*)(
+      build: () => DataFrame): Seq[DataFrame] = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val openBytes = history.map(_.queryExecution.optimizedPlan.stats.sizeInBytes)
+      .min / (4 * spark.sparkContext.defaultParallelism)
+    val before = spark.conf.getOption(key)
+    val Seq(shut, open) = Seq(BigInt(1L << 40), openBytes.max(1)).map { b =>
+      spark.conf.set(key, b.toString)
+      try build()
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    def semis(d: DataFrame) =
+      "LeftSemi".r.findAllMatchIn(d.queryExecution.optimizedPlan.toString).size
+    assert(semis(open) > semis(shut), open.queryExecution.optimizedPlan)
+    Seq(shut, open)
+  }
+
   test("exact dedup groups identical content, keeps min id") {
     import spark.implicits._
     val df = Seq((1L, "a b c"), (2L, "a b c"), (3L, "x y"), (4L, "x y"),
@@ -888,10 +917,13 @@ class PipelineSpec extends AnyFunSuite {
       .select(md5(col("text")).as("fp"))
     val batch = Seq((10L, "old text"), (11L, "fresh a"), (12L, "fresh a"),
       (13L, "fresh b")).toDF("doc_id", "text")
-    val out = Dedup.exactIncremental(batch, "doc_id", "text", seen, "fp")
+    val run = () => Dedup.exactIncremental(batch, "doc_id", "text", seen, "fp")
+    val out = run()
     val kept = out.select("doc_id").as[Long].collect().toSet
     assert(kept === Set(11L, 13L),
       "history dupes and in-batch later copies must drop")
+    gateShutAndOpen(seen)(run).foreach(df =>
+      assert(df.select("doc_id").as[Long].collect().toSet === kept))
     // feeding the emitted fps back makes a replay of the SAME batch empty
     val seen2 = seen.unionByName(out.select("fp"))
     assert(Dedup.exactIncremental(batch, "doc_id", "text", seen2, "fp")
@@ -910,11 +942,14 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val full = norm(Dedup.nearDupMinhashLsh(all, "doc_id", "text")
       .filter(col("id1") >= 100000 || col("id2") >= 100000))
-    val inc = norm(Dedup.nearDupMinhashIncremental(batch, "doc_id", "text",
-      Dedup.bandIndex(hist, "doc_id", "text"),
-      Dedup.shingleIndex(hist, "doc_id", "text")))
+    val (bands, shingles) = (Dedup.bandIndex(hist, "doc_id", "text"),
+      Dedup.shingleIndex(hist, "doc_id", "text"))
+    val run = () =>
+      Dedup.nearDupMinhashIncremental(batch, "doc_id", "text", bands, shingles)
+    val inc = norm(run())
     assert(inc === full,
       s"incremental minus full: ${inc -- full}; full minus incremental: ${full -- inc}")
+    gateShutAndOpen(bands, shingles)(run).foreach(df => assert(norm(df) === inc))
     assert(full.nonEmpty, "fixture must actually produce cross pairs")
   }
 
@@ -987,12 +1022,14 @@ class PipelineSpec extends AnyFunSuite {
     val full = norm(Dedup.nearDupEmbeddingLsh(emb, "vec_id", "embedding",
         threshold = 0.4)
       .filter(col("id1") % 2 =!= 0 || col("id2") % 2 =!= 0))
-    val inc = norm(Dedup.nearDupEmbeddingIncremental(batch, "vec_id",
-      "embedding",
-      Dedup.embeddingBucketIndex(hist, "vec_id", "embedding"),
-      Dedup.vectorIndex(hist, "vec_id", "embedding"), threshold = 0.4))
+    val buckets = Dedup.embeddingBucketIndex(hist, "vec_id", "embedding")
+    val run = () => Dedup.nearDupEmbeddingIncremental(batch, "vec_id",
+      "embedding", buckets, Dedup.vectorIndex(hist, "vec_id", "embedding"),
+      threshold = 0.4)
+    val inc = norm(run())
     assert(inc === full,
       s"inc-only: ${inc -- full}; full-only: ${full -- inc}")
+    gateShutAndOpen(buckets)(run).foreach(df => assert(norm(df) === inc))
     assert(full.nonEmpty, "fixture must produce batch-touching pairs")
   }
 
@@ -1212,11 +1249,13 @@ class PipelineSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2),
         r.getLong(3))).toSet
-    val inc = rows(Dedup.dedupSpansIncremental(batch, "doc_id", "text", idx))
+    val run = () => Dedup.dedupSpansIncremental(batch, "doc_id", "text", idx)
+    val inc = rows(run())
     // exactness: full run over history ∪ batch, restricted to batch ids
     val full = rows(Dedup.dedupSpans(hist.unionByName(batch),
       "doc_id", "text").filter(col("doc_id") >= 10L))
     assert(inc == full, s"inc=$inc\nfull=$full")
+    gateShutAndOpen(idx)(run).foreach(df => assert(rows(df) == inc))
     // the history-held gram cut doc 10's copy (13 tokens)
     assert(inc.find(_._1 == 10L).get._4 == 13L)
     assert(inc.find(_._1 == 11L).get._4 == 0L)
