@@ -20,7 +20,7 @@ object Tx {
       set: Map[String, org.apache.spark.sql.Column]) extends TxOp
   /** The CDC-upsert shape: MERGE the batch into the fact AND append
     * its index rows in one claim set ([[graft.engine.GraftTable.merge]]
-    * semantics, copy-on-write targets only).
+    * semantics, on copy-on-write and merge-on-read targets).
     */
   final case class Merge(table: GraftTable,
       source: org.apache.spark.sql.DataFrame,

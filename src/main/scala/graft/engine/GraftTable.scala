@@ -1264,36 +1264,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       assignments: Option[Map[String, Column]], op: String,
       revalidate: Boolean): (TableMetadata, Long) => TableMetadata = {
     val baseId = m.currentSnapshotId
-    val staged: Option[(Vector[DataFileEntry], Vector[DataFileEntry])] =
-      m.currentSnapshot.flatMap { snap =>
-        val (pruneCond, extras) =
-          SubqueryPruning.augmentSplit(spark, exprOf(cond))
-        val candidates = pruneCandidates(m, snap.files, pruneCond)
-        GraftTable.lastDmlCandidateFiles.set(candidates.size.toLong)
-        if (candidates.isEmpty) None
-        else {
-          // existing deletes apply first — an already-deleted row must
-          // not be re-deleted or re-updated (row resurrection); the
-          // evaluated domains re-apply as data filters (applyResidual)
-          val live = applyResidual(m, liveRows(m, snap, candidates), extras)
-          val matched = live.filter(cond).cache()
-          try {
-            val delRows = matched.select(
-              relDataPath(col("_g_path")).as("file_path"),
-              col("_g_pos").as("pos"))
-            if (delRows.isEmpty) None
-            else {
-              val delEntries = writeDeleteFile(m, delRows, candidates)
-              val written = assignments match {
-                case None => Vector.empty[DataFileEntry]
-                case Some(as) => writeFiles(m, applyAssignments(
-                  matched.drop("_g_path", "_g_pos"), None, as))
-              }
-              Some((delEntries, written))
-            }
-          } finally matched.unpersist()
-        }
-      }
+    val staged = m.currentSnapshot.flatMap(morDmlFiles(m, _, cond, assignments))
     (cur: TableMetadata, sharedTs: Long) => {
       if (revalidate && cur.currentSnapshotId != baseId)
         throw new ConcurrentCommitException(
@@ -1827,11 +1798,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
                 "left_semi")
               .select(relDataPath(col("_g_path")).as("file_path"),
                 col("_g_pos").as("pos"))
-              .persist() // consumed twice: emptiness gate + the write
-            try {
-              if (doomed.isEmpty) Vector.empty
-              else writeDeleteFile(m, doomed, bounded)
-            } finally doomed.unpersist()
+            // no replaced row: the write leaves nothing behind
+            writeDeleteFile(m, doomed, bounded)
           }
         }
       } finally keyDf.unpersist()
@@ -1953,7 +1921,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * driver); each positional entry records those whose scan-side key
     * lies inside its own `file_path` footer bounds, so reads and
     * rewrites can tell which files it reaches ([[deletesReaching]])
-    * without opening it.
+    * without opening it. When the footers hold no row at all, the
+    * written directory is removed and no entry returns.
     */
   private def writeDeleteFile(m: TableMetadata, delRows: DataFrame,
       targets: Vector[DataFileEntry],
@@ -1963,7 +1932,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val delAbs = s"$location/$delRel"
     delRows.write.mode("errorifexists").option("compression", codec)
       .parquet(delAbs)
-    listParquet(delAbs).map { abs =>
+    val entries = listParquet(delAbs).map { abs =>
       val rel = s"$delRel/${abs.stripPrefix(delAbs + "/")}"
       val footer = readFooter(abs)
       DataFileEntry(rel, footer.rowCount, m.currentSchemaId,
@@ -1974,6 +1943,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           else targetsWithin(targets, footer.lower.get("file_path"),
             footer.upper.get("file_path")))
     }
+    if (entries.exists(_.recordCount > 0)) entries
+    else { io.deleteTree(delAbs); Vector.empty }
   }
 
   /** Manifest paths of `targets` with a scan-side key inside the
@@ -2043,9 +2014,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // keys cast to the TABLE'S types (writeFiles casts the data rows the
     // same way — a long-typed batch against an int column must not
     // commit an unreadable INT64 delete file); no delete file at all
-    // when there are no older rows to hide or the batch is empty
+    // when there are no older rows to hide, or (left by the write) when
+    // the batch is empty
     val delEntries: Vector[DataFileEntry] =
-      if (files0.isEmpty || df.isEmpty) Vector.empty
+      if (files0.isEmpty) Vector.empty
       else writeDeleteFile(m,
         df.select(keyCols.zip(fields).map { case (k, f) =>
           col(s"`$k`").cast(f.sparkType).as(s"_k_${f.id}")
@@ -2099,35 +2071,47 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def mergeOnReadDml(m: TableMetadata, cond: Column,
       assignments: Option[Map[String, Column]]): GraftTable = {
     val snap = m.currentSnapshot.getOrElse(return this)
+    morDmlFiles(m, snap, cond, assignments).foreach { case (dels, written) =>
+      commitSnapshot(m, if (assignments.isEmpty) "delete" else "overwrite",
+        snap.files ++ written, snap.deleteFiles ++ dels)
+    }
+    this
+  }
+
+  /** The files one merge-on-read DELETE/UPDATE writes against `snap`:
+    * the positional delete file and, for UPDATE, the appended copies.
+    * The delete file is written straight away; when it holds no row,
+    * nothing is left on disk and the result is None (no match commits
+    * nothing), so emptiness costs no Spark job of its own.
+    */
+  private def morDmlFiles(m: TableMetadata, snap: Snapshot, cond: Column,
+      assignments: Option[Map[String, Column]])
+      : Option[(Vector[DataFileEntry], Vector[DataFileEntry])] = {
     val (pruneCond, extras) =
       SubqueryPruning.augmentSplit(spark, exprOf(cond))
     val candidates = pruneCandidates(m, snap.files, pruneCond)
     GraftTable.lastDmlCandidateFiles.set(candidates.size.toLong)
-    if (candidates.isEmpty) return this
+    if (candidates.isEmpty) return None
     // existing deletes must apply first: an already-deleted row must not
     // be re-deleted (harmless) or re-updated (row resurrection!);
     // evaluated domains re-apply as data filters (row-group skipping
     // inside kept candidates — see applyResidual)
     val live = applyResidual(m, liveRows(m, snap, candidates), extras)
-    val matched = live.filter(cond).cache()
+      .filter(cond)
+    // UPDATE reads the matched rows twice (positions, then copies)
+    val matched = if (assignments.isEmpty) live else live.cache()
     try {
-      val delRows = matched.select(
+      val delEntries = writeDeleteFile(m, matched.select(
         relDataPath(col("_g_path")).as("file_path"),
-        col("_g_pos").as("pos"))
-      if (delRows.isEmpty) return this
-      val delEntries = writeDeleteFile(m, delRows, candidates)
-      val (dataFiles, op) = assignments match {
-        case None => (snap.files, "delete")
-        case Some(as) =>
-          // rows are already cond-filtered; assignments still evaluate
-          // simultaneously against the original row (see applyAssignments)
-          val updated = applyAssignments(
-            matched.drop("_g_path", "_g_pos"), None, as)
-          (snap.files ++ writeFiles(m, updated), "overwrite")
-      }
-      commitSnapshot(m, op, dataFiles, snap.deleteFiles ++ delEntries)
-      this
-    } finally matched.unpersist()
+        col("_g_pos").as("pos")), candidates)
+      if (delEntries.isEmpty) None
+      else Some((delEntries, assignments.map(as =>
+        // rows are already cond-filtered; assignments still evaluate
+        // simultaneously against the original row (see applyAssignments)
+        writeFiles(m, applyAssignments(
+          matched.drop("_g_path", "_g_pos"), None, as)))
+        .getOrElse(Vector.empty)))
+    } finally if (assignments.nonEmpty) matched.unpersist()
   }
 
   // ------------------------------------------------------------ MERGE INTO
@@ -2150,13 +2134,22 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *     clauses see TARGET columns only; matched clauses see both
     *     (qualify with `targetAlias` / the source's alias on collision).
     *
-    * Scale design: copy-on-write rewrites ONLY files containing matched
-    * rows — found with one join that aggregates just row ids (the
-    * source is joined, never collected; AQE broadcasts a small source) —
-    * unless not-matched-by-source clauses force a whole-table pass by
-    * definition. Merge-on-read writes positional deletes for changed
+    * Scale design: the source meets the live target ONCE. After
+    * source-key file pruning, one tagged join (right outer when
+    * inserts need unmatched source rows; full outer when
+    * copy-on-write needs its survivors or not-matched-by-source
+    * clauses need every file's unmatched rows) carries each row's
+    * side flags and winning clause index, and is materialized once.
+    * One action over it tallies, per data file, the matched pairs and
+    * distinct matched rows (the cardinality gate), hence the touched
+    * files, plus how many rows the writes will hold; nothing is
+    * written before it passes. Every write is a projection of the
+    * same frame: copy-on-write rewrites ONLY the touched files
+    * (survivors, updated copies and inserts in one write), unless
+    * not-matched-by-source clauses force a whole-table pass by
+    * definition; merge-on-read writes positional deletes for changed
     * rows and appends updated copies + inserts, never rewriting data
-    * files. Inserts come from one anti join against the live target.
+    * files. The source is joined, never collected.
     */
   def merge(source: DataFrame, on: Column,
       matched: Seq[MergeMatchedClause],
@@ -2167,18 +2160,19 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       targetAlias, base = None, staging = false, revalidate = true)
       .swap.getOrElse(this)
 
-  /** Staged COPY-ON-WRITE MERGE — the transactional form of [[merge]]:
-    * the whole merge is PLANNED AND WRITTEN now (matched-file
-    * discovery, cardinality gate, survivor rewrite + inserts — data
-    * files on disk, invisible until referenced) and the returned
-    * transform publishes the snapshot inside a multi-table claim set
+  /** Staged MERGE — the transactional form of [[merge]]: the same
+    * single pass (one tagged join, one tally for the cardinality
+    * gate and touched files, then the writes: copy-on-write's survivor
+    * rewrite + inserts, or merge-on-read's positional delete file +
+    * appended rows) runs NOW, leaving data files on disk, invisible
+    * until referenced; the returned transform publishes the snapshot
+    * inside a multi-table claim set
     * ([[graft.catalog.GraftCatalog.transactOps]] /
     * `BEGIN TRANSACTION ... COMMIT`), so the CDC-upsert-plus-index
     * shape commits atomically. Same conflict contract as
     * [[stageDelete]]: the transform re-validates the base snapshot at
-    * claim time and aborts loudly on a racing commit. Merge-on-read
-    * targets stage their positional delete file + appended copies the
-    * same way (see [[stageMorDml]]'s contract).
+    * claim time and aborts loudly on a racing commit (a merge-on-read
+    * delete file names the base's positions, see [[stageMorDml]]).
     */
   private[graft] def stageMerge(source: DataFrame, on: Column,
       matched: Seq[MergeMatchedClause],
@@ -2202,24 +2196,34 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       "MERGE requires at least one WHEN clause")
     val m = base.getOrElse(meta)
     val mergeBaseId = m.currentSnapshotId
-    // staged no-op merges still commit an unchanged-files snapshot so
-    // every table in a transaction gets exactly one snapshot with the
-    // shared timestamp (stageRewrite's no-match convention)
-    def aligned: Either[GraftTable, (TableMetadata, Long) => TableMetadata] =
-      if (!staging) Left(this)
-      else Right((curM: TableMetadata, sharedTs: Long) => {
+    def filesOf(t: TableMetadata) = t.currentSnapshot.map(_.files).getOrElse(Vector.empty)
+    def delsOf(t: TableMetadata) = t.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
+    // commit the (data files, delete files) `next` derives from the
+    // metadata it commits on — now, or, staged, inside the
+    // transaction's claim set, where any concurrent commit aborts it
+    // (the rewritten files and delete positions are the base's)
+    type Next = TableMetadata => (Vector[DataFileEntry], Vector[DataFileEntry])
+    def publish(next: Next): Either[GraftTable, (TableMetadata, Long) => TableMetadata] =
+      if (!staging) {
+        val (fs, ds) = next(m)
+        commitSnapshot(m, "overwrite", fs, ds)
+        Left(this)
+      } else Right((curM: TableMetadata, sharedTs: Long) => {
         if (revalidate && curM.currentSnapshotId != mergeBaseId)
           throw new ConcurrentCommitException(
             s"concurrent commit: snapshot advanced from $mergeBaseId to " +
               s"${curM.currentSnapshotId} during staged MERGE of $location — " +
               "re-run the transaction")
-        withSnapshot(curM, "overwrite",
-          curM.currentSnapshot.map(_.files).getOrElse(Vector.empty),
-          curM.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty),
-          tsHint = Some(sharedTs))
+        val (fs, ds) = next(curM)
+        withSnapshot(curM, "overwrite", fs, ds, tsHint = Some(sharedTs))
       })
+    // a merge that changes nothing commits nothing; a STAGED one still
+    // commits an unchanged-files snapshot so every table in a
+    // transaction gets exactly one snapshot with the shared timestamp
+    // (stageRewrite's no-match convention)
+    def noop = if (staging) publish(t => (filesOf(t), delsOf(t))) else Left(this)
     val cur = m.currentSchema
-    Seq("_g_path", "_g_pos", "__graft_action").foreach(c =>
+    Seq("_g_path", "_g_pos", "__graft_action", "__graft_src").foreach(c =>
       require(!source.columns.contains(c),
         s"merge source may not contain reserved column $c"))
 
@@ -2259,228 +2263,159 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         (cond, as.map { case (k, v) => resolveKey(k) -> v })
       case MergeInsertAllClause(cond) => (cond, starAssignments)
     }
+    val (nM, nN) = (mClauses.size, nmsClauses.size)
 
-    val files0 = m.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-    val dels0 = m.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-    def aliased(df: DataFrame): DataFrame =
-      targetAlias.map(df.alias).getOrElse(df)
-    def liveOf(fs: Vector[DataFileEntry]): DataFrame =
-      // only called with files of the current snapshot; the empty-table
-      // path reads an empty tagged frame with no deletes to apply
-      m.currentSnapshot.map(sn => liveRows(m, sn, fs))
-        .getOrElse(readFilesTagged(m, fs))
-
+    val files0 = filesOf(m)
     // ---- source-key file pruning: the CDC upsert at 100 TB must not
     // scan the fact to find its files. NOT MATCHED BY SOURCE forces
     // every-file reads (any file may hold unmatched target rows);
-    // otherwise matched-row discovery, the cardinality gate, and the
-    // insert anti-join only ever need files that COULD hold a source
-    // key — a pruned file's rows can never satisfy the ON
-    // equi-conjunct, so they can neither match nor block an insert.
+    // otherwise matches, the cardinality gate and inserts only ever
+    // need files that COULD hold a source key — a pruned file's rows
+    // can never satisfy the ON equi-conjunct, so they can neither
+    // match nor block an insert.
     val candFiles: Vector[DataFileEntry] =
-      if (nmsClauses.nonEmpty) files0
+      if (nN > 0) files0
       else mergeSourceCandidates(m, files0, source, on, targetAlias)
     GraftTable.lastMergeCandidateFiles.set(candFiles.size.toLong)
-    lazy val liveCand = aliased(liveOf(candFiles))
 
-    // first clause whose condition is TRUE wins; -1 = no clause applies
-    def actionIdx(cs: Seq[(Option[Column], Any)]): Column =
-      cs.zipWithIndex.foldRight(lit(-1)) { case (((cond, _), i), els) =>
-        when(cond.getOrElse(lit(true)), lit(i)).otherwise(els)
+    // ---- ONE tagged join of the live target slice with the source.
+    // Target rows no source row matches are needed only by NOT MATCHED
+    // BY SOURCE and by copy-on-write's survivor rewrite; source rows
+    // nothing matches only by inserts. The empty-table path joins an
+    // empty tagged frame.
+    val morMode = mergeMode(m) == "merge-on-read"
+    val needRewrite = (nM > 0 || nN > 0) && files0.nonEmpty
+    val tgt = {
+      val fs = if (nN > 0) files0 else candFiles
+      val df = m.currentSnapshot.map(sn => liveRows(m, sn, fs))
+        .getOrElse(readFilesTagged(m, fs))
+      targetAlias.map(df.alias).getOrElse(df)
+    }
+    val how =
+      if (nN > 0 || (needRewrite && !morMode)) "full_outer"
+      else if (insClauses.nonEmpty) "right_outer"
+      else "inner"
+    val inT = col("_g_pos").isNotNull
+    val inS = col("__graft_src").isNotNull
+    // first clause whose condition is TRUE wins, numbered across the
+    // matched, not-matched-by-source and insert lists; -1 = none
+    def firstTrue(cs: Seq[Option[Column]], from: Int): Column =
+      cs.zipWithIndex.foldRight(lit(-1)) { case ((c, i), els) =>
+        when(c.getOrElse(lit(true)), lit(from + i)).otherwise(els)
       }
+    val tagged = tgt.join(source.withColumn("__graft_src", lit(true)), on, how)
+      .withColumn("__graft_action",
+        when(inT && inS, firstTrue(mClauses.map(_._1), 0))
+          .when(inT, firstTrue(nmsClauses.map(_._1), nM))
+          .otherwise(firstTrue(insClauses.map(_._1), nM + nN)))
+    // materialized once, by the tally's job: the writes read these
+    // rows back instead of joining again
+    val rows = tagged.queryExecution.toRdd.map(_.copy())
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val frame = org.apache.spark.sql.graftshim.dfOverRows(tagged, rows)
+    val rewrites = mClauses ++ nmsClauses
+    def actionIn(ix: Seq[Int]): Column =
+      if (ix.isEmpty) lit(false) else col("__graft_action").isin(ix.map(Int.box): _*)
+    val deletes = actionIn(rewrites.zipWithIndex.collect { case ((_, None), i) => i })
+    val updates = actionIn(rewrites.zipWithIndex.collect { case ((_, Some(_)), i) => i })
+    val inserts = actionIn(insClauses.indices.map(_ + nM + nN))
+    // rows to write: the winning update / insert clause's assignments;
+    // every other column passes the target row through (all NULL on a
+    // source-only row, so an insert's unassigned columns are NULL)
+    val assigned = rewrites.zipWithIndex.collect { case ((_, Some(as)), i) => i -> as } ++
+      insClauses.zipWithIndex.map { case ((_, as), i) => (nM + nN + i) -> as }
+    def rowsOf(df: DataFrame): DataFrame = df.select(cur.fields.map { f =>
+      assigned.foldRight(tgt(s"`${f.name}`")) { case ((i, as), els) =>
+        as.get(f.name).fold(els)(v => when(col("__graft_action") === i, v).otherwise(els))
+      }.cast(f.sparkType).as(f.name)
+    }: _*)
 
-    // project a row carrying __graft_action to the schema: the winning
-    // update clause's assignments apply, everything else passes through
-    // from the ORIGINAL row (`t` = the tagged target handle)
-    def selectUpdated(dfWithIdx: DataFrame,
-        cs: Seq[(Option[Column], Option[Map[String, Column]])],
-        t: DataFrame): DataFrame = {
-      val updates = cs.zipWithIndex.collect { case ((_, Some(as)), i) => (i, as) }
-      dfWithIdx.select(cur.fields.map { f =>
-        val orig: Column = t(s"`${f.name}`")
-        updates.foldRight(orig) { case ((i, as), els) =>
-          as.get(f.name) match {
-            case Some(v) => when(col("__graft_action") === i, v).otherwise(els)
-            case None    => els
-          }
-        }.cast(f.sparkType).as(f.name)
-      }: _*)
-    }
-
-    def applyMatched(df: DataFrame,
-        cs: Seq[(Option[Column], Option[Map[String, Column]])],
-        t: DataFrame): DataFrame = {
-      val withIdx = df.withColumn("__graft_action", actionIdx(cs))
-      val deletes = cs.zipWithIndex.collect { case ((_, None), i) => i }
-      val kept =
-        if (deletes.isEmpty) withIdx
-        else withIdx.filter(!col("__graft_action").isin(deletes.map(Int.box): _*))
-      selectUpdated(kept, cs, t)
-    }
-
-    def buildInserts(srcRows: DataFrame): DataFrame = {
-      val withIdx = srcRows.withColumn("__graft_action", actionIdx(insClauses))
-        .filter(col("__graft_action") >= 0)
-      withIdx.select(cur.fields.map { f =>
-        insClauses.zipWithIndex.foldRight(lit(null): Column) {
-          case (((_, as), i), els) => as.get(f.name) match {
-            case Some(v) => when(col("__graft_action") === i, v).otherwise(els)
-            case None    => els
-          }
-        }.cast(f.sparkType).as(f.name)
-      }: _*)
-    }
-
-    lazy val liveAll = aliased(liveOf(files0))
-    val needRewrite = (mClauses.nonEmpty || nmsClauses.nonEmpty) && files0.nonEmpty
-
-    // matched-row id aggregation: the ISO cardinality gate, and the
-    // touched-file set that keeps copy-on-write at file granularity —
-    // the probe join reads only the source-key candidates (matches
-    // cannot exist outside them)
-    var touched = Vector.empty[DataFileEntry]
-    if (needRewrite) {
-      if (mClauses.nonEmpty) {
-        val byRow = liveCand.join(source, on, "inner")
-          .groupBy(col("_g_path"), col("_g_pos"))
-          .agg(count(lit(1)).as("__graft_n"))
-          .persist()
-        try {
-          require(byRow.filter(col("__graft_n") > 1).isEmpty,
-            "MERGE cardinality violation: a target row matched more than one source row")
-          val paths = byRow.select(relDataPath(col("_g_path")).as("p"))
-            .distinct().collect().map(_.getString(0)).toSet
-          touched =
-            if (nmsClauses.nonEmpty) files0 // every file may hold unmatched rows
-            else candFiles.filter(f =>
-              relDataPathForms(f.path).exists(paths))
-        } finally byRow.unpersist()
-      } else touched = files0
-    }
-
-    val inserted: Option[DataFrame] =
-      if (insClauses.isEmpty) None
-      else Some(buildInserts(source.join(liveCand, on, "left_anti")))
-
-    if (mergeMode(m) == "merge-on-read" && needRewrite && touched.nonEmpty) {
-      // -------- merge-on-read: positional deletes + appended copies
-      def morPart(rows: DataFrame,
-          cs: Seq[(Option[Column], Option[Map[String, Column]])],
-          t: DataFrame): (DataFrame, Option[DataFrame]) = {
-        val withIdx = rows.withColumn("__graft_action", actionIdx(cs))
-          .filter(col("__graft_action") >= 0)
-        val delRows = withIdx.select(
-          relDataPath(t("_g_path")).as("file_path"), t("_g_pos").as("pos"))
-        val updated =
-          if (cs.forall(_._2.isEmpty)) None // delete-only clause list
-          else {
-            val up = cs.zipWithIndex.collect { case ((_, Some(_)), i) => Int.box(i) }
-            Some(selectUpdated(
-              withIdx.filter(col("__graft_action").isin(up: _*)), cs, t))
-          }
-        (delRows, updated)
-      }
-      val liveT = aliased(liveOf(touched))
-      val matchedPart =
-        if (mClauses.isEmpty) None
-        else Some(morPart(liveT.join(source, on, "inner"), mClauses, liveT))
-      val nmsPart =
-        if (nmsClauses.isEmpty) None
-        else Some(morPart(liveAll.join(source, on, "left_anti"), nmsClauses, liveAll))
-      val delRows = Seq(matchedPart, nmsPart).flatten.map(_._1)
-        .reduce(_ unionByName _).persist()
-      try {
-        val newData = (Seq(matchedPart, nmsPart).flatten.flatMap(_._2) ++ inserted)
-          .reduceOption(_ unionByName _)
-        if (delRows.isEmpty && newData.forall(_.isEmpty))
-          return (if (staging) aligned else Left(this))
-        val delEntries =
-          if (delRows.isEmpty) Vector.empty[DataFileEntry]
-          else writeDeleteFile(m, delRows, touched)
-        val written = newData.map(d => writeFiles(m, d)).getOrElse(Vector.empty)
-        if (staging)
-          // staged merge-on-read merge: delete file + appended copies
-          // written above; publish in the transaction's claim set with
-          // the same any-concurrent-commit-aborts contract as
-          // stageMorDml (the delete file names base-file positions)
-          return Right((curM: TableMetadata, sharedTs: Long) => {
-            if (revalidate && curM.currentSnapshotId != mergeBaseId)
-              throw new ConcurrentCommitException(
-                s"concurrent commit: snapshot advanced from $mergeBaseId " +
-                  s"to ${curM.currentSnapshotId} during staged MERGE of " +
-                  s"$location — re-run the transaction")
-            withSnapshot(curM, "overwrite",
-              curM.currentSnapshot.map(_.files).getOrElse(Vector.empty) ++
-                written,
-              curM.currentSnapshot.map(_.deleteFiles)
-                .getOrElse(Vector.empty) ++ delEntries,
-              tsHint = Some(sharedTs))
-          })
-        commitSnapshot(m, "overwrite", files0 ++ written, dels0 ++ delEntries)
-      } finally delRows.unpersist()
-      Left(this)
-    } else {
-      // -------- copy-on-write (also the empty-table / insert-only path)
-      val survivors: Option[DataFrame] =
-        if (!needRewrite || touched.isEmpty) None
-        else {
-          val liveT = aliased(liveOf(touched))
-          val matchedPart =
-            if (mClauses.isEmpty)
-              // no matched clauses: matched rows pass through unchanged;
-              // semi join keeps exactly one copy per target row
-              liveT.join(source, on, "left_semi")
-                .select(cur.fields.map(f => liveT(s"`${f.name}`")): _*)
-            else applyMatched(liveT.join(source, on, "inner"), mClauses, liveT)
-          val unmatchedPart = {
-            val um = liveT.join(source, on, "left_anti")
-            if (nmsClauses.isEmpty)
-              um.select(cur.fields.map(f => liveT(s"`${f.name}`")): _*)
-            else applyMatched(um, nmsClauses, liveT)
-          }
-          Some(matchedPart.unionByName(unmatchedPart))
-        }
-      val newRows = (survivors, inserted) match {
-        case (Some(a), Some(b)) => Some(a.unionByName(b))
-        case (a, b)             => a.orElse(b)
-      }
-      newRows match {
-        case None => aligned
-        case Some(rows) =>
-          // pure-insert merges skip the commit when nothing inserts
-          // (matching DELETE/UPDATE's no-match convention); a STAGED
-          // one still aligns timestamps
-          if (survivors.isEmpty && rows.isEmpty) aligned
-          else {
-            // set-keyed by path: Vector.contains inside a per-file
-            // filter is O(F·T) — quadratic when NOT MATCHED BY SOURCE
-            // touches every file of a million-file table
-            val touchedPaths = touched.iterator.map(_.path).toSet
-            if (staging) {
-              // write now (invisible until referenced); publish inside
-              // the transaction's one claim set
-              val written = writeFiles(m, rows)
-              Right((curM: TableMetadata, sharedTs: Long) => {
-                if (revalidate && curM.currentSnapshotId != mergeBaseId)
-                  throw new ConcurrentCommitException(
-                    s"concurrent commit: snapshot advanced from " +
-                      s"$mergeBaseId to ${curM.currentSnapshotId} during " +
-                      s"staged MERGE of $location — re-run the transaction")
-                val curFiles =
-                  curM.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-                val untouched = curFiles.filterNot(f => touchedPaths(f.path))
-                withSnapshot(curM, "overwrite", untouched ++ written,
-                  deletesKept(curM, untouched), tsHint = Some(sharedTs))
-              })
-            } else {
-              val untouchedF = files0.filterNot(f => touchedPaths(f.path))
-              commitSnapshot(m, "overwrite", untouchedF ++ writeFiles(m, rows),
-                deletesKept(m, untouchedF))
-              Left(this)
+    try {
+      // ONE action over the frame, which also computes and keeps its
+      // rows: the tasks tally their rows per scan path (None:
+      // source-only rows), and the collected tallies are added up —
+      // no exchange, so no stage of its own. The ISO cardinality gate
+      // counts every matched pair, whatever the clause conditions.
+      val stats = frame.select(col("_g_path"), col("_g_pos"), inT && inS,
+          deletes || updates, updates || inserts)
+        .queryExecution.toRdd.mapPartitions { it =>
+          val byPath = scala.collection.mutable.HashMap
+            .empty[Option[String], GraftTable.MergeFileStats]
+          // a task's rows come file by file: look the path up only
+          // when it changes
+          var path: org.apache.spark.unsafe.types.UTF8String = null
+          var s: GraftTable.MergeFileStats = null
+          it.foreach { r =>
+            val p = if (r.isNullAt(0)) null else r.getUTF8String(0)
+            if (s == null || p != path) {
+              path = if (p == null) null else p.clone()
+              s = byPath.getOrElseUpdate(Option(path).map(_.toString),
+                new GraftTable.MergeFileStats)
             }
+            if (r.getBoolean(2)) { s.pairs += 1; s.rows.addLong(r.getLong(1)) }
+            if (r.getBoolean(3)) s.changed += 1
+            if (r.getBoolean(4)) s.appended += 1
           }
+          byPath.iterator
+        }
+        .collect().groupMapReduce(_._1)(_._2)(_ add _)
+      val perFile = stats.collect { case (Some(p), s) => p -> s }
+      require(nM == 0 || perFile.values.forall(s => s.pairs == s.rows.getLongCardinality),
+        "MERGE cardinality violation: a target row matched more than one source row")
+      val changed = stats.values.map(_.changed).sum
+      val appended = stats.values.map(_.appended).sum
+      // the files a merge rewrites (copy-on-write) or its delete file
+      // targets: those holding a matched row — every file under NOT
+      // MATCHED BY SOURCE, where any file may hold unmatched rows
+      val matchedPaths = perFile.collect { case (p, s) if s.pairs > 0 => p }.toSeq
+      val touched =
+        if (!needRewrite) Vector.empty[DataFileEntry]
+        else if (nN > 0) files0
+        else {
+          val rel = matchedPaths.map(relDataPathStr).toSet
+          candFiles.filter(f => relDataPathForms(f.path).exists(rel))
+        }
+
+      if (morMode && needRewrite) {
+        // -------- merge-on-read: positional deletes + appended rows
+        if (changed == 0 && appended == 0) noop
+        else {
+          val delEntries =
+            if (changed == 0) Vector.empty[DataFileEntry]
+            else writeDeleteFile(m, frame.filter(deletes || updates).select(
+              relDataPath(col("_g_path")).as("file_path"),
+              col("_g_pos").as("pos")), touched)
+          val written =
+            if (appended == 0) Vector.empty[DataFileEntry]
+            else writeFiles(m, rowsOf(frame.filter(updates || inserts)))
+          publish(t => (filesOf(t) ++ written, delsOf(t) ++ delEntries))
+        }
+      } else if (touched.isEmpty && appended == 0) noop
+      else {
+        // -------- copy-on-write (also the empty-table / insert-only
+        // path): touched files are rewritten whole — survivors, updated
+        // copies and inserts in one write
+        val newRows =
+          if (touched.isEmpty) frame.filter(inserts)
+          else {
+            val kept = frame.filter(inT && !deletes &&
+              (if (nN > 0) lit(true) else col("_g_path").isin(matchedPaths: _*)))
+            // with no matched clause a target row that several source
+            // rows match passes through, and is kept once
+            (if (nM == 0) kept.dropDuplicates("_g_path", "_g_pos") else kept)
+              .union(frame.filter(inserts))
+          }
+        val written = writeFiles(m, rowsOf(newRows))
+        // set-keyed by path: Vector.contains inside a per-file filter
+        // is O(F·T) — quadratic when NOT MATCHED BY SOURCE touches
+        // every file of a million-file table
+        val touchedPaths = touched.iterator.map(_.path).toSet
+        publish { t =>
+          val untouched = filesOf(t).filterNot(f => touchedPaths(f.path))
+          (untouched ++ written, deletesKept(t, untouched))
+        }
       }
-    }
+    } finally rows.unpersist()
   }
 
   /** Source-key file pruning for [[merge]]: evaluate the SOURCE's
@@ -2491,8 +2426,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * bucket(N, key) fact keeps only the batch's buckets, a
     * key-clustered fact only the overlapping ranges. Inclusive
     * pruning keeps every file that could hold a matching key, so the
-    * caller's discovery join / cardinality gate / anti-join results
-    * are value-identical on the kept slice. Bails to the full list
+    * caller's tagged join (matches, cardinality gate, inserts) is
+    * value-identical on the kept slice. Bails to the full list
     * (never wrong, just unpruned) when: pruning is disabled; the
     * source plan is nondeterministic (its key domain could differ
     * between this evaluation and the join's own — rather refuse than
@@ -3195,22 +3130,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       (posRows.toSeq ++ eqRows.toSeq).reduceOption(_ unionByName _) match {
         case None => Vector.empty
         case Some(rows0) =>
-          // distinct: a row hidden by BOTH kinds must land once
+          // distinct: a row hidden by BOTH kinds must land once; read
+          // twice, by the range bounds' sample and by the write
           val rows = rows0.distinct().persist()
           try {
-            if (rows.isEmpty) Vector.empty
-            else {
-              // delete rows at 100 TB can be billions — never force one
-              // file; range-partition by (file, pos) so each output file
-              // covers a contiguous, well-compressed slice (explicit
-              // targetFiles pins the layout, else AQE sizes the shuffle)
-              val keys = Seq(col("file_path"), col("pos"))
-              val ranged =
-                if (targetFiles > 0) rows.repartitionByRange(targetFiles, keys: _*)
-                else rows.repartitionByRange(keys: _*)
-              writeDeleteFile(m, ranged.sortWithinPartitions(keys: _*),
-                snap.files)
-            }
+            // delete rows at 100 TB can be billions — never force one
+            // file; range-partition by (file, pos) so each output file
+            // covers a contiguous, well-compressed slice (explicit
+            // targetFiles pins the layout, else AQE sizes the shuffle).
+            // No surviving row: the write leaves nothing behind
+            val keys = Seq(col("file_path"), col("pos"))
+            val ranged =
+              if (targetFiles > 0) rows.repartitionByRange(targetFiles, keys: _*)
+              else rows.repartitionByRange(keys: _*)
+            writeDeleteFile(m, ranged.sortWithinPartitions(keys: _*),
+              snap.files)
           } finally rows.unpersist()
       }
     try commitSnapshot(m, "replace", snap.files, newDeletes)
@@ -4495,6 +4429,24 @@ object GraftTable {
     */
   private[graft] val lastDmlCandidateFiles =
     new java.util.concurrent.atomic.AtomicLong(-1L)
+
+  /** One data file's tallies in a MERGE's tagged join: matched
+    * (target, source) pairs and the distinct target positions among
+    * them, the target rows a clause changes and the rows the data
+    * write appends. Each task tallies its rows; the collected
+    * tallies are added up.
+    */
+  private[engine] final class MergeFileStats extends Serializable {
+    var pairs = 0L
+    val rows = new org.roaringbitmap.longlong.Roaring64Bitmap
+    var changed = 0L
+    var appended = 0L
+    def add(o: MergeFileStats): MergeFileStats = {
+      pairs += o.pairs; rows.or(o.rows)
+      changed += o.changed; appended += o.appended
+      this
+    }
+  }
 
   /** Provenance tag on an engine read's analyzed plan root:
     * (table, metadata, snapshot, pruning condition already applied).

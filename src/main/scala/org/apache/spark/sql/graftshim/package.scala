@@ -23,6 +23,19 @@ package object graftshim {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df`'s rows, already computed as `rows`, as a DataFrame with
+    * `df`'s own output attributes (Dataset.checkpoint's construction,
+    * without truncating the lineage): a column resolved against `df`
+    * or its inputs still resolves, and a plan over it reads `rows`
+    * instead of running `df` again.
+    */
+  def dfOverRows(df: DataFrame,
+      rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]): DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession,
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(rows, ds, ds.isStreaming))
+  }
+
   /** Batch DataFrame -> streaming-marked DataFrame. DSv1 streaming
     * Sources must return micro-batches whose plan has isStreaming=true
     * (MicroBatchExecution asserts it); Spark's own FileStreamSource

@@ -384,17 +384,67 @@ class MergeOnReadSpec extends AnyFunSuite {
     t
   }
 
+  /** `body`'s result and the Spark jobs it started, with the listener
+    * bus drained before and after so the count is exact.
+    */
   private def jobsDuring[A](body: => A): (A, Int) = {
     val n = new java.util.concurrent.atomic.AtomicInteger
-    val attachedAt = System.currentTimeMillis()
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (j.time >= attachedAt) n.incrementAndGet()
+        n.incrementAndGet()
     }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
-    try { val r = body; Thread.sleep(300); (r, n.get()) }
-    finally spark.sparkContext.removeSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      (r, n.get())
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("job counts: MERGE (MoR and CoW), MoR DELETE and MoR UPDATE on a " +
+      "multi-file table") {
+    import spark.implicits._
+    import graft.engine._
+    def table(mode: String): GraftTable = {
+      val t = GraftTable.create(spark, tmp(), "jobs",
+        Seq("id" -> "long", "v" -> "int"),
+        properties = Seq("write.delete.mode", "write.update.mode",
+          "write.merge.mode").map(_ -> mode).toMap)
+      (0 until 4).foreach(b => t.append((b * 25 until (b + 1) * 25)
+        .map(i => (i.toLong, i)).toDF("id", "v").coalesce(1)))
+      t
+    }
+    // the serve shape: update the matched half, insert the rest; the
+    // source keys reach two of the four files
+    def merge(t: GraftTable): Int = jobsDuring(t.merge(
+      Seq((10L, -10), (30L, -30), (200L, 200), (201L, 201)).toDF("sid", "sv"),
+      col("id") === col("sid"),
+      matched = Seq(MergeUpdateClause(None, Map("v" -> col("sv")))),
+      notMatched = Seq(MergeInsertValuesClause(None,
+        Map("id" -> col("sid"), "v" -> col("sv"))))))._2
+    val expected = ((0 until 100).map(i =>
+      i.toLong -> (if (i == 10 || i == 30) -i else i)) ++
+      Seq(200L -> 200, 201L -> 201)).sortBy(_._1)
+    val mor = table("merge-on-read")
+    val morJobs = merge(mor)
+    val cow = table("copy-on-write")
+    val cowJobs = merge(cow)
+    Seq(mor, cow).foreach(t =>
+      assert(t.read().orderBy("id").as[(Long, Int)].collect().toSeq == expected))
+    val delJobs = jobsDuring(mor.delete(col("id") >= 40L && col("id") <= 44L))._2
+    val updJobs = jobsDuring(mor.update(col("id") >= 60L && col("id") <= 64L,
+      Map("v" -> lit(0))))._2
+    assert(mor.read().count() == 97L)
+    assert(mor.read().filter(col("v") === 0).count() == 6L) // ids 0, 60-64
+    // MERGE: the source-key domain (2 jobs), the tagged join and the
+    // one tally over it (merge-on-read 2: target broadcast, tally;
+    // copy-on-write 3: its full outer join shuffles both sides) and
+    // the writes (2 and 1); DELETE: the delete-file write; UPDATE: that
+    // and the copies
+    assert((morJobs, cowJobs, delJobs, updJobs) == ((6, 6, 1, 2)),
+      s"MERGE MoR $morJobs, CoW $cowJobs; DELETE $delJobs; UPDATE $updJobs")
   }
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
