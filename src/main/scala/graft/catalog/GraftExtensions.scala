@@ -213,20 +213,25 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
       // ---- filtered scans: the WHERE condition reaches the engine,
       // ---- which prunes candidate files metadata-only (partition
       // ---- transforms + manifest bounds) BEFORE the scan plan is
-      // ---- built. Spark's Filter node stays above — pruning only
+      // ---- built, on the current or the VERSION AS OF snapshot alike.
+      // ---- Spark's Filter node stays above — pruning only
       // ---- shrinks the file list, the predicate still executes.
       // ---- (Top-down traversal: this case must see the Filter before
       // ---- the bare-relation case below swaps its child.)
       case fl @ org.apache.spark.sql.catalyst.plans.logical.Filter(cond, child)
-          if handleOf(child).exists(_.pinnedSnapshot.isEmpty) &&
+          if handleOf(child).isDefined &&
             !deferred.contains(relationIn(child)) =>
         val h = handleOf(child).get
         // transaction view: a staged table reads its PREVIEW
         // (read-your-own-writes); an untouched one PINS to its
-        // committed snapshot at first touch (snapshot isolation)
-        val read = txnView(h) match {
-          case Some(pm) => h.table.readPreviewPrunedBy(pm, cond)
-          case None     => h.table.readPrunedBy(cond)
+        // committed snapshot at first touch (snapshot isolation); an
+        // explicit time-travel pin overrides both, as in the scan case
+        val read = h.pinnedSnapshot match {
+          case Some(s) => h.table.readPrunedIn(h.table.meta, s, cond)
+          case None => txnView(h) match {
+            case Some(pm) => h.table.readPreviewPrunedBy(pm, cond)
+            case None     => h.table.readPrunedBy(cond)
+          }
         }
         val swapped = rebind(relationIn(child), read.queryExecution.analyzed)
         val newChild = child match {

@@ -18,7 +18,11 @@ import DeletionVectors.relDataPathStr
   *
   * Scale design:
   *   - planning is metadata-only: reads consume the snapshot's file list,
-  *     never a directory listing;
+  *     never a directory listing. Each schema group's scan is a parquet
+  *     relation over a [[ManifestFileIndex]] of its manifest entries
+  *     (recorded paths and sizes; no `DataSource` resolution, glob or
+  *     stat), and the index prunes on the filters Spark pushes into the
+  *     scan, so a filter from any API skips files;
   *   - appends touch only new files; DELETE/UPDATE rewrite only the files
   *     that contain matching rows (file-granularity CoW, found with one
   *     predicate-pushed scan over input_file_name);
@@ -300,16 +304,23 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * layout, `WHERE id = k` prunes `bucket(N, id)`), then manifest
     * min/max bounds veto files inside the survivors ([[StatsPruning]]).
     * The filter itself still runs — pruning only shrinks the scan, so
-    * its tri-state conservatism can never change results. This is the
-    * path the SQL rule routes `WHERE` through; at 100 TB it is the
-    * difference between opening a day's files and opening the table's.
+    * its tri-state conservatism can never change results.
+    * `read().filter(cond)` scans the same files (the scan's
+    * [[ManifestFileIndex]] runs the same veto on the pushed filter);
+    * this read decides them before the scan is built, which also skips
+    * whole manifests from their summaries, evaluates subquery domains,
+    * applies only the deletes reaching the kept files, and reports the
+    * kept files in `inputFiles`. The SQL rule routes `WHERE` through
+    * here.
     */
   def readWhere(cond: Column): DataFrame =
     readPrunedBy(exprOf(cond)).filter(cond)
 
   /** The scan half of [[readWhere]] — no residual filter applied;
     * callers (the resolution rule keeps Spark's own Filter node above)
-    * must apply `cond` themselves.
+    * must apply `cond` themselves. The pre-pruned files still plan
+    * through a [[ManifestFileIndex]], so the filter Spark pushes into
+    * the scan can narrow them further, never widen them.
     */
   private[graft] def readPrunedBy(cond: org.apache.spark.sql.catalyst.expressions.Expression): DataFrame = {
     val m = meta
@@ -440,6 +451,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * Dropped columns vanish; added columns null-fill; renamed columns
     * follow their field-id (SURVEY §7 risk 1). Callers handle the
     * empty-file-list case (their provenance placeholders differ).
+    *
+    * Each group is one [[parquetScan]] over the manifest entries: no
+    * listing, glob or stat while the DataFrame is built. Its index maps
+    * the filters Spark pushes into the scan back to current column
+    * names by field id and prunes with [[pruneCandidates]], so a
+    * `filter` applied anywhere above this read skips files.
     */
   private def mappedRead(m: TableMetadata, files: Vector[DataFileEntry],
       extra: Seq[Column],
@@ -468,11 +485,17 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       }
     val bySchema = files.groupBy(f => (f.schemaId, injections(f))).toSeq
       .sortBy(g => (g._1._1, g._1._2.toSeq.sorted.mkString("")))
+    val conf = spark.sessionState.newHadoopConf()
     bySchema.map { case ((sid, inj), fs) =>
       val written = m.schemaById(sid)
         .getOrElse(sys.error(s"schema $sid missing from metadata"))
-      val raw = spark.read.schema(written.toStructType)
-        .parquet(fs.map(f => absPath(f.path)): _*)
+      // pushed filters prune by the current names of the columns whose
+      // type never changed: their recorded bounds parse as they are
+      val currentName = written.fields.flatMap(w =>
+        m.currentSchema.fieldById(w.id).filter(_.dataType == w.dataType)
+          .map(c => w.name -> c.name)).toMap
+      val raw = parquetScan(conf, fs, written.toStructType, currentName,
+        (kept, e) => pruneCandidates(m, kept, e))
       val cols = cur.fields.map { f =>
         written.fieldById(f.id) match {
           case Some(w) => col(s"`${w.name}`").cast(f.sparkType).as(f.name)
@@ -485,6 +508,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       raw.select(cols: _*)
     }.reduce(_ unionByName _)
   }
+
+  /** The parquet scan of manifest-listed `files` read with `schema`:
+    * a relation over a [[ManifestFileIndex]] of them, so it resolves no
+    * `DataSource` and stats no file. Every graft read of data or delete
+    * files builds its scan here; `currentName` and `candidates` prune
+    * the files on pushed filters (the defaults never prune).
+    */
+  private def parquetScan(conf: org.apache.hadoop.conf.Configuration,
+      files: Vector[DataFileEntry], schema: StructType,
+      currentName: Map[String, String] = Map.empty,
+      candidates: (Vector[DataFileEntry],
+        org.apache.spark.sql.catalyst.expressions.Expression) =>
+        Vector[DataFileEntry] = (fs, _) => fs): DataFrame =
+    org.apache.spark.sql.graftshim.parquetRelation(spark,
+      ManifestFileIndex(conf, files, absPath, currentName, candidates), schema)
 
   private def readFiles(m: TableMetadata, files: Vector[DataFileEntry]): DataFrame =
     if (files.isEmpty) emptyDf(m) else mappedRead(m, files, Nil)
@@ -545,9 +583,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   /** Apply POSITIONAL deletes inside the scan: one codegen predicate,
     * `NOT deleted(_g_path, _g_pos)`, over the tagged rows — no join, no
     * exchange and no Spark job for the delete side. The positional
-    * delete files are read on the driver when the DataFrame is built
-    * (where a `spark.read.parquet` of them used to resolve and stat the
-    * same files), once per file per JVM, into per-data-file position
+    * delete files are read on the driver when the DataFrame is built,
+    * once per file per JVM, into per-data-file position
     * bitmaps shipped in one broadcast per delete-file set
     * ([[DeletionVectors]]). The scan path is normalized with the same
     * [[DeletionVectors.relDataPathStr]] as the delete keys, so clones,
@@ -638,10 +675,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // delete commit lands several same-seq entries, and a per-file
     // union would bloat the plan with one FileScan job each (measured
     // >1s of pure job overhead per 32-part batch at sf0.1)
+    val conf = spark.sessionState.newHadoopConf()
     val delAll = fs.groupBy(_.seq).toSeq.map { case (seq, sfs) =>
-        spark.read.schema(delSchema)
-          .parquet(sfs.map(f => absPath(f.path)): _*)
-          .withColumn("__del_seq", lit(seq))
+        parquetScan(conf, sfs, delSchema).withColumn("__del_seq", lit(seq))
       }
       .reduce(_ unionByName _)
       .select(ids.zip(keyFields).map { case (id, f) =>
@@ -759,8 +795,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
     final case class Imported(abs: String, footer: ParquetFooterStats,
         pvals: Map[String, String], missingIds: Vector[Int])
+    val conf = spark.sessionState.newHadoopConf()
     val imports = paths.map { abs =>
-      val footer = readFooter(abs)
+      val footer = ParquetFooterStats.read(abs, conf)
       // directory segments only — a file NAME containing '=' is not a
       // partition binding
       val pvals = abs.stripPrefix(srcAbs).split("/").toSeq.dropRight(1)
@@ -1540,6 +1577,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         .parquet(stagingAbs)
     }
     val nameToId = cur.fields.map(f => f.name -> f.id).toMap
+    val conf = spark.sessionState.newHadoopConf()
     listParquet(stagingAbs).map { abs =>
       val rel = s"$stagingRel/${abs.stripPrefix(stagingAbs + "/")}"
       val pvals = rel.split("/").toSeq
@@ -1549,7 +1587,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         }.toMap
       // one footer open per file yields row count AND column min/max —
       // the stats that let DML prune candidate files metadata-only
-      val footer = readFooter(abs)
+      val footer = ParquetFooterStats.read(abs, conf)
       def byId(statsByName: Map[String, String]): Map[String, String] =
         statsByName.flatMap { case (n, v) =>
           nameToId.get(n).map(id => id.toString -> v)
@@ -1589,9 +1627,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
 
   private def listParquet(dir: String): Vector[String] =
     io.listRecursive(dir).filter(_.endsWith(".parquet")).sorted
-
-  private def readFooter(path: String): ParquetFooterStats =
-    ParquetFooterStats.read(path, spark.sessionState.newHadoopConf())
 
   /** Physical location of a manifest entry's file. Engine-written files
     * are recorded location-relative (the table directory can move);
@@ -1932,9 +1967,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val delAbs = s"$location/$delRel"
     delRows.write.mode("errorifexists").option("compression", codec)
       .parquet(delAbs)
+    val conf = spark.sessionState.newHadoopConf()
     val entries = listParquet(delAbs).map { abs =>
       val rel = s"$delRel/${abs.stripPrefix(delAbs + "/")}"
-      val footer = readFooter(abs)
+      val footer = ParquetFooterStats.read(abs, conf)
       DataFileEntry(rel, footer.rowCount, m.currentSchemaId,
         equalityIds = equalityIds,
         fileSizeBytes = io.size(abs),
@@ -4031,8 +4067,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     // inherited delete files are recorded by absolute path
     val seqByPath = pos.map(f => (relDataPathStr(f.path), f.path, f.seq))
       .toDF("__del_key", "delete_file_path", "sequence_number")
-    spark.read.schema("file_path STRING, pos BIGINT")
-      .parquet(pos.map(f => absPath(f.path)): _*)
+    parquetScan(spark.sessionState.newHadoopConf(), pos,
+        StructType.fromDDL("file_path STRING, pos BIGINT"))
       .withColumn("__del_key", relDataPath(col("_metadata.file_path")))
       .join(broadcast(seqByPath), "__del_key")
       .select(col("file_path"), col("pos"), col("delete_file_path"),

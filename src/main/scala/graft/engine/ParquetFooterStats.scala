@@ -2,6 +2,7 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -40,7 +41,11 @@ object ParquetFooterStats {
 
   def read(path: String, conf: Configuration): ParquetFooterStats = {
     val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
-    val r = ParquetFileReader.open(in)
+    // read options from `conf`: the one-argument `open` builds its
+    // options over a fresh Hadoop Configuration, whose default
+    // resources parse again on every call (~10 ms a file, ten times
+    // the footer read itself)
+    val r = ParquetFileReader.open(in, HadoopReadOptions.builder(conf).build())
     try {
       val footer = r.getFooter
       val blocks = footer.getBlocks.asScala

@@ -18,6 +18,23 @@ package object graftshim {
   def columnOf(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
 
+  /** A parquet scan over `index` read with `dataSchema`: the
+    * `HadoopFsRelation` that `spark.read.schema(..).parquet(paths)`
+    * builds, without resolving a `DataSource` and so without globbing
+    * or statting its paths. The schema is made nullable and the
+    * partition schema left empty, exactly as that call does for
+    * explicit file paths.
+    */
+  def parquetRelation(spark: SparkSession,
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      dataSchema: org.apache.spark.sql.types.StructType): DataFrame =
+    dfFromPlan(spark, org.apache.spark.sql.execution.datasources.LogicalRelation(
+      org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+        new org.apache.spark.sql.types.StructType(), dataSchema.asNullable,
+        None,
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+        Map.empty)(spark)))
+
   /** LogicalPlan -> DataFrame (Dataset.ofRows is private[sql]). */
   def dfFromPlan(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(

@@ -188,4 +188,99 @@ class PruneFuzzSpec extends AnyFunSuite {
     info(s"differential checks passed: $checked")
     assert(checked == 24)
   }
+
+  /** Rows of `df`, and the files its data scans read (the executed
+    * `FileSourceScanExec`s' `numFiles`; equality-delete scans, whose
+    * columns are `_k_<id>`, are left out).
+    */
+  private def rowsAndFiles(df: DataFrame): (Seq[String], Long) = {
+    val rows = rowsOf(df)
+    val files = new org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.output.exists(_.name == "id") => s.metrics("numFiles").value
+      }.sum
+    (rows, files)
+  }
+
+  test("seeded differential: read().filter, readAsOfVersion().filter " +
+      "and SQL VERSION AS OF .. WHERE read the rows and files readWhere " +
+      "does") {
+    import spark.implicits._
+    val seed = sys.env.get("GRAFT_FUZZ_SEED").flatMap(_.toLongOption)
+      .getOrElse(20261019L)
+    info(s"scan-prune fuzz seed=$seed")
+    val rnd = new scala.util.Random(seed)
+    val cat = new GraftCatalog(spark,
+      java.nio.file.Files.createTempDirectory("graft-scanfuzz").toString)
+    spark.conf.set("spark.graft.warehouse", cat.warehouse)
+    // three layouts, six one-file batches of 60 rows (~5% NULL ids),
+    // then a merge-on-read DELETE and a rename: history spans two
+    // schemas, and the later snapshots carry positional deletes
+    val layouts = Seq(
+      ("sf_plain", Nil),
+      ("sf_bucket", Seq("id" -> "bucket(4)")),
+      ("sf_ident", Seq("cat" -> "identity")))
+    val tables = layouts.map { case (name, part) =>
+      val t = cat.createTable("db", name,
+        Seq("id" -> "long", "cat" -> "string", "v" -> "long"), part,
+        Map("write.delete.mode" -> "merge-on-read") ++
+          (if (part.isEmpty) Map.empty[String, String]
+           else Map("write.distribution-mode" -> "hash")))
+      (0 until 6).foreach { b =>
+        t.append((0 until 60).map { i =>
+          val id = b * 60 + i
+          (if (rnd.nextInt(20) == 0) None else Some(id.toLong),
+            s"c${id % 5}", id.toLong * 2)
+        }.toDF("id", "cat", "v").coalesce(1))
+      }
+      t.delete(col("id").between(100L, 130L))
+      t.renameColumn("v", "val")
+      name -> t
+    }
+    // (DataFrame predicate, the same predicate in SQL)
+    def leaf(): (org.apache.spark.sql.Column, String) = rnd.nextInt(7) match {
+      case 0 => val k = rnd.nextInt(400); (col("id") === k, s"id = $k")
+      case 1 =>
+        val a = rnd.nextInt(400); val b = a + rnd.nextInt(80)
+        (col("id").between(a, b), s"id BETWEEN $a AND $b")
+      case 2 =>
+        val ks = Seq.fill(3)(rnd.nextInt(400))
+        (col("id").isin(ks: _*), s"id IN (${ks.mkString(", ")})")
+      case 3 => val c = rnd.nextInt(6); (col("cat") === s"c$c", s"cat = 'c$c'")
+      case 4 => val x = rnd.nextInt(800); (col("val") >= x, s"val >= $x")
+      case 5 => (col("id").isNull, "id IS NULL")
+      case _ =>
+        val a = rnd.nextInt(200); val b = a + 150
+        (col("id") < a || col("id") > b, s"(id < $a OR id > $b)")
+    }
+    for (round <- 1 to 18) {
+      val (name, t) = tables(rnd.nextInt(tables.size))
+      val (p, sql) =
+        if (rnd.nextInt(3) == 0) {
+          val ((p1, s1), (p2, s2)) = (leaf(), leaf())
+          (p1 && p2, s"$s1 AND $s2")
+        } else leaf()
+      val m = t.meta
+      val snaps = m.snapshots
+      val s = if (round % 3 == 0) m.currentSnapshot.get
+              else snaps(rnd.nextInt(snaps.size))
+      val label = s"round $round: $name @ ${s.snapshotId} WHERE $sql"
+      val want = rowsAndFiles(t.readPrunedIn(m, s,
+        org.apache.spark.sql.graftshim.expressionOf(p)).filter(p))
+      val got = Seq(
+        "readAsOfVersion().filter" ->
+          t.readAsOfVersion(s.snapshotId).filter(p),
+        "SQL VERSION AS OF" -> spark.sql(
+          s"SELECT * FROM graft.db.$name VERSION AS OF ${s.snapshotId} " +
+            s"WHERE $sql")) ++
+        (if (m.currentSnapshotId.contains(s.snapshotId))
+          Seq("readWhere" -> t.readWhere(p), "read().filter" -> t.read().filter(p))
+         else Nil)
+      got.foreach { case (api, df) =>
+        assert(rowsAndFiles(df) == want, s"$label via $api")
+      }
+    }
+  }
 }
