@@ -1,9 +1,19 @@
 package graft
 
-/** Dev-loop plan dumper (not part of the driver contract): writes
-  * `.explain("formatted")` of each selected query to
-  * plans/<SPARK_GRAFT_PLAN_TAG>/<query>_<SPARK_GRAFT_PLAN_SUFFIX>.txt —
-  * the before/after plan evidence the optimization rounds commit.
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Dev-loop plan dumper (not part of the driver contract). For each
+  * selected query it writes the planned and the executed plan under
+  * plans/<SPARK_GRAFT_PLAN_TAG>/ — the before/after plan evidence the
+  * optimization rounds commit:
+  *   - `<query>_<SPARK_GRAFT_PLAN_SUFFIX>.txt`: `.explain("formatted")`
+  *     before execution;
+  *   - `<query>_<SPARK_GRAFT_PLAN_SUFFIX>_final.txt`: the executed plan
+  *     of a `noop` write of the query (the way Bench materializes it),
+  *     with the final adaptive plan — runtime-only shapes such as
+  *     reused exchanges, coalesced shuffle reads and join strategies
+  *     that AQE switched show only here.
   *
   *   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
   *   SPARK_GRAFT_PLAN_TAG=r19 SPARK_GRAFT_PLAN_SUFFIX=before \
@@ -20,19 +30,35 @@ object Plans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // the noop write plans its own QueryExecution; the listener hands
+    // it over once the write has run
+    @volatile var executed: Option[QueryExecution] = None
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = executed = Some(qe)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    })
     val wanted = args.toSeq
     val queries = graft.queries.Registry.all.sortBy(_.name)
       .filter(q => wanted.isEmpty || wanted.exists(q.name.contains))
     val dir = java.nio.file.Paths.get("plans", tag)
     java.nio.file.Files.createDirectories(dir)
+    def write(name: String, txt: String): Unit = {
+      java.nio.file.Files.writeString(dir.resolve(name), txt)
+      println(s"[plans] wrote $name")
+    }
     queries.foreach { q =>
       try {
         val df = q.fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.writeString(
-          dir.resolve(s"${q.name}_$suffix.txt"), txt)
-        println(s"[plans] wrote ${q.name}_$suffix.txt")
+        write(s"${q.name}_$suffix.txt", df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        org.apache.spark.sql.graftshim.drainListenerBus(spark)
+        executed = None
+        df.write.format("noop").mode("overwrite").save()
+        org.apache.spark.sql.graftshim.drainListenerBus(spark)
+        executed.foreach(qe =>
+          write(s"${q.name}_${suffix}_final.txt", qe.executedPlan.toString))
       } catch {
         case scala.util.control.NonFatal(e) =>
           println(s"[plans] ${q.name} FAILED: ${e.getMessage}")

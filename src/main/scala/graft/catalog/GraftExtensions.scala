@@ -225,12 +225,14 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
         // transaction view: a staged table reads its PREVIEW
         // (read-your-own-writes); an untouched one PINS to its
         // committed snapshot at first touch (snapshot isolation); an
-        // explicit time-travel pin overrides both, as in the scan case
+        // explicit time-travel pin overrides both, as in the scan case.
+        // Outside a transaction the scan reads the handle's own
+        // document, the one the relation's attributes came from.
         val read = h.pinnedSnapshot match {
-          case Some(s) => h.table.readPrunedIn(h.table.meta, s, cond)
+          case Some(s) => h.table.readPrunedIn(h.viewMeta, s, cond)
           case None => txnView(h) match {
             case Some(pm) => h.table.readPreviewPrunedBy(pm, cond)
-            case None     => h.table.readPrunedBy(cond)
+            case None     => h.table.readPrunedBy(cond, h.viewMeta)
           }
         }
         val swapped = rebind(relationIn(child), read.queryExecution.analyzed)
@@ -245,10 +247,10 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
           if handleOf(r).isDefined && !deferred.contains(r) =>
         val h = handleOf(r).get
         val df = h.pinnedSnapshot match {
-          case Some(s) => h.table.readAsOfVersion(s.snapshotId)
+          case Some(s) => h.table.readSnapshot(h.viewMeta, Some(s))
           case None => txnView(h) match {
             case Some(pm) => h.table.readPreview(pm)
-            case None     => h.table.read()
+            case None     => h.table.readCurrent(h.viewMeta)
           }
         }
         rebind(r, df.queryExecution.analyzed)
@@ -443,7 +445,7 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     import org.apache.spark.sql.types.LongType
     val t = h.table
-    val m = t.meta
+    val m = h.viewMeta
     // VERSION/TIMESTAMP AS OF: the audit count answers from THAT
     // snapshot's manifest — but only while the pinned snapshot shares
     // the current schema (field-id-keyed stats are read against the
@@ -524,7 +526,7 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
     import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StringType}
     import graft.tableformat.DataFileEntry
     val t = h.table
-    val m = t.meta
+    val m = h.viewMeta
     val snap = h.pinnedSnapshot.orElse(m.currentSnapshot)
     if (h.pinnedSnapshot.exists(_.schemaId != m.currentSchemaId)) return None
     val files0 = snap.map(_.files).getOrElse(Vector.empty)

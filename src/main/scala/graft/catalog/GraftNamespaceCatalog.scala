@@ -210,15 +210,16 @@ class GraftNamespaceCatalog extends TableCatalog with SupportsNamespaces
         .orElse(if (version == "main") m.currentSnapshot else None)
     val snap = version.toLongOption.flatMap(m.snapshotById).orElse(byRef)
     GraftTableHandle(t, fullName(ident),
-      Some(snap.getOrElse(throw new NoSuchTableException(ident))))
+      Some(snap.getOrElse(throw new NoSuchTableException(ident))), Some(m))
   }
 
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val t = graftTable(ident)
+    val m = t.meta
     // Spark hands TIMESTAMP AS OF down in MICROseconds
-    val snap = t.meta.snapshotAsOfTime(timestamp / 1000L)
+    val snap = m.snapshotAsOfTime(timestamp / 1000L)
       .getOrElse(throw new NoSuchTableException(ident))
-    GraftTableHandle(t, fullName(ident), Some(snap))
+    GraftTableHandle(t, fullName(ident), Some(snap), Some(m))
   }
 
   /** CREATE TABLE graft.db.t (...) [PARTITIONED BY (days(ts) | c)]. */

@@ -18,10 +18,12 @@ import graft.tableformat.Snapshot
   * selection on the one proven code path.
   *
   * `pinnedSnapshot` is set when the handle came from time-travel
-  * resolution (VERSION AS OF / TIMESTAMP AS OF).
+  * resolution (VERSION AS OF / TIMESTAMP AS OF); `pinnedMeta` is then
+  * the committed document that snapshot was found in.
   */
 final case class GraftTableHandle(table: GraftTable, tableName: String,
-    pinnedSnapshot: Option[Snapshot] = None) extends Table {
+    pinnedSnapshot: Option[Snapshot] = None,
+    pinnedMeta: Option[graft.tableformat.TableMetadata] = None) extends Table {
 
   override def name(): String = tableName
 
@@ -42,10 +44,12 @@ final case class GraftTableHandle(table: GraftTable, tableName: String,
     * overrides the transaction view by naming its own snapshot.
     * ONE read, cached for the handle's lifetime (a resolution-scoped
     * object), so schema/partitioning/properties can never pair fields
-    * from two different metadata versions.
+    * from two different metadata versions; the resolution rule builds
+    * the relation's scan from this same document. A time-travel handle
+    * reuses the document its snapshot was resolved in.
     */
-  private lazy val viewMeta: graft.tableformat.TableMetadata =
-    if (pinnedSnapshot.isDefined) table.meta
+  private[catalog] lazy val viewMeta: graft.tableformat.TableMetadata =
+    if (pinnedSnapshot.isDefined) pinnedMeta.getOrElse(table.meta)
     else GraftSqlTransactions
       .readView(table.spark, table.location, table.meta)
       .getOrElse(table.meta)

@@ -41,10 +41,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * snapshot if a commit lands in between, defeating the atomic hint
     * swap's torn-read protection.
     */
-  def read(): DataFrame = {
-    val m = meta
+  def read(): DataFrame = readCurrent(meta)
+
+  /** [[read]] of an explicit metadata document — the SQL relation swap
+    * reads the document its relation's attributes came from.
+    */
+  private[graft] def readCurrent(m: TableMetadata): DataFrame =
     tagReadRoot(readSnapshot(m, m.currentSnapshot), m, None)
-  }
 
   /** Mark an engine read's analyzed root with its provenance so later
     * plan composition (DataFrame-API joins are analyzed eagerly, leaf
@@ -322,13 +325,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * through a [[ManifestFileIndex]], so the filter Spark pushes into
     * the scan can narrow them further, never widen them.
     */
-  private[graft] def readPrunedBy(cond: org.apache.spark.sql.catalyst.expressions.Expression): DataFrame = {
-    val m = meta
+  private[graft] def readPrunedBy(
+      cond: org.apache.spark.sql.catalyst.expressions.Expression,
+      m: TableMetadata = meta): DataFrame =
     m.currentSnapshot match {
       case None => emptyDf(m)
       case Some(s) => tagReadRoot(readPrunedIn(m, s, cond), m, Some(cond))
     }
-  }
 
   /** [[readPrunedBy]] against an EXPLICIT (metadata, snapshot) pair —
     * the re-derivation seam join-driven pruning uses to rebuild a
@@ -438,7 +441,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
       m.currentSchema.toStructType)
 
-  private def readSnapshot(m: TableMetadata, snap: Option[Snapshot]): DataFrame =
+  private[graft] def readSnapshot(m: TableMetadata, snap: Option[Snapshot]): DataFrame =
     snap match {
       case None    => emptyDf(m)
       case Some(s) => liveRead(m, s, s.files)

@@ -14,7 +14,12 @@ import graft.functions.TextFunctions._
   * cartesian. Buckets shuffle-partition by key, so 1000 executors
   * each see only their buckets; skewed buckets (a shingle present in
   * every doc) are the one hazard, handled by `maxShingleDf` document-
-  * frequency capping plus AQE skew splitting.
+  * frequency capping plus AQE skew splitting. A pair that shares
+  * several buckets is deduplicated before verification: with a
+  * `distinct` on the text paths, and on the embedding LSH path by
+  * emitting it only in its first shared table, which the per-row
+  * signature carried through the bucket exchange decides inside the
+  * join ([[nearDupEmbeddingLsh]]).
   */
 object Dedup {
 
@@ -375,48 +380,42 @@ object Dedup {
     * recall rises with numTables (PipelineSpec pins it vs the exact
     * variant). Join volume is bucket-local: at 100 TB each (table,
     * bucket) key holds a small slice of the corpus instead of the
-    * quadratic all-pairs, and the same pin+reuse treatment as the
-    * other dedup self-joins keeps the plan stable: one exchange by the
-    * bucket key feeds both self-join sides, SMJ pinned everywhere.
+    * quadratic all-pairs.
+    *
+    * One pass: each row's vector, norm and per-table signature
+    * (`sig`, [[Similarity.lshSignatures]]) are computed once and ride
+    * through the ONE (table, bucket) exchange that feeds both sides of
+    * the pinned-SMJ self-join (the second side reuses it). A pair that
+    * collides in several tables is emitted only in the lowest-numbered
+    * table where the two signatures agree, so each pair appears exactly
+    * once with no `distinct`, and its sim is computed in the join's
+    * projection from the carried vectors, with no re-join. The exchange
+    * moves O(numTables x corpus x vector) bytes, independent of the
+    * number of candidate pairs.
     */
   def nearDupEmbeddingLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planesPerTable: Int = 4, numTables: Int = 16,
-      dim: Int = 64, seed: Long = 42L,
-      maxBucketSize: Option[Int] = None): DataFrame = {
-    val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("nrm", sqrt(dotF(col("v"), col("v"))))
-    val buckets0 = Similarity.lshBuckets(spread(v), "id", "v",
-        planesPerTable, numTables, dim, seed)
-      .repartition(col("table"), col("bucket"))
-    // same bucket-size cap as nearDupMinhashLsh (see there): identical
-    // or near-identical embedding clusters fill one bucket per table
-    // and go quadratic in the self-join; the capped members stay
-    // findable through any normal-sized bucket of another table.
-    val buckets1 = maxBucketSize match {
-      case Some(cap) =>
-        val big = buckets0.groupBy(col("table"), col("bucket"))
-          .agg(count(lit(1)).as("bs"))
-          .filter(col("bs") > cap).select("table", "bucket")
-        buckets0.join(big.hint("SHUFFLE_MERGE"),
-          Seq("table", "bucket"), "left_anti")
-      case None => buckets0
-    }
-    val buckets = buckets1.hint("SHUFFLE_MERGE")
-    val cand = buckets.as("a").join(buckets.as("b"),
+      dim: Int = 64, seed: Long = 42L): DataFrame = {
+    val v = spread(df.select(col(idCol).as("id"), col(vecCol).as("v")))
+      .select(col("id"), col("v"), sqrt(dotF(col("v"), col("v"))).as("nrm"),
+        Similarity.lshSignatures("id", "v", planesPerTable, numTables, dim,
+          seed).as("sig"))
+    val buckets = v
+      .select(col("id"), col("v"), col("nrm"), col("sig"),
+        posexplode(col("sig")).as(Seq("table", "bucket")))
+      .repartition(col("table"), col("bucket")).hint("SHUFFLE_MERGE")
+    // lowest table in which the pair shares a bucket (the join keys
+    // guarantee one exists)
+    val firstShared = coalesce((0 until numTables).map(t =>
+      when(col("a.sig")(t) === col("b.sig")(t), lit(t))): _*)
+    buckets.as("a").join(buckets.as("b"),
         col("a.table") === col("b.table") &&
-          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct()
-    val vj = v.hint("SHUFFLE_MERGE")
-    cand
-      .join(vj.select(col("id").as("id1"), col("v").as("va"),
-        col("nrm").as("na")), "id1")
-      .join(vj.select(col("id").as("id2"), col("v").as("vb"),
-        col("nrm").as("nb")), "id2")
-      .select(col("id1"), col("id2"),
+          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id") &&
+          col("a.table") === firstShared)
+      .select(col("a.id").as("id1"), col("b.id").as("id2"),
         graft.functions.VectorFunctions.safeRatio(
-          dotF(col("va"), col("vb")),
-          col("na") * col("nb")).as("sim"))
+          dotF(col("a.v"), col("b.v")),
+          col("a.nrm") * col("b.nrm")).as("sim"))
       .filter(col("sim") >= threshold)
   }
 

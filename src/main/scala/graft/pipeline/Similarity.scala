@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions._
   * shuffle for the per-query top-k. The approximate path buckets both
   * sides by random-hyperplane LSH signs so the join is bucket-local;
   * multiprobe widens recall without widening the shuffle. All math is
-  * built-in expressions (zip_with/aggregate in double precision) —
-  * codegen'd, no UDFs.
+  * codegen'd double-precision expressions (built-ins plus the native
+  * vector expressions in [[graft.functions]]), no UDFs.
   */
 object Similarity {
 
@@ -108,20 +108,18 @@ object Similarity {
   }
 
   /** Deterministic random hyperplanes: `numPlanes` x `dim` doubles from
-    * a seeded PRNG, embedded as literal arrays (no data-dependent
-    * state, identical on every executor).
+    * a seeded PRNG (no data-dependent state, identical on every
+    * executor) — the planes [[lshBuckets]] table t uses at `seed + t`.
     */
-  def hyperplanes(numPlanes: Int, dim: Int, seed: Long): Seq[Array[Double]] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numPlanes)(Array.fill(dim)(rnd.nextGaussian()))
-  }
+  def hyperplanes(numPlanes: Int, dim: Int, seed: Long): Seq[Array[Double]] =
+    graft.functions.HyperplaneBuckets.planes(numPlanes, dim, seed).toSeq
 
   /** Sign-bit LSH signature (one long, numPlanes <= 63 bits). NOTE:
     * this per-row form runs one interpreted `aggregate` pass PER plane
     * (higher-order functions are CodegenFallback) — it exists as the
     * independent reference implementation for tests; the corpus-scale
-    * path is [[planeDots]], pinned sign-identical to this in
-    * PipelineSpec.
+    * path is [[lshSignatures]]' native expression, pinned bit-identical
+    * to this in PipelineSpec.
     */
   def lshSignature(vec: Column, planes: Seq[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
@@ -131,82 +129,36 @@ object Similarity {
       when(d >= 0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** All `planes.size` dot products per row in ONE pass: posexplode the
-    * vector, look up each plane's weight for that position in a literal
-    * plane matrix (GetArrayItem — codegen'd), one map-side-combined
-    * `sum` per plane. Output is one row per id with columns d0..d{n-1}.
-    *
-    * Why grouped and not per-row: `aggregate(zip_with(...))` per plane
-    * is n interpreted traversals of every vector — the round-2 bench's
-    * 13x-slower-than-brute-force root cause. Here each vector element
-    * is touched once in whole-stage codegen and the shuffle carries one
-    * (id, n doubles) row per document per input partition.
+  /** Per-row multi-table LSH signature: `array<bigint>` whose element t
+    * is the row's bucket in table t, all `numTables * planesPerTable`
+    * dots computed by one codegen'd
+    * [[graft.functions.HyperplaneBuckets]] pass over the vector — no
+    * explode, join or aggregate. Deterministic given `seed`: each dot
+    * sums in position order, so a bucket never depends on the
+    * partitioning. A vector whose length != dim fails LOUDLY, naming
+    * its id.
     */
-  def planeDots(df: DataFrame, idCol: String, vecCol: String,
-      planes: Seq[Array[Double]]): DataFrame = {
-    val dim = planes.head.length
-    require(planes.forall(_.length == dim), "planes must share one dim")
-    // a vector whose length != dim must fail LOUDLY: element_at past the
-    // plane end yields null, sum skips it, and the dot silently becomes
-    // a partial sum — one codegen'd size check per row, not per element.
-    // (Bucket determinism is up to FP summation order: grouped sums add
-    // in partition order, so a dot within ~1e-16 of 0 may flip sign.)
+  private[pipeline] def lshSignatures(idCol: String, vecCol: String,
+      planesPerTable: Int, numTables: Int, dim: Int, seed: Long): Column = {
     val checked = when(size(col(vecCol)) === dim, col(vecCol))
       .otherwise(raise_error(concat(
         lit(s"embedding length != $dim: id="), col(idCol).cast("string"),
         lit(" len="), size(col(vecCol)).cast("string"))))
-    // the plane matrix travels as DATA (a dim-row LocalRelation,
-    // broadcast-joined on the exploded position), NOT as plan literals:
-    // per-plane `array(lit, lit, …)` built an expression tree of
-    // numPlanes*dim Literal nodes (64x64 -> ~1.3 MiB task binaries), and
-    // a shared typedlit was worse — optimizer copies break reference
-    // identity, so every aggregate serialized its own boxed 4096-double
-    // payload (measured 23 MiB task binaries). With the weights in a
-    // broadcast relation the plan size is independent of plane count;
-    // the join is a 64-row broadcast hash build with no row blowup
-    // (one wide weight row per position).
-    val spark = df.sparkSession
-    val planeSchema = types.StructType(
-      types.StructField("pos", types.IntegerType, nullable = false) +:
-        planes.indices.map(j =>
-          types.StructField(s"w$j", types.DoubleType, nullable = false)))
-    val planeRows: java.util.List[Row] = java.util.Arrays.asList(
-      (0 until dim).map(p =>
-        Row.fromSeq(p +: planes.map(_(p)).toVector)): _*)
-    val planesDf = spark.createDataFrame(planeRows, planeSchema)
-    val aggs = planes.indices.map { j =>
-      sum(col("x").cast("double") * col(s"w$j")).as(s"d$j")
-    }
-    df.select(col(idCol), posexplode(checked).as(Seq("pos", "x")))
-      .join(broadcast(planesDf), "pos")
-      .groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
+    graft.functions.VectorFunctions.hyperplaneBuckets(checked, numTables,
+      planesPerTable, dim, seed)
   }
 
   /** Multi-table hyperplane LSH bucket assignments: one (id, table,
     * bucket) row per table — the shared candidate-generation front end
-    * of [[cosineTopKLsh]] and [[Dedup.nearDupEmbeddingLsh]]. Only ids
-    * and two small ints leave this stage; vectors rejoin later for the
-    * candidates alone (the round-2 plan exploded every vector 16x
-    * through the shuffle). Deterministic given `seed`.
+    * of [[cosineTopKLsh]] and the embedding incremental index. One
+    * per-row signature ([[lshSignatures]]) exploded over the tables:
+    * a narrow stage with no shuffle. Deterministic given `seed`.
     */
   def lshBuckets(df: DataFrame, idCol: String, vecCol: String,
       planesPerTable: Int = 4, numTables: Int = 16, dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
-    // flat plane matrix: table t owns dots d[t*m .. t*m+m-1]
-    val allPlanes = (0 until numTables)
-      .flatMap(t => hyperplanes(planesPerTable, dim, seed + t))
-    val tb = (0 until numTables).map { t =>
-      val b = (0 until planesPerTable).map { i =>
-        when(col(s"d${t * planesPerTable + i}") >= 0, lit(1L << i))
-          .otherwise(lit(0L))
-      }.reduce(_ + _)
-      struct(lit(t).as("table"), b.as("bucket"))
-    }
-    planeDots(df, idCol, vecCol, allPlanes)
-      .select(col(idCol), explode(array(tb: _*)).as("tb"))
-      .select(col(idCol), col("tb.table").as("table"),
-        col("tb.bucket").as("bucket"))
-  }
+      seed: Long = 42L): DataFrame =
+    df.select(col(idCol), posexplode(lshSignatures(idCol, vecCol,
+        planesPerTable, numTables, dim, seed)).as(Seq("table", "bucket")))
 
   /** Approximate top-k via multi-table hyperplane LSH: `numTables`
     * independent tables of `planesPerTable` sign bits; candidates are

@@ -63,4 +63,11 @@ package object graftshim {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(df.queryExecution.toRdd, df.schema,
         isStreaming = true)
+
+  /** Blocks until every event posted so far has reached its listeners
+    * (the listener bus is asynchronous; `waitUntilEmpty` is
+    * private[spark]).
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

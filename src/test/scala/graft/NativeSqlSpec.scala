@@ -52,6 +52,64 @@ class NativeSqlSpec extends AnyFunSuite {
       WHERE graft.db.people.id > 1""").as[Long].collect().toSeq == Seq(2L))
   }
 
+  /** Records the path of every read, delegating to local storage. */
+  private final class ReadRecordingIO extends graft.tableformat.FileIO {
+    import graft.tableformat.LocalFileIO
+    val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    override def readString(p: String) = { reads.add(p); LocalFileIO.readString(p) }
+    override def readLines(p: String) = { reads.add(p); LocalFileIO.readLines(p) }
+    override def writeString(p: String, c: String) = LocalFileIO.writeString(p, c)
+    override def exists(p: String) = LocalFileIO.exists(p)
+    override def size(p: String) = LocalFileIO.size(p)
+    override def modifiedMs(p: String) = LocalFileIO.modifiedMs(p)
+    override def delete(p: String) = LocalFileIO.delete(p)
+    override def listDir(d: String) = LocalFileIO.listDir(d)
+    override def listRecursive(d: String) = LocalFileIO.listRecursive(d)
+    override def deleteTree(d: String) = LocalFileIO.deleteTree(d)
+    override def claim(p: String, c: String) = LocalFileIO.claim(p, c)
+    override def replaceAtomic(p: String, c: String) = LocalFileIO.replaceAtomic(p, c)
+    override def copy(s: String, d: String) = LocalFileIO.copy(s, d)
+    override def rename(f: String, t: String) = LocalFileIO.rename(f, t)
+  }
+
+  test("building a native SQL read reads the version hint and the " +
+      "metadata document once, current or VERSION/TIMESTAMP AS OF") {
+    import spark.implicits._
+    val cat = freshCat()
+    val t = cat.createTable("db", "onedoc",
+      Seq("id" -> "long", "v" -> "string"))
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val first = t.meta.currentSnapshot.get
+    t.append(Seq((3L, "c")).toDF("id", "v"))
+    val io = new ReadRecordingIO
+    graft.tableformat.FileIO.install(io)
+    try {
+      // (hint reads, document reads) while spark.sql analyzes `sql`
+      def built(sql: String): ((Int, Int), Seq[String]) = {
+        io.reads.clear()
+        val df = spark.sql(sql)
+        import scala.jdk.CollectionConverters._
+        val rs = io.reads.asScala.toSeq.filter(_.startsWith(t.location))
+        val counts = (rs.count(_.endsWith("version-hint.text")),
+          rs.count(_.endsWith(".metadata.json")))
+        (counts, df.as[String].collect().toSeq.sorted)
+      }
+      val ts = java.time.Instant.ofEpochMilli(first.timestampMs)
+        .atZone(java.time.ZoneOffset.UTC).toLocalDateTime.toString
+        .replace("T", " ")
+      assert(built("SELECT v FROM graft.db.onedoc WHERE id = 3") ==
+        ((1, 1), Seq("c")))
+      assert(built("SELECT v FROM graft.db.onedoc") ==
+        ((1, 1), Seq("a", "b", "c")))
+      assert(built(s"SELECT v FROM graft.db.onedoc VERSION AS OF " +
+        s"${first.snapshotId} WHERE id = 1") == ((1, 1), Seq("a")))
+      assert(built(s"SELECT v FROM graft.db.onedoc VERSION AS OF " +
+        s"${first.snapshotId}") == ((1, 1), Seq("a", "b")))
+      assert(built(s"SELECT v FROM graft.db.onedoc TIMESTAMP AS OF " +
+        s"'$ts' WHERE id > 1") == ((1, 1), Seq("b")))
+    } finally graft.tableformat.FileIO.install(graft.tableformat.LocalFileIO)
+  }
+
   test("native VERSION AS OF and TIMESTAMP AS OF time travel") {
     import spark.implicits._
     val cat = freshCat()

@@ -297,20 +297,111 @@ class PipelineSpec extends AnyFunSuite {
     assert(full == exact, "full-probe IVF must equal exact top-k")
   }
 
-  test("grouped planeDots signs match the per-row lshSignature reference") {
+  test("HyperplaneBuckets equals the per-row lshSignature reference") {
     import spark.implicits._
-    val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 50)
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
+    def rows(df: DataFrame) = df.select("vec_id", "table", "bucket")
+      .as[(Long, Int, Long)].collect().toSet
+    // 8 planes x 64 dims in one table, codegen'd and interpreted
     val planes = Similarity.hyperplanes(8, 64, seed = 7L)
-    val perRow = emb.select(col("vec_id"),
-        Similarity.lshSignature(col("embedding"), planes).as("sig"))
-      .as[(Long, Long)].collect().toMap
-    val sig = (0 until 8).map(j =>
-      when(col(s"d$j") >= 0, lit(1L << j)).otherwise(lit(0L))).reduce(_ + _)
-    val grouped = Similarity.planeDots(emb, "vec_id", "embedding", planes)
-      .select(col("vec_id"), sig.as("sig"))
-      .as[(Long, Long)].collect().toMap
-    assert(grouped == perRow)
-    assert(perRow.nonEmpty)
+    val ref8 = emb.select(col("vec_id"), lit(0).as("table"),
+        Similarity.lshSignature(col("embedding"), planes).as("bucket"))
+    val got8 = () => Similarity.lshBuckets(emb, "vec_id", "embedding",
+      planesPerTable = 8, numTables = 1, seed = 7L)
+    assert(rows(got8()) == rows(ref8))
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(rows(got8()) == rows(ref8))
+    finally interpreted.foreach { case (k, _) => spark.conf.unset(k) }
+    // the default 4 planes x 16 tables: table t hashes with seed 42 + t
+    val ref16 = emb.select(col("vec_id"), posexplode(array((0 until 16).map(t =>
+        Similarity.lshSignature(col("embedding"),
+          Similarity.hyperplanes(4, 64, 42L + t))): _*)).as(Seq("table", "bucket")))
+    val got16 = rows(Similarity.lshBuckets(emb, "vec_id", "embedding"))
+    assert(got16 == rows(ref16))
+    assert(got16.size == 16 * emb.count())
+    assert(got16.map(_._3).size > 8, "buckets must spread over the table")
+  }
+
+  test("lshBuckets: buckets of fixed vectors, a null element adds " +
+      "nothing, wrong-length and null vectors fail") {
+    import spark.implicits._
+    val withNull: Array[java.lang.Float] = Array.tabulate(64)(i =>
+      if (i == 3) null else java.lang.Float.valueOf(0.5f - i * 0.01f))
+    val df = Seq((1L, Array.fill(64)(0.5f).map(java.lang.Float.valueOf)),
+        (2L, Array.fill(63)(java.lang.Float.valueOf(0.5f))), (3L, null),
+        (4L, withNull))
+      .toDF("id", "v")
+    def run(id: Long) = Similarity.lshBuckets(df.filter(col("id") === id),
+      "id", "v").select("table", "bucket").as[(Int, Long)].collect()
+      .sortBy(_._1).map(_._2).toSeq
+    // the buckets the grouped plane-dot form assigned to these vectors
+    assert(run(1L) == Seq(6, 10, 7, 14, 2, 3, 10, 1, 3, 7, 3, 2, 4, 6, 10, 1))
+    assert(run(4L) == Seq(7, 13, 7, 14, 13, 3, 9, 9, 1, 7, 3, 8, 4, 14, 10, 1))
+    val short = intercept[RuntimeException](run(2L))
+    assert(short.getMessage.contains("embedding length != 64: id=2 len=63"),
+      short.getMessage)
+    // size(null) is null under ANSI, so the length guard raises with a
+    // null message
+    val nul = intercept[RuntimeException](run(3L))
+    assert(nul.getMessage.contains("[USER_RAISED_EXCEPTION] null"),
+      nul.getMessage)
+  }
+
+  test("nearDupEmbeddingLsh emits each pair once: equals the " +
+      "bucket-distinct-verify shape on planted clusters") {
+    import spark.implicits._
+    import graft.functions.VectorFunctions.{dotF, safeRatio}
+    // 30 clusters of 3-6 near-copies (noise 0.05 on unit-variance
+    // gaussians: members share most of the 16 tables), 60 loners and
+    // one zero vector
+    val rnd = new scala.util.Random(1234L)
+    def gauss() = Array.fill(64)(rnd.nextGaussian().toFloat)
+    val clustered = (0 until 30).flatMap { c =>
+      val center = gauss()
+      (0 until 3 + rnd.nextInt(4)).map(_ =>
+        center.map(x => x + 0.05f * rnd.nextGaussian().toFloat))
+    }
+    val vecs = clustered ++ Seq.fill(60)(gauss()) :+ Array.fill(64)(0f)
+    val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong * 7 % 1000, v) }
+      .toDF("id", "v")
+    val threshold = 0.3
+    val got = Dedup.nearDupEmbeddingLsh(df, "id", "v", threshold)
+    val pairs = got.collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(pairs.map(p => (p._1, p._2)).distinct.size == pairs.size,
+      "a pair was emitted more than once")
+    // the previous shape: bucket self-join, distinct, vector re-join
+    val b = Similarity.lshBuckets(df, "id", "v")
+    val collisions = b.as("a").join(b.as("b"),
+        col("a.table") === col("b.table") &&
+          col("a.bucket") === col("b.bucket") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id1"), col("b.id").as("id2"))
+    val vn = df.select(col("id"), col("v"),
+      sqrt(dotF(col("v"), col("v"))).as("nrm"))
+    val want = collisions.distinct()
+      .join(vn.select(col("id").as("id1"), col("v").as("va"),
+        col("nrm").as("na")), "id1")
+      .join(vn.select(col("id").as("id2"), col("v").as("vb"),
+        col("nrm").as("nb")), "id2")
+      .select(col("id1"), col("id2"), safeRatio(dotF(col("va"), col("vb")),
+        col("na") * col("nb")).as("sim"))
+      .filter(col("sim") >= threshold)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(pairs.toSet == want)
+    assert(want.size >= 60, s"fixture must plant near-dup pairs: ${want.size}")
+    assert(collisions.count() > 3 * want.size,
+      "fixture pairs must collide in several tables")
+    // one pass: no aggregate or broadcast join; one hash exchange feeds
+    // both self-join sides
+    val plan = got.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("isFinalPlan=true"), plan)
+    assert(!plan.contains("HashAggregate") && !plan.contains("Broadcast"), plan)
+    assert("\\+- Exchange hashpartitioning".r.findAllMatchIn(plan).size == 1,
+      plan)
+    assert("ReusedExchange".r.findAllMatchIn(plan).size == 1, plan)
   }
 
   test("cosine is exact on known vectors") {
@@ -1413,6 +1504,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows.filter(_._1 == 5L).map(_._3).toSeq == Seq(0, 8))
     // zero-shuffle contract: chunking is a scan, not an exchange
     val plan = got.queryExecution.executedPlan.toString
+    println("FINALPLAN\n" + plan)
     assert(!plan.contains("Exchange"), s"chunking must not shuffle:\n$plan")
   }
 
