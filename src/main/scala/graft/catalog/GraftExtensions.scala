@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.engine.GraftTable
+import graft.engine.{GraftTable, KeyDomain}
 import graft.tableformat.MetadataIO
 
 /** Native SQL for graft tables — the Catalyst-extension point
@@ -58,7 +58,7 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
   private def load(db: String, tbl: String): Option[GraftTable] =
     warehouse.map(w => java.nio.file.Paths.get(w, db, tbl).toString)
       .filter(MetadataIO.exists)
-      .map(loc => GraftTable.load(spark, loc))
+      .map(loc => new GraftTable(spark, loc))
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // Aggregate pushdown vs analyzer ordering: a WHERE whose type
@@ -97,10 +97,10 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
       // as the Aggregate deferral above.
       case fl @ org.apache.spark.sql.catalyst.plans.logical.Filter(
           _, jn: org.apache.spark.sql.catalyst.plans.logical.Join)
-          if !fl.resolved && JoinFilePruning.enabled(spark) =>
+          if !fl.resolved && KeyDomain.enabled(spark) =>
         JoinFilePruning.relationsToDefer(jn).foreach(deferred.add)
       case jn: org.apache.spark.sql.catalyst.plans.logical.Join
-          if !jn.resolved && JoinFilePruning.enabled(spark) =>
+          if !jn.resolved && KeyDomain.enabled(spark) =>
         JoinFilePruning.relationsToDefer(jn).foreach(deferred.add)
       case _ => ()
     }
@@ -203,11 +203,11 @@ case class ResolveGraftRelations(spark: SparkSession) extends Rule[LogicalPlan] 
       // ---- Join before the relation cases below swap the children.)
       case fl @ org.apache.spark.sql.catalyst.plans.logical.Filter(
           cond, jn: org.apache.spark.sql.catalyst.plans.logical.Join)
-          if fl.resolved && JoinFilePruning.enabled(spark) =>
+          if fl.resolved && KeyDomain.enabled(spark) =>
         val nj = JoinFilePruning.pruneTree(spark, jn, splitAnd(cond))
         if (nj eq jn) fl else fl.copy(child = nj)
       case jn: org.apache.spark.sql.catalyst.plans.logical.Join
-          if jn.resolved && JoinFilePruning.enabled(spark) =>
+          if jn.resolved && KeyDomain.enabled(spark) =>
         JoinFilePruning.pruneTree(spark, jn, Nil)
 
       // ---- filtered scans: the WHERE condition reaches the engine,

@@ -128,20 +128,23 @@ class GraftNamespaceCatalog extends TableCatalog with SupportsNamespaces
   override def tableExists(ident: Identifier): Boolean =
     location(ident).exists(MetadataIO.exists)
 
+  /** The table at `ident`'s location, built directly: the location's
+    * hint probe here is the existence check `GraftTable.load` would
+    * repeat.
+    */
+  private def existing(ident: Identifier): Option[GraftTable] =
+    location(ident).filter(MetadataIO.exists).map(loc =>
+      new GraftTable(org.apache.spark.sql.SparkSession.active, loc))
+
   private def graftTable(ident: Identifier): GraftTable =
-    location(ident).filter(MetadataIO.exists)
-      .map(loc => GraftTable.load(
-        org.apache.spark.sql.SparkSession.active, loc))
-      .getOrElse(throw new NoSuchTableException(ident))
+    existing(ident).getOrElse(throw new NoSuchTableException(ident))
 
   private def fullName(ident: Identifier): String =
     (catalogName +: ident.namespace() :+ ident.name()).mkString(".")
 
   override def loadTable(ident: Identifier): Table =
-    location(ident).filter(MetadataIO.exists) match {
-      case Some(loc) =>
-        GraftTableHandle(GraftTable.load(
-          org.apache.spark.sql.SparkSession.active, loc), fullName(ident))
+    existing(ident) match {
+      case Some(t) => GraftTableHandle(t, fullName(ident))
       case None =>
         metadataTable(ident).getOrElse(throw new NoSuchTableException(ident))
     }
@@ -165,8 +168,7 @@ class GraftNamespaceCatalog extends TableCatalog with SupportsNamespaces
     else {
       val parent =
         Identifier.of(Array(ident.namespace()(0)), ident.namespace()(1))
-      location(parent).filter(MetadataIO.exists).flatMap { loc =>
-        val t = GraftTable.load(org.apache.spark.sql.SparkSession.active, loc)
+      existing(parent).flatMap { t =>
         val df = ident.name().toLowerCase match {
           case "history"              => Some(t.history)
           case "snapshots"            => Some(t.snapshotsDf)

@@ -8,9 +8,9 @@ import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LogicalPlan, SubqueryAlias}
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{col, max, min}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim
-import graft.engine.GraftTable
+import graft.engine.{GraftTable, KeyDomain}
 import graft.tableformat.{Snapshot, TableMetadata}
 
 /** JOIN-DRIVEN (dynamic) FILE PRUNING — the star-schema scale path.
@@ -28,9 +28,10 @@ import graft.tableformat.{Snapshot, TableMetadata}
   * against graft manifests: when one join side is a graft scan (the
   * probe) and the other side is provably small from ITS manifest stats
   * (the build), the build side's join-key domain is evaluated with one
-  * tiny Spark job — the distinct key set when it fits [[maxKeys]], the
-  * min/max range otherwise — and fed into the probe's file planning as
-  * a synthetic `key IN (...)` / `lo <= key <= hi` predicate.
+  * tiny Spark job ([[KeyDomain]]: the distinct key set when it fits
+  * `maxKeys`, the min/max range otherwise) and fed into the probe's
+  * file planning as a synthetic `key IN (...)` / `lo <= key <= hi`
+  * predicate.
   * `bucket(N, key)` layouts prune by the IN-set's hashes, clustered /
   * identity layouts by bounds; either way the probe's file list
   * collapses BEFORE the scan plan is built, manifest-level veto
@@ -54,13 +55,9 @@ import graft.tableformat.{Snapshot, TableMetadata}
   * and full joins are never pruned.
   *
   * Cost control: the build side's FILTERED manifest row estimate must
-  * be at most [[maxBuildRows]] and the probe estimate must exceed it
-  * by [[ratio]] — a self-join (the dedup shape) or dim-dim join never
-  * pays the evaluation job. Config:
-  *   spark.graft.dynamicPruning.enabled       (default true)
-  *   spark.graft.dynamicPruning.maxBuildRows  (default 100000)
-  *   spark.graft.dynamicPruning.maxKeys       (default 1000)
-  *   spark.graft.dynamicPruning.ratio         (default 4)
+  * be at most `maxBuildRows` and the probe estimate must exceed it by
+  * [[KeyDomain.Ratio]] — a self-join (the dedup shape) or dim-dim join
+  * never pays the evaluation job. Settings: see [[KeyDomain]].
   */
 private[graft] object JoinFilePruning {
 
@@ -76,14 +73,6 @@ private[graft] object JoinFilePruning {
     * which copies tags.
     */
   private val Attempted = TreeNodeTag[Boolean]("graft.joinPruneAttempted")
-
-  private def confBool(spark: SparkSession, key: String, d: Boolean): Boolean =
-    spark.conf.getOption(key).map(_.toBoolean).getOrElse(d)
-  private def confLong(spark: SparkSession, key: String, d: Long): Long =
-    spark.conf.getOption(key).map(_.toLong).getOrElse(d)
-
-  private[graft] def enabled(spark: SparkSession): Boolean =
-    confBool(spark, "spark.graft.dynamicPruning.enabled", d = true)
 
   /** A join side the rule understands: a graft scan — unswapped
     * relation or tagged engine read — under any stack of aliases,
@@ -146,8 +135,8 @@ private[graft] object JoinFilePruning {
         // the evaluated key domain stay exact — the common
         // `JOIN (SELECT DISTINCT k FROM dim WHERE ...)` build. The
         // manifest row estimate stays PRE-distinct, an overestimate
-        // that can only refuse, and swapProbe's own `.distinct()`
-        // makes the evaluation value-identical to the subquery's.
+        // that can only refuse, and the domain evaluation's own
+        // distinct makes it value-identical to the subquery's.
         case d: org.apache.spark.sql.catalyst.plans.logical.Distinct =>
           graftSideOf(d.child)
         case agg: org.apache.spark.sql.catalyst.plans.logical.Aggregate
@@ -293,7 +282,7 @@ private[graft] object JoinFilePruning {
     */
   private def pruneJoin(spark: SparkSession, j: Join,
       outer: Seq[Expression]): Option[Join] = {
-    if (!enabled(spark)) return None
+    if (!KeyDomain.enabled(spark)) return None
     val cond = j.condition.getOrElse(return None)
     val (canPruneLeft, canPruneRight) = j.joinType match {
       case Inner      => (true, true)
@@ -335,8 +324,7 @@ private[graft] object JoinFilePruning {
         whereUsable.filter(e => e.references.subsetOf(out) &&
           (!nullSupplying || nullIntolerant(e, out)))
 
-    val maxBuildRows = confLong(spark, "spark.graft.dynamicPruning.maxBuildRows", 100000L)
-    val ratio = confLong(spark, "spark.graft.dynamicPruning.ratio", 4L)
+    val maxBuildRows = KeyDomain.maxBuildRows(spark)
 
     def estimate(s: GraftSide, conj: Seq[Expression]): Long = {
       val total = s.snap.summary.get("total-records").flatMap(_.toLongOption)
@@ -384,18 +372,17 @@ private[graft] object JoinFilePruning {
           // its KEY DOMAIN is provably tiny (sampled admission below);
           // the ratio gate applies per-path (sampled embeds its own)
           if smallBuild || sampledDomainFits(spark, build, buildConj,
-            buildKeys, probeEst, ratio, maxBuildRows)
-          if !smallBuild || probeEst >= ratio * math.max(buildEst, 1L)
+            buildKeys, probeEst, maxBuildRows)
+          if !smallBuild || probeEst >= KeyDomain.Ratio * math.max(buildEst, 1L)
           swapped <- swapProbe(spark, probe, Some(build), buildPlan,
             probeKeys, buildKeys, buildConj, probeConj, probePlan)
         } yield swapped
         // plain build: any EXECUTABLE resolved subtree with no
         // unswapped graft handle — a VALUES list, an in-memory lookup
-        // frame — size-gated on its logical stats (products through
-        // joins inflate past the gate, which is exactly right)
+        // frame — gated on determinism and its logical size estimate
+        // (products through joins inflate past the gate, which is
+        // exactly right)
         def viaPlain: Option[LogicalPlan] = {
-          val maxBytes = confLong(spark,
-            "spark.graft.dynamicPruning.maxBuildBytes", 8L << 20)
           // a STREAMING build side cannot be evaluated with a batch
           // collect (stream-static joins are legal and must analyze
           // untouched — the domain only exists per micro-batch)
@@ -405,8 +392,8 @@ private[graft] object JoinFilePruning {
               r.table.isInstanceOf[GraftTableHandle]
             case _ => false
           }) None
-          else if (graftshim.dfFromPlan(spark, buildPlan)
-            .queryExecution.optimizedPlan.stats.sizeInBytes > maxBytes) None
+          else if (!KeyDomain.evaluable(graftshim.dfFromPlan(spark, buildPlan),
+            KeyDomain.MaxBuildBytes)) None
           else if (!buildKeys.forall(buildPlan.outputSet.contains)) None
           // a single-file probe can't benefit — skip the job
           else if (probe.snap.summary.get("total-data-files")
@@ -436,8 +423,7 @@ private[graft] object JoinFilePruning {
     * the 10M-row dim whose filter leaves 3 distinct join keys. One
     * cheap `approx_count_distinct` pass over the filtered build gates
     * the exact domain evaluation; the pass itself is bounded by the
-    * manifest byte estimate
-    * (`spark.graft.dynamicPruning.maxSampledBuildBytes`, default
+    * manifest byte estimate ([[KeyDomain.MaxSampledBuildBytes]],
     * 256 MB — the same ceiling subquery evaluation uses) and by
     * requiring the probe to dwarf `maxBuildRows` (collapsing a small
     * probe cannot pay for two passes over a big build; this also keeps
@@ -448,16 +434,12 @@ private[graft] object JoinFilePruning {
     */
   private def sampledDomainFits(spark: SparkSession, build: GraftSide,
       buildConj: Seq[Expression], buildKeys: Seq[AttributeReference],
-      probeEst: Long, ratio: Long, maxBuildRows: Long): Boolean = {
-    if (!confBool(spark, "spark.graft.dynamicPruning.sampledBuild", d = true))
-      return false
-    if (probeEst < ratio * maxBuildRows) return false
-    val maxBytes = confLong(spark,
-      "spark.graft.dynamicPruning.maxSampledBuildBytes", 256L << 20)
+      probeEst: Long, maxBuildRows: Long): Boolean = {
+    if (!KeyDomain.sampledBuild(spark)) return false
+    if (probeEst < KeyDomain.Ratio * maxBuildRows) return false
     val bytes = build.table.candidatesFor(build.m, build.snap.files,
       andAll(build.base.toSeq ++ buildConj)).map(_.fileSizeBytes).sum
-    if (bytes > maxBytes) return false
-    val maxKeys = confLong(spark, "spark.graft.dynamicPruning.maxKeys", 1000L)
+    if (bytes > KeyDomain.MaxSampledBuildBytes) return false
     try {
       // the sampling job's result is an immutable fact about a pinned
       // snapshot — cache it so repeated analyses of the same join
@@ -479,7 +461,7 @@ private[graft] object JoinFilePruning {
           org.apache.spark.sql.functions.approx_count_distinct(key))
           .head().getLong(0))
       })
-      approx <= maxKeys
+      approx <= KeyDomain.maxKeys(spark)
     } catch { case scala.util.control.NonFatal(_) => false }
   }
 
@@ -501,8 +483,7 @@ private[graft] object JoinFilePruning {
       probeKeys: Seq[AttributeReference],
       buildKeys: Seq[AttributeReference], buildConj: Seq[Expression],
       probeConj: Seq[Expression], probePlan: LogicalPlan): Option[LogicalPlan] = {
-    val maxKeys = confLong(spark, "spark.graft.dynamicPruning.maxKeys", 1000L).toInt
-    val (buildDf0, keyCols) = build match {
+    val (buildDf, keyCols) = build match {
       case Some(b) =>
         // buildConj arrives scan-translated (name-based) — it
         // re-resolves against the fresh engine read
@@ -517,34 +498,12 @@ private[graft] object JoinFilePruning {
         buildConj.foreach(e => df = df.filter(graftshim.columnOf(e)))
         (df, buildKeys.map(k => graftshim.columnOf(k)))
     }
-    val probeCols = probeKeys.map(p =>
-      UnresolvedAttribute.quoted(probe.scanColumn(p).get))
-    // NULL keys never equi-match — drop before distinct so an all-null
-    // dim batch yields the empty domain (probe prunes to zero files)
-    val nonNull = keyCols.foldLeft(buildDf0)((d, c) => d.filter(c.isNotNull))
-    val rows = nonNull.select(keyCols: _*).distinct().limit(maxKeys + 1).collect()
-    val domain: Seq[Expression] =
-      if (rows.length <= maxKeys) {
-        lastBuildKeys.set(rows.length.toLong)
-        probeCols.zip(probeKeys).zipWithIndex.map { case ((pc, pk), i) =>
-          val vs = rows.map(_.get(i)).distinct.toSeq
-          In(pc, vs.map(v => Literal.create(v, pk.dataType)))
-        }
-      } else {
-        // domain too wide for an IN-set: one agg job for per-key
-        // min/max, pruned as a closed range (clustered layouts still
-        // collapse; bucket layouts simply keep their files)
-        lastBuildKeys.set(-1L)
-        val aggs = keyCols.zipWithIndex.flatMap { case (c, i) =>
-          Seq(min(c).as(s"_lo$i"), max(c).as(s"_hi$i")) }
-        val r = nonNull.agg(aggs.head, aggs.tail: _*).collect()(0)
-        probeCols.zip(probeKeys).zipWithIndex.map { case ((pc, pk), i) =>
-          if (r.isNullAt(2 * i)) In(pc, Nil) // empty build: prune all
-          else And(
-            GreaterThanOrEqual(pc, Literal.create(r.get(2 * i), pk.dataType)),
-            LessThanOrEqual(pc, Literal.create(r.get(2 * i + 1), pk.dataType)))
-        }
-      }
+    // literals take the probe key's type
+    val evaluated = KeyDomain.of(buildDf.select(keyCols: _*),
+      probeKeys.map(p => (UnresolvedAttribute.quoted(probe.scanColumn(p).get),
+        p.dataType)))
+    lastBuildKeys.set(evaluated.keys)
+    val domain = evaluated.conjuncts
     // the domain is retained by NOTHING above the swapped scan (only
     // the join itself implies it) — hand it to the read as a residual
     // DATA filter so parquet skips row groups inside kept files too;

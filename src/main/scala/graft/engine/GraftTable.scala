@@ -366,32 +366,24 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * file-level pruning. Sound by the same argument as the file veto:
     * every conjunct here is implied by the caller's own predicate or
     * join, so rows it removes could never reach the output. Guards: a
-    * conjunct is re-applied only when deterministic, subquery-free,
-    * resolvable by NAME against the current schema, and with IN-sets
-    * no wider than spark.graft.dynamicPruning.residualMaxIn (default
-    * 1000 — still a pushable parquet predicate; wider domains skip the
-    * residual rather than bloat every task). Any analysis failure
-    * falls back to the unfiltered read — pruning must never introduce
-    * a failure mode.
+    * conjunct is re-applied only when deterministic, subquery-free and
+    * resolvable by NAME against the current schema. Its IN-sets come
+    * from [[KeyDomain.of]], so they are at most `maxKeys` wide — still a
+    * pushable parquet predicate. Any analysis failure falls back to the
+    * unfiltered read — pruning must never introduce a failure mode.
     */
   private def applyResidual(m: TableMetadata, base: DataFrame,
       conjs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : DataFrame = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{And => CAnd,
-      AttributeReference, Expression => CExpr, In => CIn,
-      Literal => CLit, SubqueryExpression}
+      AttributeReference, Expression => CExpr, Literal => CLit,
+      SubqueryExpression}
     if (conjs.isEmpty) return base
-    // toIntOption, not toInt: a malformed conf value must degrade to
-    // the default, not fail every pruned read (the no-failure contract)
-    val maxIn = spark.conf
-      .getOption("spark.graft.dynamicPruning.residualMaxIn")
-      .flatMap(_.toIntOption).getOrElse(1000)
     val colNames = m.currentSchema.fields.map(_.name).toSet
     def usable(e: CExpr): Boolean =
       e.deterministic && e != CLit.TrueLiteral &&
-        !e.exists(_.isInstanceOf[SubqueryExpression]) &&
-        !e.exists { case i: CIn => i.list.size > maxIn; case _ => false }
+        !e.exists(_.isInstanceOf[SubqueryExpression])
     def byName(e: CExpr): Option[CExpr] = {
       var ok = true
       val named = e.transform {
@@ -2458,42 +2450,29 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   }
 
   /** Source-key file pruning for [[merge]]: evaluate the SOURCE's
-    * equi-join key domain (distinct IN-set up to
-    * `spark.graft.dynamicPruning.maxKeys`, min/max range past it) with
-    * one small job and prune the target's file list through the same
-    * partition-transform + manifest-bounds machinery reads use — a
+    * equi-join key domain ([[KeyDomain.of]]: distinct IN-set up to
+    * `maxKeys`, min/max range past it) with one small job and prune
+    * the target's file list through the same partition-transform +
+    * manifest-bounds machinery reads use — a
     * bucket(N, key) fact keeps only the batch's buckets, a
     * key-clustered fact only the overlapping ranges. Inclusive
     * pruning keeps every file that could hold a matching key, so the
     * caller's tagged join (matches, cardinality gate, inserts) is
     * value-identical on the kept slice. Bails to the full list
     * (never wrong, just unpruned) when: pruning is disabled; the
-    * source plan is nondeterministic (its key domain could differ
-    * between this evaluation and the join's own — rather refuse than
-    * risk it) or estimated above
-    * `spark.graft.dynamicPruning.maxMergeSourceBytes` (default 256 MB
-    * — the extra distinct pass must stay cheap relative to the scan
-    * it saves); or no ON conjunct is a bare target-column = source-
-    * column equality attributable by name.
+    * source fails [[KeyDomain.evaluable]] (nondeterministic, or
+    * estimated above [[KeyDomain.MaxMergeSourceBytes]], 256 MB); or no
+    * ON conjunct is a bare target-column = source-column equality
+    * attributable by name.
     */
   private def mergeSourceCandidates(m: TableMetadata,
       files: Vector[DataFileEntry], source: DataFrame, on: Column,
       targetAlias: Option[String]): Vector[DataFileEntry] = {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo, Expression => CExpr, GreaterThanOrEqual => CGte, In => CIn, LessThanOrEqual => CLte, Literal => CLit}
-    def confL(k: String, d: Long): Long =
-      spark.conf.getOption(k).map(_.toLong).getOrElse(d)
-    if (files.size <= 1) return files
-    if (!spark.conf.getOption("spark.graft.dynamicPruning.enabled")
-        .forall(_.toBoolean)) return files
-    val analyzed = source.queryExecution.analyzed
-    if (analyzed.exists(p => p.expressions.exists(e => !e.deterministic)))
-      return files
-    val maxBytes =
-      confL("spark.graft.dynamicPruning.maxMergeSourceBytes", 256L << 20)
-    if (source.queryExecution.optimizedPlan.stats.sizeInBytes > maxBytes)
-      return files
-    val srcOut = analyzed.outputSet
+    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo, Expression => CExpr, Literal => CLit}
+    if (files.size <= 1 || !KeyDomain.enabled(spark) ||
+      !KeyDomain.evaluable(source, KeyDomain.MaxMergeSourceBytes)) return files
+    val srcOut = source.queryExecution.analyzed.outputSet
     val cur = m.currentSchema
     def srcColOf(n: String): Option[String] =
       source.columns.find(_ == n).orElse(
@@ -2552,32 +2531,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         }
       }
     if (pairs.isEmpty) return files
-    val maxKeys = confL("spark.graft.dynamicPruning.maxKeys", 1000L).toInt
-    // NULL keys never equi-match: drop them so an all-NULL batch
-    // yields the empty domain (every file prunes; the merge becomes
-    // insert-only, which is exactly its semantics)
-    val nonNull = pairs.map(_._2).foldLeft(source)((d, c) =>
-      d.filter(c.isNotNull))
-    val sel = nonNull.select(pairs.map(_._2): _*)
-    val keyTypes = sel.schema.fields.map(_.dataType)
-    val rows = sel.distinct().limit(maxKeys + 1).collect()
-    val tgtAttrs = pairs.map(p => UnresolvedAttribute.quoted(p._1))
-    val domain: Seq[CExpr] =
-      if (rows.length <= maxKeys)
-        tgtAttrs.zipWithIndex.map { case (tn, i) =>
-          CIn(tn, rows.map(_.get(i)).distinct.toSeq
-            .map(v => CLit.create(v, keyTypes(i))))
-        }
-      else {
-        val aggs = pairs.zipWithIndex.flatMap { case ((_, c), i) =>
-          Seq(min(c).as(s"_lo$i"), max(c).as(s"_hi$i")) }
-        val r = nonNull.agg(aggs.head, aggs.tail: _*).collect()(0)
-        tgtAttrs.zipWithIndex.map { case (tn, i) =>
-          if (r.isNullAt(2 * i)) CIn(tn, Nil)
-          else CAnd(CGte(tn, CLit.create(r.get(2 * i), keyTypes(i))),
-            CLte(tn, CLit.create(r.get(2 * i + 1), keyTypes(i))))
-        }
-      }
+    // an all-NULL batch yields the empty domain: every file prunes and
+    // the merge becomes insert-only, which is exactly its semantics
+    val keys = source.select(pairs.map(_._2): _*)
+    val domain = KeyDomain.of(keys, pairs.map(p =>
+      UnresolvedAttribute.quoted(p._1)).zip(keys.schema.map(_.dataType))).conjuncts
     pruneCandidates(m, files,
       domain.reduceOption(CAnd.apply).getOrElse(CLit.TrueLiteral))
   }

@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.functions.{col, max, min}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim
 
 /** SUBQUERY-DOMAIN file pruning: predicates whose selective half lives
@@ -15,8 +15,8 @@ import org.apache.spark.sql.graftshim
   * a top-level conjunct is `attr IN (uncorrelated small subquery)` or
   * `attr <cmp> (uncorrelated small scalar subquery)`, the subquery is
   * evaluated ONCE with a small job and the resulting literal domain
-  * (IN-set up to `spark.graft.dynamicPruning.maxKeys`, min/max range
-  * past it; the evaluated literal for scalars) is ANDed into the
+  * ([[KeyDomain.of]]: IN-set up to `maxKeys`, min/max range past it;
+  * the evaluated literal for scalars) is ANDed into the
   * pruning expression — the ORIGINAL predicate still executes, so
   * correctness never depends on this (inclusive pruning only drops
   * files that provably hold no qualifying row).
@@ -32,50 +32,28 @@ import org.apache.spark.sql.graftshim
   *     left untouched (refuse rather than risk: a nondeterministic
   *     domain could differ between this evaluation and the filter's
   *     own, and a large one would cost more to evaluate than it
-  *     saves — `spark.graft.dynamicPruning.maxSubqueryBytes`,
-  *     default 256 MB);
+  *     saves — [[KeyDomain.MaxSubqueryBytes]], 256 MB);
   *   - ANY evaluation failure falls back to no augmentation (pruning
   *     is an optimization; it must never introduce a new failure mode
   *     into DML or reads).
   */
 private[graft] object SubqueryPruning {
 
-  /** Test hook: extra pruning conjuncts produced by the most recent
-    * [[augment]] call that produced any.
-    */
-  private[graft] val lastAugmented =
-    new java.util.concurrent.atomic.AtomicLong(-1L)
-
   /** The condition with evaluated subquery domains ANDed in — for
-    * PRUNING ONLY; callers keep executing the original predicate.
-    */
-  def augment(spark: SparkSession, cond: Expression): Expression =
-    augmentSplit(spark, cond)._1
-
-  /** [[augment]] with the evaluated extra conjuncts ALSO returned on
-    * their own: the read path re-applies exactly those as residual
-    * DATA filters on the kept files' scans (the original predicate's
-    * conjuncts are already retained by the caller — re-applying them
-    * would only double row-level evaluation).
+    * PRUNING ONLY; callers keep executing the original predicate — and
+    * the evaluated extra conjuncts on their own: the read path
+    * re-applies exactly those as residual DATA filters on the kept
+    * files' scans (the original predicate's conjuncts are already
+    * retained by the caller — re-applying them would only double
+    * row-level evaluation).
     */
   def augmentSplit(spark: SparkSession,
       cond: Expression): (Expression, Seq[Expression]) = {
     val extra =
       try conjunctsFor(spark, cond)
       catch { case scala.util.control.NonFatal(_) => Nil }
-    if (extra.isEmpty) (cond, Nil)
-    else {
-      lastAugmented.set(extra.size.toLong)
-      (extra.foldLeft(cond)(And(_, _)), extra)
-    }
+    (extra.foldLeft(cond)(And(_, _)), extra)
   }
-
-  private def confL(spark: SparkSession, k: String, d: Long): Long =
-    spark.conf.getOption(k).map(_.toLong).getOrElse(d)
-
-  private def enabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.dynamicPruning.enabled")
-      .forall(_.toBoolean)
 
   // top-level conjuncts only: a subquery under OR/NOT has no sound
   // per-conjunct pruning form. Column-DSL conditions arrive
@@ -94,7 +72,7 @@ private[graft] object SubqueryPruning {
 
   private def conjunctsFor(spark: SparkSession,
       cond: Expression): Seq[Expression] = {
-    if (!enabled(spark)) return Nil
+    if (!KeyDomain.enabled(spark)) return Nil
     // fast bail: no subqueries anywhere
     if (!cond.exists(_.isInstanceOf[SubqueryExpression])) return Nil
     conjuncts(cond).flatMap {
@@ -197,27 +175,8 @@ private[graft] object SubqueryPruning {
       else org.apache.spark.sql.catalyst.plans.logical.Filter(
         rest.reduce(And), f.child))
     val df = graftshim.dfFromPlan(spark, inner)
-    if (!evaluable(spark, df)) return Nil
-    val maxKeys = confL(spark, "spark.graft.dynamicPruning.maxKeys", 1000L).toInt
-    val cols = df.columns.map(n => col(s"`$n`")).toSeq
-    val nonNull = cols.foldLeft(df)((d, c) => d.filter(c.isNotNull))
-    val rows = nonNull.select(cols: _*).distinct().limit(maxKeys + 1).collect()
-    if (rows.length <= maxKeys)
-      pairs.map(_._1).zipWithIndex.map { case (a, i) =>
-        In(a, rows.toSeq.map(r =>
-          Literal.create(r.get(i), df.schema(i).dataType)).distinct)
-      }
-    else {
-      val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
-        Seq(min(c).as(s"_lo$i"), max(c).as(s"_hi$i")) }
-      val r = nonNull.agg(aggs.head, aggs.tail: _*).collect()(0)
-      pairs.map(_._1).zipWithIndex.map { case (a, i) =>
-        if (r.isNullAt(2 * i)) In(a, Nil)
-        else And(
-          GreaterThanOrEqual(a, Literal.create(r.get(2 * i), df.schema(i).dataType)),
-          LessThanOrEqual(a, Literal.create(r.get(2 * i + 1), df.schema(i).dataType)))
-      }
-    }
+    if (!evaluable(df)) return Nil
+    KeyDomain.of(df, pairs.map(_._1).zip(df.schema.map(_.dataType))).conjuncts
   }
 
   /** Count OuterReference nodes anywhere in the plan, INCLUDING inside
@@ -288,40 +247,22 @@ private[graft] object SubqueryPruning {
   private def tryEval(body: => Seq[Expression]): Seq[Expression] =
     try body catch { case scala.util.control.NonFatal(_) => Nil }
 
-  /** Plan gates shared by both shapes: deterministic, size-bounded. */
-  private def evaluable(spark: SparkSession,
-      df: org.apache.spark.sql.DataFrame): Boolean = {
-    val maxBytes =
-      confL(spark, "spark.graft.dynamicPruning.maxSubqueryBytes", 256L << 20)
-    !df.queryExecution.analyzed.exists(p =>
-      p.expressions.exists(e => !e.deterministic)) &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBytes
-  }
+  private def evaluable(df: org.apache.spark.sql.DataFrame): Boolean =
+    KeyDomain.evaluable(df, KeyDomain.MaxSubqueryBytes)
 
   private def inDomain(spark: SparkSession, a: Expression,
       l: ListQuery): Seq[Expression] = {
     val df = graftshim.dfFromPlan(spark, l.plan)
-    if (!evaluable(spark, df)) return Nil
-    val maxKeys = confL(spark, "spark.graft.dynamicPruning.maxKeys", 1000L).toInt
-    val c = col(s"`${df.columns.head}`")
-    val dt = df.schema.head.dataType
-    val nonNull = df.filter(c.isNotNull)
-    val rows = nonNull.select(c).distinct().limit(maxKeys + 1).collect()
-    if (rows.length <= maxKeys)
-      Seq(In(a, rows.toSeq.map(r => Literal.create(r.get(0), dt))))
-    else {
-      val r = nonNull.agg(min(c).as("_lo"), max(c).as("_hi")).collect()(0)
-      if (r.isNullAt(0)) Seq(In(a, Nil))
-      else Seq(And(GreaterThanOrEqual(a, Literal.create(r.get(0), dt)),
-        LessThanOrEqual(a, Literal.create(r.get(1), dt))))
-    }
+    if (!evaluable(df)) return Nil
+    KeyDomain.of(df.select(col(s"`${df.columns.head}`")),
+      Seq(a -> df.schema.head.dataType)).conjuncts
   }
 
   private def scalarCmp(spark: SparkSession, a: Expression,
       s: ScalarSubquery,
       cmp: (Expression, Expression) => Expression): Seq[Expression] = {
     val df = graftshim.dfFromPlan(spark, s.plan)
-    if (!evaluable(spark, df)) return Nil
+    if (!evaluable(df)) return Nil
     val rows = df.limit(2).collect()
     // >1 row is a runtime error the real execution will raise — don't
     // preempt it here; 0 rows / NULL value makes the comparison

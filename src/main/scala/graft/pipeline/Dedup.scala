@@ -44,22 +44,31 @@ object Dedup {
       .agg(min(struct(col(idCol), col(textCol))).as("__r"))
       .select(col(s"__r.$idCol").as(idCol), col(s"__r.$textCol").as(textCol))
 
+  /** Estimated-size cap of a batch-side relation the incremental
+    * operators broadcast: past it they fall back to a shuffle, or skip
+    * the broadcast pre-filter, rather than die on the 8 GB broadcast
+    * hard cap or an executor OOM.
+    */
+  private[graft] val MaxBroadcastBytes: Long = 512L << 20
+
+  /** `df`'s scan partition count ESTIMATED from logical-plan stats
+    * (file bytes / maxPartitionBytes) — never `.rdd`, which forces
+    * physical planning and under AQE can eagerly run upstream shuffle
+    * stages that the real query then recomputes. Unknown-size sources
+    * (stats = default huge) estimate high.
+    */
+  private def estParts(df: DataFrame): BigInt =
+    df.queryExecution.optimizedPlan.stats.sizeInBytes /
+      df.sparkSession.sessionState.conf.filesMaxPartitionBytes + 1
+
   /** Round-robin repartition to full parallelism — ONLY when the scan
-    * would plan fewer partitions than cores (small-file artifact).
-    * Partition count is ESTIMATED from logical-plan stats (file bytes /
-    * maxPartitionBytes) — never `.rdd`, which forces physical planning
-    * and under AQE can eagerly run upstream shuffle stages that the
-    * real query then recomputes. Explicit numPartitions, so AQE never
-    * coalesces it back; unknown-size sources (stats = default huge)
-    * estimate high and are left untouched.
+    * would plan fewer partitions than cores (small-file artifact; see
+    * [[estParts]]). Explicit numPartitions, so AQE never coalesces it
+    * back; unknown-size sources are left untouched.
     */
   private[graft] def spread(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
-    val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
-    val estParts =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes / maxPB + 1
-    if (estParts < p) df.repartition(p) else df
+    val p = df.sparkSession.sparkContext.defaultParallelism
+    if (estParts(df) < p) df.repartition(p) else df
   }
 
   /** True when `df`'s estimated size already spans at least core-count
@@ -74,26 +83,26 @@ object Dedup {
     * large win once history outgrows the batch (any real scale: the
     * full-index exchange this removes is O(corpus) per batch).
     */
-  private[graft] def atScale(df: DataFrame): Boolean = {
-    val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
-    val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
-    df.queryExecution.optimizedPlan.stats.sizeInBytes / maxPB + 1 >= p
-  }
+  private[graft] def atScale(df: DataFrame): Boolean =
+    estParts(df) >= df.sparkSession.sparkContext.defaultParallelism
 
   /** `rel` pre-filtered to the touched slice — a broadcast LEFT SEMI
     * against the (batch-bounded) `keys` relation on `joinCols` — when
-    * the [[atScale]] gate says the filter pays; `rel` unchanged
-    * otherwise. Output-preserving wherever rows of `rel` outside
-    * `keys` cannot affect the result (the incremental operators'
-    * probes all have this property).
+    * the [[atScale]] gate says the filter pays and the key set
+    * estimates at most `maxBroadcastBytes`; `rel` unchanged otherwise.
+    * Output-preserving wherever rows of `rel` outside `keys` cannot
+    * affect the result (the incremental operators' probes all have
+    * this property), so either branch gives the same rows.
     */
-  private def touchedSlice(rel: DataFrame, keys: DataFrame,
-      joinCols: Seq[String]): DataFrame =
-    if (atScale(rel))
-      rel.join(broadcast(keys.select(joinCols.map(col): _*).distinct()),
-        joinCols, "left_semi")
+  private[graft] def touchedSlice(rel: DataFrame, keys: DataFrame,
+      joinCols: Seq[String],
+      maxBroadcastBytes: Long = MaxBroadcastBytes): DataFrame = {
+    lazy val touched = keys.select(joinCols.map(col): _*).distinct()
+    if (atScale(rel) &&
+        touched.queryExecution.optimizedPlan.stats.sizeInBytes <= maxBroadcastBytes)
+      rel.join(broadcast(touched), joinCols, "left_semi")
     else rel
+  }
 
   /** COMPLETE near-dup pairs by exact n-gram Jaccard >= threshold.
     *
@@ -396,7 +405,7 @@ object Dedup {
   def nearDupEmbeddingLsh(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, planesPerTable: Int = 4, numTables: Int = 16,
       dim: Int = 64, seed: Long = 42L): DataFrame = {
-    val v = spread(df.select(col(idCol).as("id"), col(vecCol).as("v")))
+    val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .select(col("id"), col("v"), sqrt(dotF(col("v"), col("v"))).as("nrm"),
         Similarity.lshSignatures("id", "v", planesPerTable, numTables, dim,
           seed).as("sig"))
@@ -702,10 +711,9 @@ object Dedup {
     // exchange for 963k candidates at sf0.1. Broadcasting bVec is the
     // operator's own contract (the BATCH is the bounded side; history
     // streams as SMJ, never broadcast) — but the contract is now also
-    // ENFORCED by a stats gate rather than assumed (r19 advice): a
-    // batch whose vector relation estimates past 512 MB falls back to
-    // the SMJ attach instead of dying on the 8 GB broadcast hard cap
-    // or an executor OOM.
+    // ENFORCED by a stats gate rather than assumed: a batch whose
+    // vector relation estimates past MaxBroadcastBytes falls back to
+    // the SMJ attach.
     val bVecJ = bVec.select(col("id").as("id1"),
       col("v").as("va"), col("nrm").as("na"))
     val withVb = cand
@@ -713,7 +721,7 @@ object Dedup {
         col("nrm").as("nb")), "id2")
     val paired =
       if (bVecJ.queryExecution.optimizedPlan.stats.sizeInBytes <=
-          (512L << 20))
+          MaxBroadcastBytes)
         withVb.join(broadcast(bVecJ), "id1")
       else withVb.join(bVecJ.hint("SHUFFLE_MERGE"), "id1")
     paired

@@ -740,4 +740,75 @@ class JoinPruningSpec extends AnyFunSuite {
     assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
       (20 until 30).map(_.toLong).filter(i => i % 4 <= 1))
   }
+
+  test("malformed dynamicPruning settings read as their defaults: a " +
+      "pruned join, a subquery DELETE and a MERGE return the default rows") {
+    import spark.implicits._
+    import graft.engine.{MergeUpdateClause, MergeInsertValuesClause}
+    // (join rows, join prune events, fact rows after the DELETE, fact
+    // rows after the MERGE), each on a fresh star fixture
+    def run(): (Seq[(Long, Long)], Long, Seq[(Long, Long)], Seq[(Long, Long)]) = {
+      val (_, fact, _) = starFixture()
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      resetHooks()
+      val joined = rows(spark.sql("""
+        SELECT f.id, f.v FROM graft.db.fact f JOIN graft.db.dim d
+        ON f.id = d.id WHERE d.tag = 't3'"""))
+      val events = JoinFilePruning.pruneEvents.get()
+      spark.sql("""DELETE FROM graft.db.fact
+        WHERE id IN (SELECT id FROM graft.db.dim WHERE tag = 't5')""")
+      val deleted = rows(fact.read())
+      fact.merge(Seq((205L, 1L), (206L, 2L), (9000L, 3L)).toDF("sid", "sv"),
+        col("id") === col("sid"),
+        matched = Seq(MergeUpdateClause(None, Map("v" -> col("sv")))),
+        notMatched = Seq(MergeInsertValuesClause(None,
+          Map("id" -> col("sid"), "v" -> col("sv")))))
+      (joined, events, deleted, rows(fact.read()))
+    }
+    val default = run()
+    assert(default._1.size == 10 && default._2 == 1L)
+    assert(default._3.size == 790 && default._4.size == 791)
+    for ((k, bad) <- Seq("enabled" -> "yes", "maxKeys" -> "abc",
+        "maxBuildRows" -> "abc", "sampledBuild" -> "yes")) {
+      val key = s"spark.graft.dynamicPruning.$k"
+      spark.conf.set(key, bad)
+      try assert(run() == default, s"$key=$bad")
+      finally spark.conf.unset(key)
+    }
+  }
+
+  test("subquery domains past maxKeys prune by the min/max range: " +
+      "IN (SELECT ..) and correlated EXISTS") {
+    import spark.implicits._
+    val cat = freshCat()
+    val t = cat.createTable("db", "rgfact", Seq("id" -> "long", "v" -> "long"))
+    (0 until 8).foreach { b =>
+      t.append((b * 100 until (b + 1) * 100).map(i =>
+        (i.toLong, i.toLong)).toDF("id", "v").coalesce(1))
+    }
+    // three keys in batches 2 and 4: the IN-set would plan those 2
+    // files, the range 205-410 plans batches 2, 3 and 4
+    cat.createTable("db", "rgdim", Seq("k" -> "long"))
+      .append(Seq(205L, 207L, 410L).toDF("k").coalesce(1))
+    val queries = Seq(
+      """SELECT id, v FROM graft.db.rgfact
+         WHERE id IN (SELECT k FROM graft.db.rgdim)""",
+      """SELECT id, v FROM graft.db.rgfact f
+         WHERE EXISTS (SELECT 1 FROM graft.db.rgdim d WHERE d.k = f.id)""")
+    def rows(q: String) = spark.sql(q).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    for (q <- queries) {
+      spark.conf.set("spark.graft.dynamicPruning.enabled", "false")
+      val plain = try rows(q)
+        finally spark.conf.set("spark.graft.dynamicPruning.enabled", "true")
+      assert(plain == Seq((205L, 205L), (207L, 207L), (410L, 410L)))
+      spark.conf.set("spark.graft.dynamicPruning.maxKeys", "2")
+      try {
+        GraftTable.lastPrunedReadFiles.set(-1L)
+        assert(rows(q) == plain, q)
+        assert(GraftTable.lastPrunedReadFiles.get() == 3L, q)
+      } finally spark.conf.unset("spark.graft.dynamicPruning.maxKeys")
+    }
+  }
 }

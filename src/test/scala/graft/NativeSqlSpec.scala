@@ -52,14 +52,17 @@ class NativeSqlSpec extends AnyFunSuite {
       WHERE graft.db.people.id > 1""").as[Long].collect().toSeq == Seq(2L))
   }
 
-  /** Records the path of every read, delegating to local storage. */
+  /** Records the path of every read and existence probe, delegating
+    * to local storage.
+    */
   private final class ReadRecordingIO extends graft.tableformat.FileIO {
     import graft.tableformat.LocalFileIO
     val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val probes = new java.util.concurrent.ConcurrentLinkedQueue[String]
     override def readString(p: String) = { reads.add(p); LocalFileIO.readString(p) }
     override def readLines(p: String) = { reads.add(p); LocalFileIO.readLines(p) }
     override def writeString(p: String, c: String) = LocalFileIO.writeString(p, c)
-    override def exists(p: String) = LocalFileIO.exists(p)
+    override def exists(p: String) = { probes.add(p); LocalFileIO.exists(p) }
     override def size(p: String) = LocalFileIO.size(p)
     override def modifiedMs(p: String) = LocalFileIO.modifiedMs(p)
     override def delete(p: String) = LocalFileIO.delete(p)
@@ -84,29 +87,41 @@ class NativeSqlSpec extends AnyFunSuite {
     val io = new ReadRecordingIO
     graft.tableformat.FileIO.install(io)
     try {
-      // (hint reads, document reads) while spark.sql analyzes `sql`
-      def built(sql: String): ((Int, Int), Seq[String]) = {
+      import scala.jdk.CollectionConverters._
+      def hintProbes(): Int = io.probes.asScala.count(_.endsWith("version-hint.text"))
+      // (hint reads, document reads, hint existence probes) while
+      // spark.sql analyzes `sql`: the catalog's probe, then the
+      // document read's
+      def built(sql: String): ((Int, Int, Int), Seq[String]) = {
         io.reads.clear()
+        io.probes.clear()
         val df = spark.sql(sql)
-        import scala.jdk.CollectionConverters._
         val rs = io.reads.asScala.toSeq.filter(_.startsWith(t.location))
         val counts = (rs.count(_.endsWith("version-hint.text")),
-          rs.count(_.endsWith(".metadata.json")))
+          rs.count(_.endsWith(".metadata.json")), hintProbes())
         (counts, df.as[String].collect().toSeq.sorted)
       }
       val ts = java.time.Instant.ofEpochMilli(first.timestampMs)
         .atZone(java.time.ZoneOffset.UTC).toLocalDateTime.toString
         .replace("T", " ")
       assert(built("SELECT v FROM graft.db.onedoc WHERE id = 3") ==
-        ((1, 1), Seq("c")))
+        ((1, 1, 2), Seq("c")))
       assert(built("SELECT v FROM graft.db.onedoc") ==
-        ((1, 1), Seq("a", "b", "c")))
+        ((1, 1, 2), Seq("a", "b", "c")))
       assert(built(s"SELECT v FROM graft.db.onedoc VERSION AS OF " +
-        s"${first.snapshotId} WHERE id = 1") == ((1, 1), Seq("a")))
+        s"${first.snapshotId} WHERE id = 1") == ((1, 1, 2), Seq("a")))
       assert(built(s"SELECT v FROM graft.db.onedoc VERSION AS OF " +
-        s"${first.snapshotId}") == ((1, 1), Seq("a", "b")))
+        s"${first.snapshotId}") == ((1, 1, 2), Seq("a", "b")))
       assert(built(s"SELECT v FROM graft.db.onedoc TIMESTAMP AS OF " +
-        s"'$ts' WHERE id > 1") == ((1, 1), Seq("b")))
+        s"'$ts' WHERE id > 1") == ((1, 1, 2), Seq("b")))
+      // a missing table: one probe, then NoSuchTableException
+      io.probes.clear()
+      val graftCat = spark.sessionState.catalogManager.catalog("graft")
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+      intercept[org.apache.spark.sql.catalyst.analysis.NoSuchTableException](
+        graftCat.loadTable(org.apache.spark.sql.connector.catalog
+          .Identifier.of(Array("db"), "nosuch")))
+      assert(hintProbes() == 1)
     } finally graft.tableformat.FileIO.install(graft.tableformat.LocalFileIO)
   }
 

@@ -58,6 +58,31 @@ class PipelineSpec extends AnyFunSuite {
     Seq(shut, open)
   }
 
+  test("touchedSlice: a key set estimated past the broadcast cap " +
+      "leaves the relation unfiltered, and a probe on the keys gets the " +
+      "gated path's rows") {
+    import spark.implicits._
+    val rel = (0L until 2000L).map(i => (i % 50, i)).toDF("k", "x")
+    val keys = Seq(3L, 7L, 7L, 11L).toDF("k")
+    assert(keys.queryExecution.optimizedPlan.stats.sizeInBytes > 0)
+    // a one-byte split size puts `rel` at scale while the frames are
+    // built; restored before either runs
+    val key = "spark.sql.files.maxPartitionBytes"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    val (gated, capped) =
+      try (Dedup.touchedSlice(rel, keys, Seq("k")),
+        Dedup.touchedSlice(rel, keys, Seq("k"), maxBroadcastBytes = 0L))
+      finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    def semis(d: DataFrame) =
+      "LeftSemi".r.findAllMatchIn(d.queryExecution.optimizedPlan.toString).size
+    assert(semis(gated) == 1, gated.queryExecution.optimizedPlan)
+    assert(capped eq rel)
+    def probe(d: DataFrame) = keys.distinct().join(d, Seq("k"))
+      .as[(Long, Long)].collect().toSeq.sorted
+    assert(probe(capped) == probe(gated) && probe(gated).size == 120)
+  }
+
   test("exact dedup groups identical content, keeps min id") {
     import spark.implicits._
     val df = Seq((1L, "a b c"), (2L, "a b c"), (3L, "x y"), (4L, "x y"),
