@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.sql.graftshim
@@ -166,6 +166,64 @@ case class WordShingleHashes(child: Expression, k: Int)
     copy(child = newChild)
 }
 
+/** 64-bit SimHash fingerprint of one document's token array as ONE
+  * native expression: equal, bit for bit, to
+  * `TextFunctions.simhash(toks)`, i.e. `simhashOfHashes` over
+  * `transform(toks, xxhash64)` (pinned per row in PipelineSpec). Each
+  * token is hashed with `XXH64.hashUTF8String(_, 42L)`, the evaluation
+  * of the built-in `xxhash64(string)`; a null token hashes to the seed,
+  * as `xxhash64(null)` does. Bit j is set when `2 * votes_j >
+  * tokenCount`, where votes_j counts the tokens whose hash has bit j
+  * set: the composed form's "sum of +-1 votes > 0".
+  *
+  * A null or empty array yields null (the composed form yields 0): a
+  * document without tokens has no fingerprint, so it can never pair.
+  *
+  * Why it exists: the composed form runs 64 interpreted `aggregate`
+  * passes per row, and an explode + 64-column grouped vote sum costs
+  * an aggregate exchange. This is one loop per row; it is
+  * CodegenFallback (one boxed call per row), which is noise next to
+  * the n token hashes and 64 bit-votes per token.
+  */
+case class SimhashFingerprint(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+
+  override def checkInputDataTypes()
+      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+    child.dataType match {
+      case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires an array<string> input, got ${t.simpleString}")
+    }
+  }
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "simhash_fingerprint"
+  override def nullable: Boolean = true
+
+  override protected def nullSafeEval(input: Any): Any = {
+    val a = input.asInstanceOf[ArrayData]
+    val n = a.numElements()
+    if (n == 0) return null
+    val ones = new Array[Int](64)
+    var i = 0
+    while (i < n) {
+      val h = if (a.isNullAt(i)) 42L else XXH64.hashUTF8String(a.getUTF8String(i), 42L)
+      var j = 0
+      while (j < 64) { ones(j) += ((h >>> j) & 1L).toInt; j += 1 }
+      i += 1
+    }
+    var fp = 0L
+    var j = 0
+    while (j < 64) { if (2 * ones(j) > n) fp |= 1L << j; j += 1 }
+    fp
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SimhashFingerprint =
+    copy(child = newChild)
+}
+
 /** ALL word n-grams for n = 1..maxK of a text column, NON-distinct, as
   * ONE native expression — the language-model feature multiset (DSIR
   * counts occurrences, so dedup would change the model). Output order
@@ -264,4 +322,11 @@ object ShingleExpressions {
     */
   def wordShingleHashes(text: Column, k: Int): Column =
     graftshim.columnOf(WordShingleHashes(graftshim.expressionOf(text), k))
+
+  /** Column API: the 64-bit SimHash fingerprint of a token array —
+    * equal to `TextFunctions.simhash(toks)`, null for a null or empty
+    * array; one pass per row.
+    */
+  def simhashFingerprint(toks: Column): Column =
+    graftshim.columnOf(SimhashFingerprint(graftshim.expressionOf(toks)))
 }

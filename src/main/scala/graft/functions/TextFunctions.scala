@@ -169,9 +169,10 @@ object TextFunctions {
   /** Same, over a materialized token-hash column. NOTE: this per-row
     * form runs 64 interpreted `aggregate` passes (higher-order
     * functions are CodegenFallback) — it exists as the independent
-    * reference implementation for tests; the corpus-scale path is the
-    * grouped one inside Dedup.nearDupSimhash, pinned bit-identical to
-    * this in PipelineSpec.
+    * reference implementation for tests; Dedup.nearDupSimhash uses the
+    * native one-loop [[ShingleExpressions.simhashFingerprint]], pinned
+    * bit-identical to this in PipelineSpec (except that a token-less
+    * row fingerprints to null there and to 0 here).
     */
   def simhashOfHashes(hashes: Column): Column = {
     val bits = (0 until 64).map { j =>

@@ -524,9 +524,10 @@ object Curation {
     // the raw corpus is feature-hashed TWICE (model count + probe) —
     // examined and deliberately kept in r20: inserting a shared
     // `repartition(id)` exchange between the two consumers was
-    // measured at runtime (graft.Profile) to NOT stage-reuse — AQE's
-    // stage cache fails to canonicalize across the two aggregate-
-    // topped consumers (the same limitation documented on the capped
+    // measured at runtime (the per-operator SQL metrics graft.Plans
+    // dumps) to NOT stage-reuse — AQE's stage cache fails to
+    // canonicalize across the two aggregate-topped consumers (the same
+    // limitation documented on the capped
     // Jaccard index, Dedup.nearDupJaccard), so the plan paid the full
     // feature exchange twice ON TOP of both hash passes. The
     // recompute-over-share status quo is also the at-scale call: the

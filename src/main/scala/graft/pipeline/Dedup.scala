@@ -16,10 +16,11 @@ import graft.functions.TextFunctions._
   * every doc) are the one hazard, handled by `maxShingleDf` document-
   * frequency capping plus AQE skew splitting. A pair that shares
   * several buckets is deduplicated before verification: with a
-  * `distinct` on the text paths, and on the embedding LSH path by
-  * emitting it only in its first shared table, which the per-row
-  * signature carried through the bucket exchange decides inside the
-  * join ([[nearDupEmbeddingLsh]]).
+  * `distinct` on the MinHash and incremental paths, and on the
+  * embedding LSH and SimHash paths by emitting it only in its first
+  * shared table or chunk, which the per-row signature or fingerprint
+  * carried through the bucket exchange decides inside the join
+  * ([[nearDupEmbeddingLsh]], [[nearDupSimhash]]).
   */
 object Dedup {
 
@@ -432,64 +433,44 @@ object Dedup {
     * one of four 16-bit chunks (pigeonhole-complete for hamming <= 3),
     * verified by exact hamming distance. Candidate join is chunk-value
     * bucketed.
+    *
+    * One pass: each row's fingerprint is computed once by the native
+    * [[graft.functions.SimhashFingerprint]] (equal to
+    * `TextFunctions.simhash`) and rides through the ONE (chunk, value)
+    * exchange that feeds both sides of the pinned-SMJ self-join (the
+    * second side reuses it). A pair that shares several chunks is
+    * emitted only in the lowest chunk where the two fingerprints agree,
+    * so each pair appears exactly once with no `distinct`. Rows without
+    * tokens have no fingerprint, so every chunk value is null and the
+    * join on `value` drops them. Each row is fingerprinted on its own,
+    * so `idCol` should be unique: two rows with one id that both match
+    * a third row emit that pair twice.
     */
   def nearDupSimhash(docs: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucketSize: Option[Int] = None): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3, "chunk scheme is complete only for hamming <= 3")
-    // one codegen'd pass (same reasoning as minhashSignaturesGrouped):
-    // exploded token hashes -> 64 per-bit vote sums in a single
-    // map-side-combined groupBy; bit j of the fingerprint is the
-    // majority vote 2*s_j > count  (== sum of +-1 votes > 0), exactly
-    // TextFunctions.simhashOfHashes — pinned bit-identical to it in
-    // PipelineSpec's brute-force comparison
-    val hashed = spread(docs)
-      .select(col(idCol).as("id"), explode(tokens(col(textCol))).as("t"))
-      .select(col("id"), xxhash64(col("t")).as("h"))
-    val voteSums = (0 until 64).map(j =>
-      sum(shiftright(col("h"), j).bitwiseAND(lit(1L))).as(s"s$j"))
-    val fpExpr = (0 until 64).map(j =>
-      when(col(s"s$j") * 2 > col("cnt"), lit(1L << j)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    val fps = hashed.groupBy("id")
-      .agg(count(lit(1)).as("cnt"), voteSums: _*)
-      .select(col("id"), fpExpr.as("fp"))
-    // pinned SMJ like the Jaccard/MinHash self-joins, so AQE's strategy
-    // choice can't flap on the skewed 16-bit chunk key. Honest plan
-    // note: unlike the uncapped Jaccard index (ReusedExchange,
-    // PlanSpec-asserted) and the MinHash pipeline (3 reuses), AQE does
-    // NOT stage-reuse this subtree between the self-join sides — the
-    // nested fingerprint aggregation under the top distinct defeats the
-    // stage cache (same limitation documented for the capped index
-    // above), so the vote-sum agg runs once per side. Fingerprints are
-    // one narrow row per doc; the recompute is bounded and parallel,
-    // and the repartition still pins the join's partitioning.
-    val chunks0 = fps.select(col("id"), col("fp"),
-        explode(simhashChunks(col("fp"))).as("c"))
-      .select(col("id"), col("fp"), col("c.chunk").as("chunk"),
-        col("c.value").as("value"))
-      .repartition(col("chunk"), col("value"))
-    // same bucket-size cap as nearDupMinhashLsh: identical pages share
-    // a fingerprint, so one (chunk, value) bucket holds the whole
-    // cluster in all four chunks. NOTE the cap trades away the
-    // hamming <= 3 completeness guarantee for the capped clusters —
-    // callers wanting the pigeonhole proof leave it None.
-    val chunks1 = maxBucketSize match {
-      case Some(cap) =>
-        val big = chunks0.groupBy(col("chunk"), col("value"))
-          .agg(count(lit(1)).as("bs"))
-          .filter(col("bs") > cap).select("chunk", "value")
-        chunks0.join(big.hint("SHUFFLE_MERGE"),
-          Seq("chunk", "value"), "left_anti")
-      case None => chunks0
-    }
-    val chunks = chunks1.hint("SHUFFLE_MERGE")
+    // the fingerprint leaves the explode as a generator output, so the
+    // isnotnull(fp) that the optimizer infers from the join condition
+    // stays above the explode; on a projected fp it would be pushed
+    // below, as a second kernel evaluation per row
+    val chunks = docs
+      .select(col(idCol).as("id"), posexplode(array_repeat(
+          graft.functions.ShingleExpressions.simhashFingerprint(
+            tokens(col(textCol))), 4)).as(Seq("chunk", "fp")))
+      .withColumn("value", call_function("shiftright", col("fp"),
+        col("chunk") * 16).bitwiseAND(lit(0xffffL)))
+      .repartition(col("chunk"), col("value")).hint("SHUFFLE_MERGE")
+    // lowest chunk in which the two fingerprints agree (the join keys
+    // guarantee one exists)
+    val diff = col("a.fp").bitwiseXOR(col("b.fp"))
+    val firstShared = coalesce((0 until 4).map(c =>
+      when(shiftright(diff, c * 16).bitwiseAND(lit(0xffffL)) === 0L, lit(c))): _*)
     chunks.as("a").join(chunks.as("b"),
         col("a.chunk") === col("b.chunk") && col("a.value") === col("b.value") &&
-          col("a.id") < col("b.id"))
+          col("a.id") < col("b.id") && col("a.chunk") === firstShared &&
+          hamming(col("a.fp"), col("b.fp")) <= maxHamming)
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
         hamming(col("a.fp"), col("b.fp")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
   }
 
   /** Incremental exact dedup — the production shape: dedup a NEW batch

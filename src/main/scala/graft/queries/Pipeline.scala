@@ -1245,7 +1245,8 @@ object Pipeline {
       (s, d) => {
         // r20 note: a call-site shared exchange (q144/q147's Finding-4
         // shape, `.repartition(col("doc_id"))` on f) was tried and
-        // REVERTED — graft.Profile showed the runtime plan did NOT
+        // REVERTED — the executed plan's per-operator SQL metrics (as
+        // graft.Plans dumps them) showed the runtime plan did NOT
         // stage-reuse it (the prefix-aggregate consumer and the join
         // consumer each re-planned their own copy of the exchange, so
         // the tokenize+quality chain still ran twice plus the new

@@ -234,10 +234,110 @@ class PipelineSpec extends AnyFunSuite {
         TextFunctions.hamming(col("a.fp"), col("b.fp")).as("h"))
       .filter(col("h") <= 3)
       .as[(Long, Long, Long)].collect().map(t => (t._1, t._2)).toSet
-    val banded = Dedup.nearDupSimhash(corpus, "doc_id", "text", maxHamming = 3)
-      .select("id1", "id2").as[(Long, Long)].collect().toSet
+    val bandedRows = Dedup.nearDupSimhash(corpus, "doc_id", "text", maxHamming = 3)
+      .select("id1", "id2").as[(Long, Long)].collect()
+    val banded = bandedRows.toSet
+    assert(bandedRows.length == banded.size, "a pair was emitted more than once")
     assert(banded == brute, s"banded=${banded.size} brute=${brute.size}")
     assert(brute.nonEmpty, "fixture must contain simhash near-dups")
+  }
+
+  test("SimhashFingerprint equals the simhashOfHashes reference per row; " +
+      "null and empty token arrays have no fingerprint") {
+    import spark.implicits._
+    import graft.functions.ShingleExpressions.simhashFingerprint
+    val docs = Tables.documents(spark, "/root/testdata/sf0.01")
+    val toks = TextFunctions.tokens(col("text"))
+    // the repartition keeps the optimizer from folding the projection
+    // over the local rows, so it runs like the corpus' does
+    val fixed = Seq((1, Seq("graft")), (2, Seq("the", "quick", "brown", "fox", "the")),
+        (3, Seq("a", null, "b")), (4, Seq.empty[String]), (5, null))
+      .toDF("k", "toks").repartition(2)
+    val rows = docs.select(simhashFingerprint(toks).as("fp"),
+        TextFunctions.simhash(toks).as("ref"))
+      .as[(Long, Long)].collect()
+    assert(rows.length == 500)
+    rows.foreach { case (fp, ref) => assert(fp == ref, s"$fp != $ref") }
+    assert(rows.map(_._1).distinct.length > 490, "fingerprints must spread")
+    val got = fixed.select(col("k"), simhashFingerprint(col("toks")))
+      .collect().map(r => r.getInt(0) -> Option(r.get(1))).toMap
+    // the composed reference's values at the parent (a one-token array
+    // is that token's xxhash64, -4815631219266125053 for "graft"; a
+    // null token hashes to the seed); it gives 0 for 4 and 5
+    assert(got == Map(1 -> Some(-4815631219266125053L),
+      2 -> Some(-7592950307366065958L), 3 -> Some(-9205289395534126902L),
+      4 -> None, 5 -> None))
+  }
+
+  test("nearDupSimhash emits each pair once: equals the " +
+      "chunk-join-distinct shape on planted clusters") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    import org.apache.spark.unsafe.types.UTF8String
+    val rnd = new scala.util.Random(4321L)
+    def doc() = Vector.fill(30 + rnd.nextInt(31))(s"w${rnd.nextInt(200)}")
+    def fp(d: Seq[String]): Long = {
+      val hs = d.map(t => XXH64.hashUTF8String(UTF8String.fromString(t), 42L))
+      (0 until 64).foldLeft(0L) { (f, j) =>
+        if (2 * hs.count(h => ((h >>> j) & 1L) == 1L) > d.size) f | (1L << j) else f
+      }
+    }
+    // 10 clusters of 2-4 identical copies (they share all four chunks),
+    // 15 clusters of a base and 2-3 one-token edits at hamming 1-3, 60
+    // loners, and two texts without tokens
+    val identical = (0 until 10).flatMap { _ =>
+      val d = doc(); Seq.fill(2 + rnd.nextInt(3))(d)
+    }
+    val near = (0 until 15).flatMap { _ =>
+      val base = doc()
+      val edits = Iterator.fill(500)(
+          base.updated(rnd.nextInt(base.size), s"w${rnd.nextInt(200)}"))
+        .filter(e => (1 to 3).contains(java.lang.Long.bitCount(fp(e) ^ fp(base))))
+        .take(2 + rnd.nextInt(2)).toSeq
+      base +: edits
+    }
+    val texts = (identical ++ near ++ Seq.fill(60)(doc())).map(_.mkString(" ")) ++
+      Seq("", " \t ")
+    // an RDD source, so the optimizer cannot fold the fingerprint
+    // projection over local rows and the plan shows where it runs
+    val df = spark.sparkContext.parallelize(
+        texts.zipWithIndex.map { case (t, i) => (i.toLong * 7 % 1009, t) }, 2)
+      .toDF("id", "text")
+    val got = Dedup.nearDupSimhash(df, "id", "text")
+    val rows = got.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(got.count() == got.distinct().count(), "a pair was emitted more than once")
+    // the previous shape: per-row reference fingerprints of the rows
+    // with tokens, chunk self-join, distinct, hamming filter
+    val toks = TextFunctions.tokens(col("text"))
+    val fps = df.filter(size(toks) > 0)
+      .select(col("id"), TextFunctions.simhash(toks).as("fp"))
+    val ch = fps.select(col("id"), col("fp"),
+        explode(TextFunctions.simhashChunks(col("fp"))).as("c"))
+      .select(col("id"), col("fp"), col("c.chunk").as("chunk"),
+        col("c.value").as("value"))
+    val collisions = ch.as("a").join(ch.as("b"),
+        col("a.chunk") === col("b.chunk") && col("a.value") === col("b.value") &&
+          col("a.id") < col("b.id"))
+      .select(col("a.id").as("id1"), col("b.id").as("id2"),
+        TextFunctions.hamming(col("a.fp"), col("b.fp")).as("hamming"))
+    val want = collisions.distinct().filter(col("hamming") <= 3)
+      .as[(Long, Long, Int)].collect().toSet
+    assert(rows == want)
+    assert(want.map(_._3) == Set(0, 1, 2, 3),
+      s"fixture must plant pairs at hamming 0-3: ${want.map(_._3)}")
+    assert(collisions.count() > want.size + 50,
+      "fixture pairs must collide in several chunks")
+    // one pass: each row is fingerprinted once; no aggregate or
+    // round-robin; one hash exchange feeds both self-join sides
+    val plan = got.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(plan.contains("isFinalPlan=true"), plan)
+    assert(!plan.contains("HashAggregate") &&
+      !plan.contains("RoundRobinPartitioning"), plan)
+    assert("\\+- Exchange hashpartitioning".r.findAllMatchIn(plan).size == 1,
+      plan)
+    assert("ReusedExchange".r.findAllMatchIn(plan).size == 1, plan)
+    assert("simhash_fingerprint\\(".r.findAllMatchIn(plan).size == 1, plan)
   }
 
   test("embedding near-dup LSH: subset of exact pairs, high recall") {
