@@ -119,27 +119,8 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * history sits above the chosen instant lifts the WHOLE set's
     * instant past it ([[SharedInstant]]), never just its own stamp.
     */
-  def transactOps(ops: Seq[TxOp]): Seq[Int] = {
-    require(ops.nonEmpty, "empty transaction")
-    val staged = ops.map {
-      case Tx.Append(t, df)       => t -> t.stageAppend(df)
-      case Tx.Delete(t, cond)     => t -> t.stageDelete(cond)
-      case Tx.Update(t, cond, as) => t -> t.stageUpdate(cond, as)
-      case Tx.Merge(t, src, on, m, nm, nms, al) =>
-        t -> t.stageMerge(src, on, m, nm, nms, al)
-    }
-    val floor = new java.util.concurrent.atomic.AtomicLong(0L)
-    val sharedTs = new java.util.concurrent.atomic.AtomicLong(0L)
-    SharedInstant.withFloorRetries(floor) { () =>
-      MetadataIO.commitAll(staged.zipWithIndex.map { case ((t, f), i) =>
-        t.location -> ((cur: graft.tableformat.TableMetadata) => {
-          if (i == 0) sharedTs.set(SharedInstant.stampAbove(floor))
-          if (staged.size > 1) SharedInstant.check(cur, sharedTs.get)
-          f(cur, sharedTs.get)
-        })
-      })
-    }
-  }
+  def transactOps(ops: Seq[TxOp]): Seq[Int] =
+    transactBody(None, ops).get
 
   /** Exactly-once MULTI-TABLE publish — the streaming `foreachBatch`
     * shape: append every table's batch AND record
@@ -167,12 +148,23 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     * ops were committed.
     */
   def transactOpsIfNewMarker(markerKey: String, markerValue: Long,
-      ops: Seq[TxOp]): Boolean = {
+      ops: Seq[TxOp]): Boolean =
+    transactBody(Some(markerKey -> markerValue), ops).isDefined
+
+  /** The one body of [[transactOps]] and [[transactOpsIfNewMarker]]:
+    * stage every op (its files are written now), then claim every
+    * table's next version in one atomic set under one shared
+    * timestamp. With a `marker`, every table also records it, and the
+    * result is None — nothing staged, nothing committed — when any
+    * table already holds it at or past its value.
+    */
+  private def transactBody(marker: Option[(String, Long)],
+      ops: Seq[TxOp]): Option[Seq[Int]] = {
     require(ops.nonEmpty, "empty transaction")
     def seen(m: graft.tableformat.TableMetadata): Boolean =
-      m.properties.get(markerKey).exists(_.toLong >= markerValue)
+      marker.exists(GraftTable.markerSeen(m, _))
     // common replay path: skip before staging writes anything
-    if (ops.exists(o => seen(o.table.meta))) return false
+    if (marker.isDefined && ops.exists(o => seen(o.table.meta))) return None
     val staged = ops.map {
       case Tx.Append(t, df)       => t -> t.stageAppend(df)
       case Tx.Delete(t, cond)     => t -> t.stageDelete(cond)
@@ -183,21 +175,20 @@ final class GraftCatalog(val spark: SparkSession, val warehouse: String) {
     val floor = new java.util.concurrent.atomic.AtomicLong(0L)
     val sharedTs = new java.util.concurrent.atomic.AtomicLong(0L)
     final class SeenMarker extends RuntimeException
-    try {
-      SharedInstant.withFloorRetries(floor) { () =>
-        MetadataIO.commitAll(staged.zipWithIndex.map { case ((t, f), i) =>
-          t.location -> ((cur: graft.tableformat.TableMetadata) => {
-            if (seen(cur)) throw new SeenMarker // a racer published it
-            if (i == 0) sharedTs.set(SharedInstant.stampAbove(floor))
-            if (staged.size > 1) SharedInstant.check(cur, sharedTs.get)
-            val next = f(cur, sharedTs.get)
-            next.copy(properties =
-              next.properties + (markerKey -> markerValue.toString))
-          })
+    try Some(SharedInstant.withFloorRetries(floor) { () =>
+      MetadataIO.commitAll(staged.zipWithIndex.map { case ((t, f), i) =>
+        t.location -> ((cur: graft.tableformat.TableMetadata) => {
+          if (seen(cur)) throw new SeenMarker // a racer published it
+          if (i == 0) sharedTs.set(SharedInstant.stampAbove(floor))
+          if (staged.size > 1) SharedInstant.check(cur, sharedTs.get)
+          val next = f(cur, sharedTs.get)
+          marker.fold(next) { case (k, v) =>
+            next.copy(properties = next.properties + (k -> v.toString))
+          }
         })
-      }
-      true
-    } catch { case _: SeenMarker => false }
+      })
+    })
+    catch { case _: SeenMarker => None }
   }
 
   /** [[transact]] for arbitrary metadata transforms (DDL, property

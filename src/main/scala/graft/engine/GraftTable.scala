@@ -31,6 +31,7 @@ import DeletionVectors.relDataPathStr
   *     metadata filter (O(#files), no I/O).
   */
 final class GraftTable(val spark: SparkSession, val location: String) {
+  import GraftTable.{FileSets, RowPlan}
 
   def meta: TableMetadata = MetadataIO.read(location)
 
@@ -1227,30 +1228,22 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private[graft] def stageAppend(df: DataFrame,
       base: Option[TableMetadata] = None)
       : (TableMetadata, Long) => TableMetadata = {
-    val written = writeFiles(base.getOrElse(meta), df)
-    (cur: TableMetadata, sharedTs: Long) =>
-      withSnapshot(cur, "append",
-        cur.currentSnapshot.map(_.files).getOrElse(Vector.empty) ++ written,
-        cur.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty),
-        tsHint = Some(sharedTs))
+    val m = base.getOrElse(meta)
+    val written = writeFiles(m, df)
+    stagePlan(RowPlan(m, "append", written, Some(appended(written))),
+      revalidate = false)
   }
 
-  /** Stage a row-level DELETE without committing (copy-on-write
-    * rewrite, or a positional delete file on merge-on-read tables —
-    * [[stageMorDml]]) — the DML half of
+  /** Stage a row-level DELETE without committing — the DML half of
     * multi-table transactions ([[graft.catalog.GraftCatalog.transactOps]]):
     * a dedup sweep that removes corpus rows must retract the matching
     * fingerprint-index rows ATOMICALLY, or a concurrent reader joins a
-    * shrunken corpus against a stale index. The rewrite (survivor files
-    * of every touched file) is computed and WRITTEN now against the
-    * current snapshot; the returned transform produces the new snapshot
-    * referencing the rewritten files. Same conflict contract as
-    * [[commitSnapshot]]'s rewrite path: the transform re-validates that
-    * the snapshot it rewrote is STILL current and aborts the whole
-    * transaction loudly otherwise — rebasing a rewrite would silently
-    * drop a racing writer's rows.
-    */
-  /** `base`/`revalidate` are the CHAINING seam: a transaction staging a
+    * shrunken corpus against a stale index. The plan is [[delete]]'s own
+    * ([[planDelete]]): its files are WRITTEN now, against the planning
+    * base, and [[stagePlan]] publishes them in the transaction's claim
+    * set.
+    *
+    * `base`/`revalidate` are the CHAINING seam: a transaction staging a
     * SECOND statement on the same table plans it against the chain's
     * PREVIEW metadata (the prior transforms applied to the validated
     * base) and skips the base-snapshot re-validation — the chain's
@@ -1261,120 +1254,84 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     */
   private[graft] def stageDelete(cond: Column,
       base: Option[TableMetadata] = None, revalidate: Boolean = true)
-      : (TableMetadata, Long) => TableMetadata = {
-    val m = base.getOrElse(meta)
-    if (deleteMode(m) == "merge-on-read")
-      stageMorDml(m, cond, None, "delete", revalidate)
-    else stageRewrite(m, cond, "delete", identity, revalidate)
-  }
+      : (TableMetadata, Long) => TableMetadata =
+    stagePlan(planDelete(base.getOrElse(meta), cond), revalidate)
 
   /** Staged UPDATE — see [[stageDelete]]. */
   private[graft] def stageUpdate(cond: Column,
       assignments: Map[String, Column],
       base: Option[TableMetadata] = None, revalidate: Boolean = true)
-      : (TableMetadata, Long) => TableMetadata = {
-    val m = base.getOrElse(meta)
-    if (updateMode(m) == "merge-on-read")
-      stageMorDml(m, cond, Some(assignments), "overwrite", revalidate)
-    else stageRewrite(m, cond, "overwrite",
-      df => applyAssignments(df, Some(cond), assignments), revalidate)
+      : (TableMetadata, Long) => TableMetadata =
+    stagePlan(planUpdate(base.getOrElse(meta), cond, assignments), revalidate)
+
+  /** A transaction's transform for a [[RowPlan]]: the snapshot
+    * [[commitPlan]] would commit, stamped with the transaction's shared
+    * timestamp. Same conflict contract as [[commitSnapshot]]: with
+    * `revalidate`, a base snapshot that moved before the claim aborts
+    * the whole transaction loudly ([[requireBase]]). A plan that
+    * matched nothing still commits an unchanged-files snapshot, so
+    * every table in a transaction gets exactly one snapshot with the
+    * shared timestamp — transaction-consistent time travel stays
+    * probe-proof.
+    */
+  private def stagePlan(p: RowPlan, revalidate: Boolean)
+      : (TableMetadata, Long) => TableMetadata =
+    (cur: TableMetadata, sharedTs: Long) => {
+      if (revalidate) requireBase(cur, p.base, p.op)
+      val (fs, ds) = p.next.fold((filesOf(cur), deletesOf(cur)))(_(cur))
+      withSnapshot(cur, p.op, fs, ds, tsHint = Some(sharedTs))
+    }
+
+  /** Commit a [[RowPlan]] now, re-validating its base
+    * ([[commitSnapshot]]); a plan that matched nothing commits nothing.
+    */
+  private def commitPlan(p: RowPlan): GraftTable = {
+    p.next.foreach(commitSnapshot(Some(p.base), p.op, p.written)(_))
+    this
   }
 
-  /** Staged MERGE-ON-READ DML — the transactional form of
-    * [[mergeOnReadDml]]: the positional delete file (and, for UPDATE,
-    * the appended copies) are WRITTEN NOW against the base snapshot,
-    * and the returned transform publishes them in the transaction's
-    * one claim set. The conflict contract is CoW's in mechanism and
-    * stricter by necessity: the delete file names (path, pos) pairs of
-    * the base snapshot's files, so ANY concurrent commit aborts the
-    * transaction — a racer's compaction would orphan the positions,
-    * and its own row-level DML could hide different rows at the same
-    * positions. A no-match DML still commits an unchanged snapshot for
-    * the shared-timestamp alignment, like [[stageRewrite]].
+  /** The copy-on-write plan of DELETE/UPDATE: metadata stats pruning
+    * narrows to candidate files; one predicate-pushed scan over ONLY
+    * those finds the files actually containing matching rows; only
+    * those are rewritten (minus deleted / with updated rows); all other
+    * files carry over untouched.
     */
-  private def stageMorDml(m: TableMetadata, cond: Column,
-      assignments: Option[Map[String, Column]], op: String,
-      revalidate: Boolean): (TableMetadata, Long) => TableMetadata = {
-    val baseId = m.currentSnapshotId
-    val staged = m.currentSnapshot.flatMap(morDmlFiles(m, _, cond, assignments))
-    (cur: TableMetadata, sharedTs: Long) => {
-      if (revalidate && cur.currentSnapshotId != baseId)
-        throw new ConcurrentCommitException(
-          s"concurrent commit: snapshot advanced from $baseId to " +
-            s"${cur.currentSnapshotId} during staged merge-on-read $op " +
-            s"of $location — re-run the transaction")
-      val curFiles = cur.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-      val curDels =
-        cur.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-      staged match {
-        case None =>
-          withSnapshot(cur, op, curFiles, curDels, tsHint = Some(sharedTs))
-        case Some((delEntries, written)) =>
-          withSnapshot(cur, op, curFiles ++ written,
-            curDels ++ delEntries, tsHint = Some(sharedTs))
-      }
+  private def planRewrite(m: TableMetadata, cond: Column, op: String,
+      transform: DataFrame => DataFrame): RowPlan = {
+    val none = RowPlan(m, op, Vector.empty, None)
+    val snap = m.currentSnapshot.getOrElse(return none)
+    val (pruneCond, extras) =
+      SubqueryPruning.augmentSplit(spark, exprOf(cond))
+    val candidates = pruneCandidates(m, snap.files, pruneCond)
+    GraftTable.lastDmlCandidateFiles.set(candidates.size.toLong)
+    if (candidates.isEmpty) return none
+    // evaluated subquery domains re-apply as DATA filters on the
+    // discovery scan (same soundness as the read path's residual:
+    // rows they remove cannot match `cond`), so row groups inside
+    // kept candidate files skip too
+    val withFile = applyResidual(m, readFilesWithName(m, candidates), extras)
+    val touchedAbs = withFile.filter(cond)
+      .select(col("_graft_file")).distinct().collect()
+      .map(r => normalizePath(r.getString(0))).toSet
+    if (touchedAbs.isEmpty) return none
+    val touched = snap.files.filter(f =>
+      touchedAbs.contains(normalizePath(absPath(f.path))))
+    // rewriting a file must not resurrect rows a positional delete
+    // already removed (tables can switch write modes between commits)
+    val survivors0 = liveRead(m, snap, touched)
+    val survivors = op match {
+      // keep rows where cond is not TRUE (NULL-safe: NULL keeps the row)
+      case "delete" => survivors0.filter(!coalesce(cond, lit(false)))
+      case _        => transform(survivors0)
     }
-  }
-
-  /** The staged rewrite core under [[stageDelete]]/[[stageUpdate]]:
-    * [[rewriteMatching]]'s planning (metadata-candidate pruning, one
-    * predicate-pushed scan to find touched files, survivor rewrite)
-    * split from its commit. A no-match DML still returns a transform
-    * committing an unchanged-files snapshot, so every table in a
-    * transaction gets exactly one snapshot with the shared timestamp —
-    * transaction-consistent time travel stays probe-proof.
-    */
-  private def stageRewrite(m: TableMetadata, cond: Column, op: String,
-      transform: DataFrame => DataFrame, revalidate: Boolean = true)
-      : (TableMetadata, Long) => TableMetadata = {
-    val baseId = m.currentSnapshotId
-    val staged: Option[(Set[String], Vector[DataFileEntry])] =
-      m.currentSnapshot.flatMap { snap =>
-        val (pruneCond, extras) =
-          SubqueryPruning.augmentSplit(spark, exprOf(cond))
-        val candidates = pruneCandidates(m, snap.files, pruneCond)
-        if (candidates.isEmpty) None
-        else {
-          val withFile =
-            applyResidual(m, readFilesWithName(m, candidates), extras)
-          val touchedAbs = withFile.filter(cond)
-            .select(col("_graft_file")).distinct().collect()
-            .map(r => normalizePath(r.getString(0))).toSet
-          if (touchedAbs.isEmpty) None
-          else {
-            val touched = snap.files.filter(f =>
-              touchedAbs.contains(normalizePath(absPath(f.path))))
-            // rewriting must not resurrect rows a positional delete
-            // already removed (write modes can change between commits)
-            val survivors0 = liveRead(m, snap, touched)
-            val survivors = op match {
-              case "delete" => survivors0.filter(!coalesce(cond, lit(false)))
-              case _        => transform(survivors0)
-            }
-            Some((touched.map(f => normalizePath(absPath(f.path))).toSet,
-              writeFiles(m, survivors)))
-          }
-        }
-      }
-    (cur: TableMetadata, sharedTs: Long) => {
-      if (revalidate && cur.currentSnapshotId != baseId)
-        throw new ConcurrentCommitException(
-          s"concurrent commit: snapshot advanced from $baseId to " +
-            s"${cur.currentSnapshotId} during staged $op of $location — " +
-            "re-run the transaction")
-      val curFiles = cur.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-      val curDeletes =
-        cur.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-      staged match {
-        case None => // no matching rows: snapshot for timestamp alignment
-          withSnapshot(cur, op, curFiles, curDeletes, tsHint = Some(sharedTs))
-        case Some((touchedPaths, written)) =>
-          val untouched = curFiles.filterNot(f =>
-            touchedPaths.contains(normalizePath(absPath(f.path))))
-          withSnapshot(cur, op, untouched ++ written,
-            deletesKept(cur, untouched), tsHint = Some(sharedTs))
-      }
-    }
+    val written = writeFiles(m, survivors)
+    // set-keyed by path, never Vector.contains per file — that's O(F·T)
+    // on wide DML
+    val touchedPaths = touched.iterator.map(_.path).toSet
+    RowPlan(m, op, written, Some { t =>
+      val untouched = filesOf(t).filterNot(f => touchedPaths(f.path))
+      (untouched ++ written, deletesKept(t, untouched))
+    })
   }
 
   /** Replace all contents (reference: REPLACE TABLE ... AS SELECT, cell 13). */
@@ -1389,59 +1346,26 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   def appendIfNewMarker(df: DataFrame, markerKey: String,
       markerValue: Long): Boolean = {
     val m = meta
-    def seen(t: TableMetadata): Boolean =
-      t.properties.get(markerKey).exists(_.toLong >= markerValue)
-    if (seen(m)) return false // common replay path: skip before writing files
+    val marker = markerKey -> markerValue
+    // common replay path: skip before writing files
+    if (GraftTable.markerSeen(m, marker)) return false
     val written = writeFiles(m, df)
-    final class Dup extends RuntimeException
-    try {
-      MetadataIO.commitRetry(location) { cur =>
-        // re-validate inside the transform: a racing writer of the same
-        // marker stream may have landed between the check and the commit
-        if (seen(cur)) throw new Dup
-        val carried = cur.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-        val carriedDeletes =
-          cur.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-        withSnapshot(cur, "append", carried ++ written, carriedDeletes)
-          .copy(properties = cur.properties + (markerKey -> markerValue.toString))
-      }
-      true
-    } catch {
-      case _: Dup =>
-        // lost the marker race: reclaim our staged (uncommitted) files
-        written.foreach(f => io.delete(absPath(f.path)))
-        false
-      case scala.util.control.NonFatal(e) =>
-        // any other commit failure (e.g. conflict retries exhausted)
-        // must also reclaim the staged files — they are unreferenced by
-        // any snapshot and would otherwise orphan, unlike the upsert
-        // paths which already clean up on every failure
-        written.foreach(f => io.delete(absPath(f.path)))
-        throw e
-    }
+    commitSnapshot(None, "append", written, Some(marker))(appended(written))
   }
 
-  private def commitWrite(df: DataFrame, op: String, carryOver: Boolean,
-      keepFiles: Vector[DataFileEntry] = Vector.empty): GraftTable = {
-    val m = meta
+  private def commitWrite(df: DataFrame, op: String,
+      carryOver: Boolean): GraftTable = {
     // data files are written ONCE, outside the retry loop — only the
     // metadata transform re-runs on a commit conflict
-    val written = writeFiles(m, df)
-    MetadataIO.commitRetry(location) { cur =>
-      // append REBASES unconditionally: its new files are disjoint from
-      // whatever the current snapshot holds, so carrying the LATEST
-      // files/deletes is always correct — even across a concurrent
-      // schema change, since every file maps by its own schemaId.
-      // overwrite replaces contents whole (its result doesn't depend on
-      // the base snapshot), so it rebases trivially and resets deletes.
-      val carried =
-        if (carryOver) cur.currentSnapshot.map(_.files).getOrElse(Vector.empty) ++ keepFiles
-        else keepFiles
-      val carriedDeletes =
-        if (carryOver) cur.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-        else Vector.empty
-      withSnapshot(cur, op, carried ++ written, carriedDeletes)
-    }
+    val written = writeFiles(meta, df)
+    // append REBASES unconditionally: its new files are disjoint from
+    // whatever the current snapshot holds, so carrying the LATEST
+    // files/deletes is always correct — even across a concurrent
+    // schema change, since every file maps by its own schemaId.
+    // overwrite replaces contents whole (its result doesn't depend on
+    // the base snapshot), so it rebases trivially and resets deletes.
+    commitSnapshot(None, op, written)(
+      if (carryOver) appended(written) else _ => (written, Vector.empty))
     this
   }
 
@@ -1632,24 +1556,69 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def absPath(p: String): String =
     if (p.startsWith("/")) p else s"$location/$p"
 
-  /** Commit a rewrite-style snapshot (CoW DELETE/UPDATE, MoR DML,
-    * compaction) computed against base metadata `m`. These ops
-    * REFERENCED the base snapshot's files (rewrote or anti-joined
-    * them), so a concurrent data commit is a genuine conflict: the
-    * retry absorbs metadata-level races (properties, refs, schema) but
-    * fails loudly when the snapshot itself moved — rebasing would
-    * silently drop the racing writer's rows.
+  private def filesOf(t: TableMetadata): Vector[DataFileEntry] =
+    t.currentSnapshot.map(_.files).getOrElse(Vector.empty)
+  private def deletesOf(t: TableMetadata): Vector[DataFileEntry] =
+    t.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
+
+  /** `written` on top of whatever the commit lands on. */
+  private def appended(written: Vector[DataFileEntry]): FileSets =
+    t => (filesOf(t) ++ written, deletesOf(t))
+
+  /** A write planned against `base` REFERENCED its snapshot's files
+    * (rewrote or anti-joined them, or named their row positions), so a
+    * concurrent data commit is a genuine conflict — rebasing would
+    * silently drop the racing writer's rows. Metadata-level races
+    * (properties, refs, schema) pass.
     */
-  private def commitSnapshot(m: TableMetadata, op: String,
-      files: Vector[DataFileEntry],
-      deleteFiles: Vector[DataFileEntry] = Vector.empty): Unit =
-    MetadataIO.commitRetry(location) { cur =>
-      if (cur.currentSnapshotId != m.currentSnapshotId)
-        throw new ConcurrentCommitException(
-          s"concurrent commit: snapshot advanced from ${m.currentSnapshotId}" +
-            s" to ${cur.currentSnapshotId} during $op — re-run the operation")
-      withSnapshot(cur, op, files, deleteFiles)
+  private def requireBase(cur: TableMetadata, base: TableMetadata,
+      op: String): Unit =
+    if (cur.currentSnapshotId != base.currentSnapshotId)
+      throw new ConcurrentCommitException(
+        s"concurrent commit: snapshot advanced from ${base.currentSnapshotId}" +
+          s" to ${cur.currentSnapshotId} during $op of $location — " +
+          "re-run the operation")
+
+  /** The one commit of every write that lands files it wrote as a new
+    * snapshot: appends, row-level DML, MERGE, the upserts and
+    * compaction. With a `base` the commit re-validates it inside the
+    * retry ([[requireBase]]); without one it rebases. A `marker`
+    * (`key -> value`, plus `extraProps`) lands in the same document;
+    * when the table already holds the key at or past the value,
+    * nothing commits and the result is false.
+    *
+    * `written` is reclaimed only on a DEFINITE loss: the marker
+    * already seen, the base moved ([[ConcurrentCommitException]]), or
+    * the claim lost on every retry
+    * ([[MetadataIO.CommitConflictException]]). Any other failure may
+    * follow a won claim — on the catalog backend the CAS IS the
+    * commit, and a throw after it leaves a committed snapshot the next
+    * read heals — so its files stay for [[removeOrphanFiles]].
+    */
+  private def commitSnapshot(base: Option[TableMetadata], op: String,
+      written: Vector[DataFileEntry], marker: Option[(String, Long)] = None,
+      extraProps: Map[String, String] = Map.empty)(next: FileSets): Boolean = {
+    final class Dup extends RuntimeException
+    def reclaim(): Unit = written.foreach(f => io.delete(absPath(f.path)))
+    try {
+      MetadataIO.commitRetry(location) { cur =>
+        // re-validated inside the transform: a racing writer of the same
+        // marker stream may have landed since the caller's check
+        if (marker.exists(GraftTable.markerSeen(cur, _))) throw new Dup
+        base.foreach(requireBase(cur, _, op))
+        val (fs, ds) = next(cur)
+        val snap = withSnapshot(cur, op, fs, ds)
+        marker.fold(snap) { case (k, v) =>
+          snap.copy(properties = snap.properties + (k -> v.toString) ++ extraProps)
+        }
+      }
+      true
+    } catch {
+      case _: Dup => reclaim(); false
+      case e @ (_: ConcurrentCommitException |
+          _: MetadataIO.CommitConflictException) => reclaim(); throw e
     }
+  }
 
   /** The delete files a commit that replaces some of `cur`'s data files
     * keeps: those reaching a `carried` file ([[deletesReaching]]). The
@@ -1757,39 +1726,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     */
   def upsertIfNewMarker(dfIn: DataFrame, keyCols: Seq[String],
       markerKey: String, markerValue: Long,
-      extraProps: Map[String, String] = Map.empty): Boolean = {
-    require(keyCols.nonEmpty, "upsert requires at least one key column")
-    val m = meta
-    keyCols.foreach(k => require(m.currentSchema.fieldByName(k).isDefined,
-      s"upsert key $k not in schema"))
-    def seen(t: TableMetadata): Boolean =
-      t.properties.get(markerKey).exists(_.toLong >= markerValue)
-    if (seen(m)) return false
-    // pin the batch across its consumers (dup gate, key bounds, doomed
-    // join, data write): a recomputed non-deterministic batch could
-    // otherwise delete positions that do not match the appended rows
-    val df = dfIn.persist()
-    try upsertPositional(m, df, keyCols, markerKey, markerValue, seen,
-      extraProps)
-    finally df.unpersist()
-  }
-
-  private def upsertPositional(m: TableMetadata, df: DataFrame,
-      keyCols: Seq[String], markerKey: String, markerValue: Long,
-      seen: TableMetadata => Boolean,
-      extraProps: Map[String, String] = Map.empty): Boolean = {
-    val files0 = m.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-    val dels0 = m.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-
-    // a batch with two rows for one key would delete the old copy once
-    // and append BOTH rows — permanent duplicates in the exactly-once
-    // path. Fail loudly (one key-only job); dedupe upstream.
-    require(df.groupBy(keyCols.map(k => col(s"`$k`")): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).isEmpty,
-      s"upsert batch has duplicate ${keyCols.mkString("/")} keys — " +
-        "aggregate to one row per key upstream")
-    val keyDf = df.select(keyCols.map(k => col(s"`$k`")): _*).distinct().persist()
-    val delEntries: Vector[DataFileEntry] =
+      extraProps: Map[String, String] = Map.empty): Boolean =
+    upsert(dfIn, keyCols, markerKey -> markerValue, extraProps) { (m, df) =>
+      val files0 = filesOf(m)
+      val keyDf =
+        df.select(keyCols.map(k => col(s"`$k`")): _*).distinct().persist()
       try {
         if (files0.isEmpty) Vector.empty
         else {
@@ -1833,41 +1774,40 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           }
         }
       } finally keyDf.unpersist()
-    // a failure writing the DATA files must reclaim the already-staged
-    // delete file too — no path may strand orphans
-    val written =
-      try writeFiles(m, df)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          delEntries.foreach(f =>
-            io.delete(absPath(f.path)))
-          throw e
-      }
-    final class Dup extends RuntimeException
-    def reclaimStaged(): Unit =
-      (written ++ delEntries).foreach(f =>
-        io.delete(absPath(f.path)))
-    try {
-      MetadataIO.commitRetry(location) { cur =>
-        if (seen(cur)) throw new Dup
-        // the doomed positions were computed against THIS snapshot:
-        // a concurrent data commit is a genuine conflict (same rule as
-        // commitSnapshot), absorbed only for metadata-level races
-        if (cur.currentSnapshotId != m.currentSnapshotId)
-          throw new ConcurrentCommitException(
-            s"concurrent commit during upsert $markerKey=$markerValue — re-run")
-        withSnapshot(cur, "overwrite", files0 ++ written, dels0 ++ delEntries)
-          .copy(properties = cur.properties +
-            (markerKey -> markerValue.toString) ++ extraProps)
-      }
-      true
-    } catch {
-      case _: Dup => reclaimStaged(); false
-      case scala.util.control.NonFatal(e) =>
-        // any failed commit (e.g. the concurrent-snapshot conflict) must
-        // not leave its staged files as orphans
-        reclaimStaged(); throw e
     }
+
+  /** The shell both upserts share: validate the keys, skip a seen
+    * marker before writing anything, pin the batch across its
+    * consumers (a recomputed non-deterministic batch could otherwise
+    * commit delete positions or keys that do not match the appended
+    * rows), refuse duplicate keys, then write `deletesFor`'s delete
+    * file and the batch's data files and commit both with the marker.
+    * The deletes were computed against the base snapshot, so a
+    * concurrent data commit is a conflict ([[requireBase]]).
+    */
+  private def upsert(dfIn: DataFrame, keyCols: Seq[String],
+      marker: (String, Long), extraProps: Map[String, String] = Map.empty)(
+      deletesFor: (TableMetadata, DataFrame) => Vector[DataFileEntry])
+      : Boolean = {
+    require(keyCols.nonEmpty, "upsert requires at least one key column")
+    val m = meta
+    keyCols.foreach(k => require(m.currentSchema.fieldByName(k).isDefined,
+      s"upsert key $k not in schema"))
+    if (GraftTable.markerSeen(m, marker)) return false
+    val df = dfIn.persist()
+    try {
+      // a batch with two rows for one key would delete the old copy once
+      // and append BOTH rows — permanent duplicates in the exactly-once
+      // path. Fail loudly (one key-only job); dedupe upstream.
+      require(df.groupBy(keyCols.map(k => col(s"`$k`")): _*)
+          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).isEmpty,
+        s"upsert batch has duplicate ${keyCols.mkString("/")} keys — " +
+          "aggregate to one row per key upstream")
+      val dels = deletesFor(m, df)
+      val written = writeFiles(m, df)
+      commitSnapshot(Some(m), "overwrite", dels ++ written, Some(marker),
+        extraProps)(t => (filesOf(t) ++ written, deletesOf(t) ++ dels))
+    } finally df.unpersist()
   }
 
   // ------------------------------------------------------- row-level DML
@@ -1882,24 +1822,31 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * rows where cond evaluates to NULL survive (plain `!cond` would drop
     * them — silent data loss).
     */
-  def delete(cond: Column): GraftTable = {
+  def delete(cond: Column): GraftTable =
     // one metadata read: mode and the snapshot the DML operates on must
     // come from the SAME version (same torn-read rule as read())
-    val m = meta
-    if (deleteMode(m) == "merge-on-read") mergeOnReadDml(m, cond, None)
-    else rewriteMatching(m, cond, "delete", identity)
-  }
+    commitPlan(planDelete(meta, cond))
 
   /** UPDATE t SET ... WHERE cond (reference: cells 19/24; SURVEY M-U).
     * Merge-on-read plans as delete-matched + append-updated (what the
     * reference's `write.update.mode=merge-on-read` does physically).
     */
-  def update(cond: Column, assignments: Map[String, Column]): GraftTable = {
-    val m = meta
-    if (updateMode(m) == "merge-on-read") mergeOnReadDml(m, cond, Some(assignments))
-    else rewriteMatching(m, cond, "overwrite",
+  def update(cond: Column, assignments: Map[String, Column]): GraftTable =
+    commitPlan(planUpdate(meta, cond, assignments))
+
+  /** The one plan of a DELETE against `m`, committed by [[delete]] or
+    * staged by [[stageDelete]].
+    */
+  private def planDelete(m: TableMetadata, cond: Column): RowPlan =
+    if (deleteMode(m) == "merge-on-read") planMorDml(m, cond, None)
+    else planRewrite(m, cond, "delete", identity)
+
+  /** The one plan of an UPDATE against `m` — see [[planDelete]]. */
+  private def planUpdate(m: TableMetadata, cond: Column,
+      assignments: Map[String, Column]): RowPlan =
+    if (updateMode(m) == "merge-on-read") planMorDml(m, cond, Some(assignments))
+    else planRewrite(m, cond, "overwrite",
       df => applyAssignments(df, Some(cond), assignments))
-  }
 
   /** SQL UPDATE semantics: the WHERE condition and EVERY assignment RHS
     * evaluate against the ORIGINAL row, so all output columns are
@@ -2013,42 +1960,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * Iceberg's equality-delete contract (what Flink CDC writes).
     */
   def upsertEqIfNewMarker(dfIn: DataFrame, keyCols: Seq[String],
-      markerKey: String, markerValue: Long): Boolean = {
-    require(keyCols.nonEmpty, "upsert requires at least one key column")
-    val m = meta
-    val fields = keyCols.map(k => m.currentSchema.fieldByName(k)
-      .getOrElse(sys.error(s"upsert key $k not in schema")))
-    val ids = fields.map(_.id).toVector
-    def seen(t: TableMetadata): Boolean =
-      t.properties.get(markerKey).exists(_.toLong >= markerValue)
-    if (seen(m)) return false
-    // pin the batch: it feeds three jobs (dup check, delete keys, data
-    // write) and a recomputation that produced different rows would
-    // commit delete keys that do not match the appended data
-    val df = dfIn.persist()
-    try {
-      require(df.groupBy(keyCols.map(k => col(s"`$k`")): _*)
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).isEmpty,
-        s"upsert batch has duplicate ${keyCols.mkString("/")} keys — " +
-          "aggregate to one row per key upstream")
-      upsertEqCommit(m, df, keyCols, fields, ids, markerKey, markerValue,
-        seen)
-    } finally df.unpersist()
-  }
-
-  private def upsertEqCommit(m: TableMetadata, df: DataFrame,
-      keyCols: Seq[String], fields: Seq[FieldDef], ids: Vector[Int],
-      markerKey: String, markerValue: Long,
-      seen: TableMetadata => Boolean): Boolean = {
-    val files0 = m.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-    val dels0 = m.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-    // keys cast to the TABLE'S types (writeFiles casts the data rows the
-    // same way — a long-typed batch against an int column must not
-    // commit an unreadable INT64 delete file); no delete file at all
-    // when there are no older rows to hide, or (left by the write) when
-    // the batch is empty
-    val delEntries: Vector[DataFileEntry] =
-      if (files0.isEmpty) Vector.empty
+      markerKey: String, markerValue: Long): Boolean =
+    upsert(dfIn, keyCols, markerKey -> markerValue) { (m, df) =>
+      val fields = keyCols.map(m.currentSchema.fieldByName(_).get)
+      // keys cast to the TABLE'S types (writeFiles casts the data rows
+      // the same way — a long-typed batch against an int column must
+      // not commit an unreadable INT64 delete file); no delete file at
+      // all when there are no older rows to hide, or (left by the
+      // write) when the batch is empty
+      if (filesOf(m).isEmpty) Vector.empty
       else writeDeleteFile(m,
         df.select(keyCols.zip(fields).map { case (k, f) =>
           col(s"`$k`").cast(f.sparkType).as(s"_k_${f.id}")
@@ -2057,36 +1977,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           // file per batch keeps the manifest O(#batches), not
           // O(#batches * shuffle partitions)
           .coalesce(1),
-        targets = Vector.empty, equalityIds = ids)
-    val written =
-      try writeFiles(m, df)
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          delEntries.foreach(f =>
-            io.delete(absPath(f.path)))
-          throw e
-      }
-    final class Dup extends RuntimeException
-    def reclaimStaged(): Unit =
-      (written ++ delEntries).foreach(f =>
-        io.delete(absPath(f.path)))
-    try {
-      MetadataIO.commitRetry(location) { cur =>
-        if (seen(cur)) throw new Dup
-        // value-keyed deletes make concurrent writers ambiguous (which
-        // copy of a key wins?) — same strictness as the positional path
-        if (cur.currentSnapshotId != m.currentSnapshotId)
-          throw new ConcurrentCommitException(
-            s"concurrent commit during upsert $markerKey=$markerValue — re-run")
-        withSnapshot(cur, "overwrite", files0 ++ written, dels0 ++ delEntries)
-          .copy(properties = cur.properties + (markerKey -> markerValue.toString))
-      }
-      true
-    } catch {
-      case _: Dup => reclaimStaged(); false
-      case scala.util.control.NonFatal(e) => reclaimStaged(); throw e
+        targets = Vector.empty, equalityIds = fields.map(_.id).toVector)
     }
-  }
 
   /** Merge-on-read row-level DML: stats-pruned candidate scan finds
     * matching rows; their (file_path, row_index) pairs land in a new
@@ -2097,32 +1989,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * whose files the delete reaches ([[deletesReaching]]), and only
     * until a rewrite (binpack, copy-on-write DML,
     * `rewriteDeletedDataFiles()`) replaces the files it targets — that
-    * commit drops the delete.
+    * commit drops the delete. The delete file is written straight
+    * away; when it holds no row, nothing is left on disk and nothing
+    * matched, so emptiness costs no Spark job of its own.
     */
-  private def mergeOnReadDml(m: TableMetadata, cond: Column,
-      assignments: Option[Map[String, Column]]): GraftTable = {
-    val snap = m.currentSnapshot.getOrElse(return this)
-    morDmlFiles(m, snap, cond, assignments).foreach { case (dels, written) =>
-      commitSnapshot(m, if (assignments.isEmpty) "delete" else "overwrite",
-        snap.files ++ written, snap.deleteFiles ++ dels)
-    }
-    this
-  }
-
-  /** The files one merge-on-read DELETE/UPDATE writes against `snap`:
-    * the positional delete file and, for UPDATE, the appended copies.
-    * The delete file is written straight away; when it holds no row,
-    * nothing is left on disk and the result is None (no match commits
-    * nothing), so emptiness costs no Spark job of its own.
-    */
-  private def morDmlFiles(m: TableMetadata, snap: Snapshot, cond: Column,
-      assignments: Option[Map[String, Column]])
-      : Option[(Vector[DataFileEntry], Vector[DataFileEntry])] = {
+  private def planMorDml(m: TableMetadata, cond: Column,
+      assignments: Option[Map[String, Column]]): RowPlan = {
+    val none =
+      RowPlan(m, if (assignments.isEmpty) "delete" else "overwrite",
+        Vector.empty, None)
+    val snap = m.currentSnapshot.getOrElse(return none)
     val (pruneCond, extras) =
       SubqueryPruning.augmentSplit(spark, exprOf(cond))
     val candidates = pruneCandidates(m, snap.files, pruneCond)
     GraftTable.lastDmlCandidateFiles.set(candidates.size.toLong)
-    if (candidates.isEmpty) return None
+    if (candidates.isEmpty) return none
     // existing deletes must apply first: an already-deleted row must not
     // be re-deleted (harmless) or re-updated (row resurrection!);
     // evaluated domains re-apply as data filters (row-group skipping
@@ -2135,13 +2016,17 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val delEntries = writeDeleteFile(m, matched.select(
         relDataPath(col("_g_path")).as("file_path"),
         col("_g_pos").as("pos")), candidates)
-      if (delEntries.isEmpty) None
-      else Some((delEntries, assignments.map(as =>
-        // rows are already cond-filtered; assignments still evaluate
-        // simultaneously against the original row (see applyAssignments)
-        writeFiles(m, applyAssignments(
-          matched.drop("_g_path", "_g_pos"), None, as)))
-        .getOrElse(Vector.empty)))
+      if (delEntries.isEmpty) none
+      else {
+        val written = assignments.map(as =>
+          // rows are already cond-filtered; assignments still evaluate
+          // simultaneously against the original row (see applyAssignments)
+          writeFiles(m, applyAssignments(
+            matched.drop("_g_path", "_g_pos"), None, as)))
+          .getOrElse(Vector.empty)
+        none.copy(written = delEntries ++ written,
+          next = Some(t => (filesOf(t) ++ written, deletesOf(t) ++ delEntries)))
+      }
     } finally if (assignments.nonEmpty) matched.unpersist()
   }
 
@@ -2187,9 +2072,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       notMatched: Seq[MergeInsertClause],
       notMatchedBySource: Seq[MergeMatchedClause] = Nil,
       targetAlias: Option[String] = None): GraftTable =
-    mergeImpl(source, on, matched, notMatched, notMatchedBySource,
-      targetAlias, base = None, staging = false, revalidate = true)
-      .swap.getOrElse(this)
+    commitPlan(mergeImpl(source, on, matched, notMatched,
+      notMatchedBySource, targetAlias, meta))
 
   /** Staged MERGE — the transactional form of [[merge]]: the same
     * single pass (one tagged join, one tally for the cardinality
@@ -2202,8 +2086,9 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * `BEGIN TRANSACTION ... COMMIT`), so the CDC-upsert-plus-index
     * shape commits atomically. Same conflict contract as
     * [[stageDelete]]: the transform re-validates the base snapshot at
-    * claim time and aborts loudly on a racing commit (a merge-on-read
-    * delete file names the base's positions, see [[stageMorDml]]).
+    * claim time and aborts loudly on a racing commit (the rewritten
+    * files and a merge-on-read delete file's positions are the
+    * base's).
     */
   private[graft] def stageMerge(source: DataFrame, on: Column,
       matched: Seq[MergeMatchedClause],
@@ -2212,47 +2097,21 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       targetAlias: Option[String] = None,
       base: Option[TableMetadata] = None, revalidate: Boolean = true)
       : (TableMetadata, Long) => TableMetadata =
-    mergeImpl(source, on, matched, notMatched, notMatchedBySource,
-      targetAlias, base, staging = true, revalidate)
-      .getOrElse(sys.error("stageMerge produced no transform"))
+    stagePlan(mergeImpl(source, on, matched, notMatched,
+      notMatchedBySource, targetAlias, base.getOrElse(meta)), revalidate)
 
+  /** The one plan of a MERGE against `m` — a merge that changes
+    * nothing plans nothing — committed by [[merge]] or staged by
+    * [[stageMerge]].
+    */
   private def mergeImpl(source: DataFrame, on: Column,
       matched: Seq[MergeMatchedClause],
       notMatched: Seq[MergeInsertClause],
       notMatchedBySource: Seq[MergeMatchedClause],
-      targetAlias: Option[String],
-      base: Option[TableMetadata], staging: Boolean, revalidate: Boolean)
-      : Either[GraftTable, (TableMetadata, Long) => TableMetadata] = {
+      targetAlias: Option[String], m: TableMetadata): RowPlan = {
     require(matched.nonEmpty || notMatched.nonEmpty || notMatchedBySource.nonEmpty,
       "MERGE requires at least one WHEN clause")
-    val m = base.getOrElse(meta)
-    val mergeBaseId = m.currentSnapshotId
-    def filesOf(t: TableMetadata) = t.currentSnapshot.map(_.files).getOrElse(Vector.empty)
-    def delsOf(t: TableMetadata) = t.currentSnapshot.map(_.deleteFiles).getOrElse(Vector.empty)
-    // commit the (data files, delete files) `next` derives from the
-    // metadata it commits on — now, or, staged, inside the
-    // transaction's claim set, where any concurrent commit aborts it
-    // (the rewritten files and delete positions are the base's)
-    type Next = TableMetadata => (Vector[DataFileEntry], Vector[DataFileEntry])
-    def publish(next: Next): Either[GraftTable, (TableMetadata, Long) => TableMetadata] =
-      if (!staging) {
-        val (fs, ds) = next(m)
-        commitSnapshot(m, "overwrite", fs, ds)
-        Left(this)
-      } else Right((curM: TableMetadata, sharedTs: Long) => {
-        if (revalidate && curM.currentSnapshotId != mergeBaseId)
-          throw new ConcurrentCommitException(
-            s"concurrent commit: snapshot advanced from $mergeBaseId to " +
-              s"${curM.currentSnapshotId} during staged MERGE of $location — " +
-              "re-run the transaction")
-        val (fs, ds) = next(curM)
-        withSnapshot(curM, "overwrite", fs, ds, tsHint = Some(sharedTs))
-      })
-    // a merge that changes nothing commits nothing; a STAGED one still
-    // commits an unchanged-files snapshot so every table in a
-    // transaction gets exactly one snapshot with the shared timestamp
-    // (stageRewrite's no-match convention)
-    def noop = if (staging) publish(t => (filesOf(t), delsOf(t))) else Left(this)
+    val noop = RowPlan(m, "overwrite", Vector.empty, None)
     val cur = m.currentSchema
     Seq("_g_path", "_g_pos", "__graft_action", "__graft_src").foreach(c =>
       require(!source.columns.contains(c),
@@ -2419,7 +2278,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           val written =
             if (appended == 0) Vector.empty[DataFileEntry]
             else writeFiles(m, rowsOf(frame.filter(updates || inserts)))
-          publish(t => (filesOf(t) ++ written, delsOf(t) ++ delEntries))
+          noop.copy(written = delEntries ++ written,
+            next = Some(t => (filesOf(t) ++ written, deletesOf(t) ++ delEntries)))
         }
       } else if (touched.isEmpty && appended == 0) noop
       else {
@@ -2441,10 +2301,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         // is O(F·T) — quadratic when NOT MATCHED BY SOURCE touches
         // every file of a million-file table
         val touchedPaths = touched.iterator.map(_.path).toSet
-        publish { t =>
+        noop.copy(written = written, next = Some { t =>
           val untouched = filesOf(t).filterNot(f => touchedPaths(f.path))
           (untouched ++ written, deletesKept(t, untouched))
-        }
+        })
       }
     } finally rows.unpersist()
   }
@@ -2625,45 +2485,6 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         .flatMap(r => graft.tableformat.Manifests.readEntries(location, r))
     }
     pruneCandidates(m, files, e)
-  }
-
-  /** Metadata stats pruning narrows to candidate files; one
-    * predicate-pushed scan over ONLY those finds the files actually
-    * containing matching rows; only those are rewritten (minus deleted /
-    * with updated rows); all other files carry over untouched.
-    */
-  private def rewriteMatching(m: TableMetadata, cond: Column, op: String,
-      transform: DataFrame => DataFrame): GraftTable = {
-    val snap = m.currentSnapshot.getOrElse(return this)
-    val (pruneCond, extras) =
-      SubqueryPruning.augmentSplit(spark, exprOf(cond))
-    val candidates = pruneCandidates(m, snap.files, pruneCond)
-    GraftTable.lastDmlCandidateFiles.set(candidates.size.toLong)
-    if (candidates.isEmpty) return this
-    // evaluated subquery domains re-apply as DATA filters on the
-    // discovery scan (same soundness as the read path's residual:
-    // rows they remove cannot match `cond`), so row groups inside
-    // kept candidate files skip too
-    val withFile = applyResidual(m, readFilesWithName(m, candidates), extras)
-    val touchedAbs = withFile.filter(cond)
-      .select(col("_graft_file")).distinct().collect()
-      .map(r => normalizePath(r.getString(0))).toSet
-    if (touchedAbs.isEmpty) return this
-    // one partition pass keyed on the path set (never Vector.contains
-    // per file — that's O(F·T) on wide DML)
-    val (touched, untouched) = snap.files.partition(f =>
-      touchedAbs.contains(normalizePath(absPath(f.path))))
-    // rewriting a file must not resurrect rows a positional delete
-    // already removed (tables can switch write modes between commits)
-    val survivors0 = liveRead(m, snap, touched)
-    val survivors = op match {
-      // keep rows where cond is not TRUE (NULL-safe: NULL keeps the row)
-      case "delete" => survivors0.filter(!coalesce(cond, lit(false)))
-      case _        => transform(survivors0)
-    }
-    val written = writeFiles(m, survivors)
-    commitSnapshot(m, op, untouched ++ written, deletesKept(m, untouched))
-    this
   }
 
   /** input_file_name() yields a percent-encoded file: URI while manifest
@@ -2925,7 +2746,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       }
     val selPaths = selected.map(_.path).toSet
     val carried = snap.files.filterNot(f => selPaths(f.path))
-    commitSnapshot(m, "replace", carried ++ written, deletesKept(m, carried))
+    commitSnapshot(Some(m), "replace", written)(_ =>
+      (carried ++ written, deletesKept(m, carried)))
     this
   }
 
@@ -3021,7 +2843,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
         ranged.sortWithinPartitions(cols: _*)
       }
     val written = writeFiles(m, df)
-    commitSnapshot(m, "replace", written, Vector.empty)
+    commitSnapshot(Some(m), "replace", written)(_ => (written, Vector.empty))
     this
   }
 
@@ -3055,7 +2877,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val written =
       if (affected.isEmpty) Vector.empty[DataFileEntry]
       else writeFiles(m, liveRead(m, snap, affected))
-    commitSnapshot(m, "replace", untouched ++ written, Vector.empty)
+    commitSnapshot(Some(m), "replace", written)(_ =>
+      (untouched ++ written, Vector.empty))
     this
   }
 
@@ -3144,13 +2967,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
               snap.files)
           } finally rows.unpersist()
       }
-    try commitSnapshot(m, "replace", snap.files, newDeletes)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        newDeletes.foreach(f =>
-          io.delete(absPath(f.path)))
-        throw e
-    }
+    commitSnapshot(Some(m), "replace", newDeletes)(_ =>
+      (snap.files, newDeletes))
     this
   }
 
@@ -3243,7 +3061,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       if (targetFiles > 0) keyed.repartitionByRange(targetFiles, col("__graft_z"))
       else keyed.repartitionByRange(col("__graft_z"))
     val out = ranged.sortWithinPartitions(col("__graft_z")).drop("__graft_z")
-    commitSnapshot(m, "replace", writeFiles(m, out), Vector.empty)
+    val written = writeFiles(m, out)
+    commitSnapshot(Some(m), "replace", written)(_ => (written, Vector.empty))
     this
   }
 
@@ -4426,6 +4245,28 @@ object GraftTable {
     */
   private[graft] val lastDmlCandidateFiles =
     new java.util.concurrent.atomic.AtomicLong(-1L)
+
+  /** A new snapshot's (data files, delete files), derived from the
+    * metadata its commit lands on — re-run on every retry.
+    */
+  private type FileSets =
+    TableMetadata => (Vector[DataFileEntry], Vector[DataFileEntry])
+
+  /** One row-level write — DELETE, UPDATE or MERGE, in either write
+    * mode — planned against `base`: the files the planning wrote, and
+    * the snapshot they make, or None when nothing matched.
+    * `commitPlan` commits it now; `stagePlan` hands it (or a staged
+    * append's) to a transaction.
+    */
+  private final case class RowPlan(base: TableMetadata, op: String,
+      written: Vector[DataFileEntry], next: Option[FileSets])
+
+  /** Has `t` already committed the exactly-once `marker` (`key ->
+    * value`) — is its recorded value at or past `value`?
+    */
+  private[graft] def markerSeen(t: TableMetadata,
+      marker: (String, Long)): Boolean =
+    t.properties.get(marker._1).exists(_.toLong >= marker._2)
 
   /** One data file's tallies in a MERGE's tagged join: matched
     * (target, source) pairs and the distinct target positions among

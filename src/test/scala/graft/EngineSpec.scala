@@ -2312,4 +2312,74 @@ class EngineSpec extends AnyFunSuite {
     assert(cow.verifyIntegrity(allSnapshots = true).isEmpty)
     assert(mor.verifyIntegrity(allSnapshots = true).isEmpty)
   }
+
+  /** Delegates every operation to `under`, except that the FIRST claim
+    * under `loc`'s metadata directory first runs `race` — a commit that
+    * lands between an operation's planning and its own claim, every
+    * time, with no thread timing involved.
+    */
+  private final class RaceBeforeFirstClaim(under: graft.tableformat.FileIO,
+      loc: String, race: () => Unit) extends graft.tableformat.FileIO {
+    private val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    override def claim(p: String, c: String): Boolean = {
+      if (p.startsWith(s"$loc/metadata/") && armed.getAndSet(false)) race()
+      under.claim(p, c)
+    }
+    override def claimAll(e: Seq[(String, String)]) = under.claimAll(e)
+    override def readString(p: String) = under.readString(p)
+    override def readLines(p: String) = under.readLines(p)
+    override def writeString(p: String, c: String) = under.writeString(p, c)
+    override def exists(p: String) = under.exists(p)
+    override def size(p: String) = under.size(p)
+    override def modifiedMs(p: String) = under.modifiedMs(p)
+    override def delete(p: String) = under.delete(p)
+    override def listDir(d: String) = under.listDir(d)
+    override def listRecursive(d: String) = under.listRecursive(d)
+    override def deleteTree(d: String) = under.deleteTree(d)
+    override def replaceAtomic(p: String, c: String) = under.replaceAtomic(p, c)
+    override def copy(s: String, d: String) = under.copy(s, d)
+    override def rename(f: String, t: String) = under.rename(f, t)
+    override def recoverRename(d: String, olderThanMs: Long) =
+      under.recoverRename(d, olderThanMs)
+  }
+
+  test("a direct CoW DELETE or MERGE that loses its base to a racing " +
+      "commit throws and leaves no unreferenced file behind") {
+    import spark.implicits._
+    import graft.engine.{ConcurrentCommitException, MergeUpdateClause}
+    import graft.tableformat.FileIO
+    def unreferenced(t: GraftTable): Set[String] = {
+      val m = t.meta
+      val referenced = m.snapshots.flatMap(s => s.files ++ s.deleteFiles)
+        .map(f => s"${t.location}/${f.path}").toSet
+      FileIO.io.listRecursive(s"${t.location}/data")
+        .filter(_.endsWith(".parquet")).toSet -- referenced
+    }
+    val ops: Seq[(String, GraftTable => Unit)] = Seq(
+      "delete" -> (_.delete(col("id") === 2L)),
+      "merge" -> (_.merge(Seq((11L, -11L)).toDF("sid", "sv"),
+        col("id") === col("sid"),
+        matched = Seq(MergeUpdateClause(None, Map("v" -> col("sv")))),
+        notMatched = Nil)))
+    ops.foreach { case (name, op) =>
+      val loc = tmp()
+      val t = GraftTable.create(spark, loc, s"lost_$name",
+        Seq("id" -> "long", "v" -> "long"))
+      t.append(Seq((1L, 1L), (2L, 2L)).toDF("id", "v").coalesce(1))
+      t.append(Seq((10L, 10L), (11L, 11L)).toDF("id", "v").coalesce(1))
+      assert(unreferenced(t).isEmpty)
+      val before = FileIO.io
+      FileIO.install(new RaceBeforeFirstClaim(before, loc, () =>
+        new GraftTable(spark, loc)
+          .append(Seq((99L, 99L)).toDF("id", "v").coalesce(1))))
+      try intercept[ConcurrentCommitException](op(t))
+      finally FileIO.install(before)
+      // the racer's commit stands and the loser's never landed
+      assert(t.read().as[(Long, Long)].collect().sorted.toSeq ==
+        Seq((1L, 1L), (2L, 2L), (10L, 10L), (11L, 11L), (99L, 99L)), name)
+      assert(t.meta.snapshots.size == 3, name)
+      assert(unreferenced(t).isEmpty,
+        s"$name left files its lost commit wrote: ${unreferenced(t)}")
+    }
+  }
 }

@@ -445,6 +445,17 @@ class MergeOnReadSpec extends AnyFunSuite {
     // and the copies
     assert((morJobs, cowJobs, delJobs, updJobs) == ((6, 6, 1, 2)),
       s"MERGE MoR $morJobs, CoW $cowJobs; DELETE $delJobs; UPDATE $updJobs")
+    // copy-on-write DELETE and UPDATE: the discovery scan that finds
+    // the touched files (a distinct, so two jobs) and the survivor
+    // rewrite
+    val cowDelJobs =
+      jobsDuring(cow.delete(col("id") >= 40L && col("id") <= 44L))._2
+    val cowUpdJobs = jobsDuring(cow.update(col("id") >= 60L && col("id") <= 64L,
+      Map("v" -> lit(0))))._2
+    assert(cow.read().orderBy("id").as[(Long, Int)].collect().toSeq ==
+      mor.read().orderBy("id").as[(Long, Int)].collect().toSeq)
+    assert((cowDelJobs, cowUpdJobs) == ((3, 3)),
+      s"CoW DELETE $cowDelJobs; CoW UPDATE $cowUpdJobs")
   }
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =

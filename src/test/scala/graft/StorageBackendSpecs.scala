@@ -512,4 +512,37 @@ class CatalogCommitSpec extends AnyFunSuite with CatalogBackend {
     assert(a.read().as[Long].collect().sorted.toSeq == Seq(1L, 2L))
     assert(b.read().as[Long].collect().sorted.toSeq == Seq(1L, 2L))
   }
+
+  test("a marker commit whose CAS won keeps its files: the next read " +
+      "heals the batch in, and replaying the marker skips it") {
+    import spark.implicits._
+    val io = FileIO.io.asInstanceOf[CatalogFileIO]
+    val t = graft.engine.GraftTable.create(spark, tmp(), "won_marker",
+      Seq("id" -> "long", "v" -> "long"))
+    t.append(Seq((1L, 10L), (2L, 20L)).toDF("id", "v").coalesce(1))
+    val append = Seq((3L, 30L)).toDF("id", "v").coalesce(1)
+    val upsert = Seq((1L, 11L), (4L, 40L)).toDF("id", "v").coalesce(1)
+    io.crashAfterCasForTesting = true
+    try {
+      // each call wins its CAS and then dies before the publish PUT; the
+      // upsert's own metadata read heals the append's commit first
+      Seq(
+        () => t.appendIfNewMarker(append, "graft.test.append", 1L),
+        () => t.upsertIfNewMarker(upsert, Seq("id"), "graft.test.upsert", 1L)
+      ).foreach { call =>
+        val e = intercept[Exception](call())
+        assert(String.valueOf(e.getMessage).contains("simulated"), e.toString)
+      }
+    } finally io.crashAfterCasForTesting = false
+    // both commits happened at the CAS: a plain read heals them and
+    // reads every file they reference, the upsert's delete file included
+    val expected = Seq((1L, 11L), (2L, 20L), (3L, 30L), (4L, 40L))
+    assert(t.read().as[(Long, Long)].collect().sorted.toSeq == expected)
+    assert(t.meta.snapshots.size == 3)
+    // the markers committed with them, so a replay is a no-op
+    assert(!t.appendIfNewMarker(append, "graft.test.append", 1L))
+    assert(!t.upsertIfNewMarker(upsert, Seq("id"), "graft.test.upsert", 1L))
+    assert(t.read().as[(Long, Long)].collect().sorted.toSeq == expected)
+    assert(t.meta.snapshots.size == 3)
+  }
 }

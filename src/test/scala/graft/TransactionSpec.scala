@@ -246,6 +246,75 @@ class TransactionSpec extends AnyFunSuite with CatalogBackend {
       "conflicted staged MoR delete must not land")
   }
 
+  test("direct and staged row-level DML agree: DELETE, UPDATE and " +
+      "MERGE in both write modes give the same rows, file counts and " +
+      "operation; no match commits nothing direct, one snapshot staged") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.catalog.{Tx, TxOp}
+    import graft.engine.{GraftTable, MergeInsertValuesClause,
+      MergeUpdateClause}
+    val cat = new GraftCatalog(spark, tmp())
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    def table(mode: String): GraftTable = {
+      val t = cat.createTable("db", s"dvs${n.incrementAndGet()}",
+        Seq("id" -> "long", "v" -> "long"),
+        properties = Seq("write.delete.mode", "write.update.mode",
+          "write.merge.mode").map(_ -> mode).toMap)
+      (0 until 3).foreach(b => t.append((b * 10L until (b + 1) * 10L)
+        .map(i => (i, i)).toDF("id", "v").coalesce(1)))
+      t
+    }
+    def merge(keys: Seq[Long], inserts: Boolean) = (t: GraftTable) =>
+      Tx.Merge(t, keys.map(k => (k, -k)).toDF("sid", "sv"),
+        col("id") === col("sid"),
+        matched = Seq(MergeUpdateClause(None, Map("v" -> col("sv")))),
+        notMatched = if (!inserts) Nil else Seq(MergeInsertValuesClause(
+          None, Map("id" -> col("sid"), "v" -> col("sv")))))
+    def direct(op: TxOp): Unit = op match {
+      case Tx.Delete(t, c)      => t.delete(c)
+      case Tx.Update(t, c, as)  => t.update(c, as)
+      case Tx.Merge(t, s, on, m, nm, _, _) => t.merge(s, on, m, nm)
+      case other                => fail(s"not a row-level op: $other")
+    }
+    // (name, matching op, an op that matches no row)
+    val ops: Seq[(String, GraftTable => TxOp, GraftTable => TxOp)] = Seq(
+      ("DELETE", Tx.Delete(_, col("id") % 7 === 3L),
+        Tx.Delete(_, col("id") === -1L)),
+      ("UPDATE", Tx.Update(_, col("id") % 7 === 3L, Map("v" -> col("v") * 2)),
+        Tx.Update(_, col("id") === -1L, Map("v" -> col("v") * 2))),
+      ("MERGE", merge(Seq(5L, 15L, 100L), inserts = true),
+        merge(Seq(-5L, 200L), inserts = false)))
+    for (mode <- Seq("copy-on-write", "merge-on-read");
+         (name, hit, miss) <- ops) {
+      val what = s"$mode $name"
+      val (a, b) = (table(mode), table(mode))
+      def rows(t: GraftTable) = t.read().as[(Long, Long)].collect().sorted.toSeq
+      def snap(t: GraftTable) = t.meta.currentSnapshot.get
+      direct(hit(a))
+      cat.transactOps(Seq(hit(b)))
+      assert(rows(a) == rows(b), what)
+      assert(rows(a) != (0L until 30L).map(i => (i, i)), s"$what changed nothing")
+      assert(snap(a).files.size == snap(b).files.size &&
+        snap(a).deleteFiles.size == snap(b).deleteFiles.size,
+        s"$what: ${snap(a).files.size}/${snap(a).deleteFiles.size} direct vs " +
+          s"${snap(b).files.size}/${snap(b).deleteFiles.size} staged")
+      assert(snap(a).operation == snap(b).operation, what)
+      assert(a.meta.snapshots.size == 4 && b.meta.snapshots.size == 4, what)
+      val (aBefore, bBefore) = (snap(a), snap(b))
+      direct(miss(a))
+      cat.transactOps(Seq(miss(b)))
+      assert(a.meta.snapshots.size == 4 &&
+        snap(a).snapshotId == aBefore.snapshotId,
+        s"$what: a no-match direct op must commit nothing")
+      assert(b.meta.snapshots.size == 5, s"$what: staged no-match")
+      assert(snap(b).files.map(_.path) == bBefore.files.map(_.path) &&
+        snap(b).deleteFiles.map(_.path) == bBefore.deleteFiles.map(_.path),
+        s"$what: the staged no-match snapshot must change no file")
+      assert(rows(a) == rows(b), what)
+    }
+  }
+
   test("transactOps: a CoW MERGE commits with its index append in one " +
       "claim set; racing commits abort the staged merge loudly") {
     import spark.implicits._
