@@ -33,12 +33,14 @@ import org.apache.spark.sql.functions._
   *     otherwise double in depth per round, and round k would replay
   *     every prior round's shuffles k times (checkpointing is how
   *     GraphFrames' CC survives iteration too);
-  *   - convergence is detected by a (count, hash-xor) signature of the
-  *     edge set — one cheap aggregate over the already-materialized
-  *     checkpoint, no extra shuffle. A false convergence needs a
-  *     64-bit hash-xor collision at identical edge count
-  *     (~2^-64 per round); the alternative exact check (`except` of
-  *     consecutive edge sets) costs a full extra SMJ per round.
+  *   - the loop stops on an exact, node-local test: the edges are
+  *     final exactly when every node is a LEAF (one neighbor, and it
+  *     is smaller) or a CENTRE (every neighbor is larger) — a star
+  *     forest centred on each component's minimum, the fixed point of
+  *     the two star ops. One map-side-combined groupBy over the
+  *     checkpoint tests it before every round, so no round only
+  *     confirms the last: an input already at the fixed point
+  *     (disjoint near-dup pairs) runs zero rounds, a 64-node chain 6.
   */
 object Clusters {
 
@@ -49,6 +51,8 @@ object Clusters {
     * node that appears in a pair, where `cluster` is the component's
     * minimum id (roots label themselves). Nodes in no pair are not
     * emitted — [[dedupByCluster]] treats them as singleton keepers.
+    * At most `maxIter` rounds run; if the edges are still not a star
+    * forest after that many, it throws `IllegalStateException`.
     */
   def dupClusters(pairs: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 25): DataFrame = {
@@ -61,24 +65,26 @@ object Clusters {
       .distinct()
       .localCheckpoint(true)
 
-    // bit_xor, not sum: order-independent like sum but cannot overflow
-    // under ANSI arithmetic; the edge set is distinct so XOR's
-    // pair-cancellation is harmless
-    def signature(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
+    def bidirected(df: DataFrame): DataFrame =
+      df.unionByName(df.select(col("v").as("u"), col("u").as("v")))
+    // a node violates the star forest iff it has a smaller neighbor
+    // and more than one neighbor (edges are distinct)
+    def starForest(df: DataFrame): Boolean =
+      bidirected(df).groupBy("u")
+        .agg(min(col("v")).as("mn"), count(lit(1)).as("n"))
+        .where(col("mn") < col("u") && col("n") > 1)
+        .isEmpty
 
-    var sig = signature(e)
-    var converged = false
     var rounds = 0
-    while (!converged && rounds < maxIter) {
+    while (!starForest(e)) {
+      if (rounds >= maxIter)
+        throw new IllegalStateException(
+          s"connected components are not a star forest after $maxIter " +
+            "rounds — raise maxIter")
       // LARGE-STAR: for each node u, link every strictly-LARGER
       // neighbor to m = min(N(u) ∪ {u}). Runs on the bidirected view
       // so both endpoints contribute their neighborhoods.
-      val bi = e.unionByName(
-        e.select(col("v").as("u"), col("u").as("v")))
+      val bi = bidirected(e)
       val mins = bi.groupBy("u").agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
       val ls = bi.join(mins, "u")
@@ -97,15 +103,8 @@ object Clusters {
         .unionByName(mins2.select(col("u"), col("mn").as("v")))
         .distinct()
       e = ss.localCheckpoint(true)
-      val next = signature(e)
-      converged = next == sig
-      sig = next
       rounds += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge in $maxIter rounds " +
-          s"(${sig._1} edges) — raise maxIter")
     // fixed point is a star per component: one (member, root) edge per
     // non-root member, root = component minimum; roots label themselves
     e.select(col("u").as("id"), col("v").as("cluster"))

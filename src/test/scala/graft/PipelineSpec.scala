@@ -1013,6 +1013,66 @@ class PipelineSpec extends AnyFunSuite {
     assert(got == expect)
   }
 
+  test("connected components: rounds run only while the edges are " +
+      "not a min-centred star forest") {
+    import spark.implicits._
+    def clusters(edges: Seq[(Long, Long)], maxIter: Int) =
+      Clusters.dupClusters(edges.toDF("id1", "id2"), "id1", "id2", maxIter)
+        .as[(Long, Long)].collect().toMap
+    // the 64-node chain reaches its star forest after exactly 6 rounds
+    val chain = (1L until 64L).map(i => (i, i + 1))
+    assert(clusters(chain, 6) == (1L to 64L).map(_ -> 1L).toMap)
+    intercept[IllegalStateException](clusters(chain, 5))
+    // already a min-centred star forest: no round runs
+    assert(clusters(Seq((2L, 1L), (3L, 1L), (5L, 4L)), 0) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
+    // a star whose centre is not the minimum needs a round
+    intercept[IllegalStateException](clusters(Seq((5L, 1L), (9L, 5L)), 0))
+  }
+
+  /** Component minimum of every node in a pair, by driver-side
+    * union-find: the exact answer `dupClusters` must reproduce. */
+  private def unionFindClusters(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x; while (parent.getOrElseUpdate(r, r) != r) r = parent(r); r
+    }
+    edges.filter(e => e._1 != e._2).foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toList.map(x => x -> find(x)).toMap
+  }
+
+  test("connected components and dedupByCluster match driver-side " +
+      "union-find across densities, a hub, a clique and no pairs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261020L)
+    // sparse (mostly isolated pairs) through dense (one giant component)
+    val random = Seq(200 -> 60, 200 -> 150, 300 -> 300, 100 -> 250, 60 -> 400)
+      .map { case (n, m) =>
+        Seq.fill(m)((rnd.nextInt(n).toLong + 1, rnd.nextInt(n).toLong + 1))
+      }
+    // a hub of degree 81 whose id is not its component's minimum, with
+    // a tail below it; a 12-node clique
+    val hub = (1L to 80L).map(i => (500L, 1000L + i)) ++ Seq((500L, 7L), (7L, 3L))
+    val clique = for (a <- 20L to 31L; b <- 20L to 31L if a < b) yield (b, a)
+    for (edges <- random :+ hub :+ clique :+ (hub ++ clique ++ random.head)) {
+      val expect = unionFindClusters(edges)
+      val pairs = edges.toDF("a", "b")
+      assert(Clusters.dupClusters(pairs, "a", "b").as[(Long, Long)]
+        .collect().toMap == expect)
+      val ids = (edges.flatMap(e => Seq(e._1, e._2)) ++ (2001L to 2010L)).distinct
+      val docs = ids.toDF("doc_id")
+      val kept = Clusters.dedupByCluster(docs, "doc_id", pairs, "a", "b")
+        .as[Long].collect().toSet
+      assert(kept == ids.filter(i => expect.getOrElse(i, i) == i).toSet)
+    }
+    // no pairs: no rows, and no round may run
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(Clusters.dupClusters(none, "a", "b", maxIter = 0).isEmpty)
+  }
+
   test("dedupByCluster keeps min-id representative, passes untouched docs") {
     import spark.implicits._
     val docs = Seq((1L, "a"), (2L, "b"), (3L, "c"), (9L, "z"))
