@@ -118,13 +118,15 @@ object GraftProcedures {
     Def("maintain",
       Seq(in("table", StringType),
         ProcedureParameter.in("delete_ratio", DoubleType)
-          .defaultValue("0.1").build(),
+          .defaultValue(GraftTable.MaintainDeleteRatio.toString).build(),
         ProcedureParameter.in("keep_last", IntegerType)
-          .defaultValue("10").build()),
+          .defaultValue(GraftTable.MaintainKeepLast.toString).build()),
       (w, r) => {
         table(w, str(r, 0)).maintain(
-          deleteRatio = if (r.isNullAt(1)) 0.1 else r.getDouble(1),
-          keepLast = if (r.isNullAt(2)) 10 else r.getInt(2))
+          deleteRatio =
+            if (r.isNullAt(1)) GraftTable.MaintainDeleteRatio else r.getDouble(1),
+          keepLast =
+            if (r.isNullAt(2)) GraftTable.MaintainKeepLast else r.getInt(2))
         ()
       }),
     Def("set_branch_retention",
@@ -139,15 +141,15 @@ object GraftProcedures {
     Def("rewrite_data_files_binpack",
       Seq(in("table", StringType),
         ProcedureParameter.in("min_file_size_bytes", LongType)
-          .defaultValue((32L << 20).toString).build(),
+          .defaultValue(GraftTable.BinpackMinFileSizeBytes.toString).build(),
         ProcedureParameter.in("target_file_size_bytes", LongType)
-          .defaultValue((128L << 20).toString).build(),
+          .defaultValue(GraftTable.BinpackTargetFileSizeBytes.toString).build(),
         ProcedureParameter.in("min_input_files", IntegerType)
-          .defaultValue("2").build()),
+          .defaultValue(GraftTable.BinpackMinInputFiles.toString).build()),
       (w, r) => table(w, str(r, 0)).rewriteDataFilesBinpack(
-        if (r.isNullAt(1)) 32L << 20 else r.getLong(1),
-        if (r.isNullAt(2)) 128L << 20 else r.getLong(2),
-        if (r.isNullAt(3)) 2 else r.getInt(3))),
+        if (r.isNullAt(1)) GraftTable.BinpackMinFileSizeBytes else r.getLong(1),
+        if (r.isNullAt(2)) GraftTable.BinpackTargetFileSizeBytes else r.getLong(2),
+        if (r.isNullAt(3)) GraftTable.BinpackMinInputFiles else r.getInt(3))),
     Def("rewrite_data_files",
       Seq(in("table", StringType),
         ProcedureParameter.in("sort_by", StringType).defaultValue("''").build()),

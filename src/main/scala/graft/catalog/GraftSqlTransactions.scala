@@ -1,7 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.SparkSession
-import graft.tableformat.{MetadataIO, TableMetadata}
+import graft.tableformat.{MetadataIO, Snapshot, TableMetadata}
 
 /** SQL-surface transactions: `BEGIN TRANSACTION; <DML...>; COMMIT` —
   * the multi-statement seam over [[GraftCatalog.transactOps]], so the
@@ -567,14 +567,14 @@ object GraftSqlTransactions {
     // PURE-APPEND chain legally composes over a post-pin racer
     // (revalidating chains and staged views abort on them, appends
     // don't), and if that racer carried a skewed-forward stamp above
-    // sharedTs, the engine's per-document monotonic floor
-    // (withSnapshot) would silently stamp that one table HIGHER than
-    // the transaction's other slots — reopening the torn window.
+    // sharedTs, the per-document instant rule
+    // (TableMetadata.nextInstant) would silently stamp that one table
+    // HIGHER than the transaction's other slots — reopening the torn
+    // window.
     // So every table slot re-checks the floor against its CLAIM-TIME
     // document ([[SharedInstant.check]]); the retry loop lifts the
     // floor and re-prepares the whole set.
-    val tsFloorInit = (pins.values.flatMap(m =>
-      m.snapshots.map(_.timestampMs) ++ m.snapshotLog.map(_.timestampMs)) ++
+    val tsFloorInit = (pins.values.flatMap(_.lastInstant) ++
       viewPins.values.flatMap(_.versions.map(_.timestampMs)))
       .maxOption.getOrElse(0L)
     val tsFloor = new java.util.concurrent.atomic.AtomicLong(tsFloorInit)
@@ -682,27 +682,19 @@ object GraftSqlTransactions {
     val added = end.snapshots.drop(cur.snapshots.size)
     if (added.size <= 1) end
     else {
+      // the last statement's inventory keeps each statement's
+      // sequence numbers; only the added-* half of its summary changes
       val last = added.last
-      val now = math.max(ts, math.max(
-        cur.snapshots.map(_.timestampMs).maxOption.getOrElse(Long.MinValue),
-        cur.snapshotLog.map(_.timestampMs).maxOption.getOrElse(Long.MinValue))
-        + 1)
+      val files = last.inlineFiles; val dels = last.inlineDeleteFiles
       val curKnown = cur.currentSnapshot
         .map(s => (s.files ++ s.deleteFiles).map(_.path).toSet)
         .getOrElse(Set.empty[String])
-      val addedFiles = last.inlineFiles.filterNot(f => curKnown(f.path))
-      val merged = last.copy(
-        parentId = cur.currentSnapshotId, timestampMs = now,
-        summary = last.summary ++ Map(
-          "added-data-files" -> addedFiles.size.toString,
-          "added-records" -> addedFiles.map(_.recordCount).sum.toString,
-          "added-files-size-bytes" ->
-            addedFiles.map(_.fileSizeBytes).sum.toString))
-      end.copy(
-        currentSnapshotId = Some(merged.snapshotId),
-        snapshots = cur.snapshots :+ merged,
-        snapshotLog = cur.snapshotLog :+
-          graft.tableformat.SnapshotLogEntry(now, merged.snapshotId))
+      end.copy(currentSnapshotId = cur.currentSnapshotId,
+        snapshots = cur.snapshots, snapshotLog = cur.snapshotLog)
+        .withNewSnapshot(last.operation, cur.currentSnapshotId, files, dels,
+          last.summary ++ Snapshot.summary(files, dels,
+            files.filterNot(f => curKnown(f.path))), ts,
+          schemaId = last.schemaId, specId = last.specId)
     }
   }
 
@@ -903,8 +895,8 @@ final case class GraftReleaseSavepointCommand(name: String)
   * transaction surface (SQL COMMIT and the API-level `transactOps`
   * family): all slots of a transaction publish with one shared
   * timestamp, or a `TIMESTAMP AS OF` probe falling between two slots'
-  * stamps reads HALF the transaction. The engine's per-document
-  * monotonic floor (`withSnapshot`) silently bumps a stamp past the
+  * stamps reads HALF the transaction. The per-document instant rule
+  * (`TableMetadata.nextInstant`) silently bumps a stamp past the
   * document's claim-time history — correct per table, torn across the
   * set — so the shared instant must clear EVERY slot's claim-time
   * floor: each slot [[check]]s its document, and a [[TooLow]] raise
@@ -923,13 +915,11 @@ private[catalog] object SharedInstant {
       extends RuntimeException(s"shared commit instant below $need",
         null, false, false)
 
-  /** The stamp `withSnapshot`'s monotonic floor would force on a new
-    * snapshot of `cur` — mirrored exactly (snapshots AND the pointer
-    * log; log-only entries from pointer moves count).
+  /** The earliest stamp a new snapshot of `cur` may carry: the
+    * document's instant rule ([[TableMetadata.nextInstant]]) with the
+    * clock at its minimum.
     */
-  def needFor(cur: TableMetadata): Long = math.max(
-    cur.snapshots.map(_.timestampMs).maxOption.getOrElse(0L),
-    cur.snapshotLog.map(_.timestampMs).maxOption.getOrElse(0L)) + 1
+  def needFor(cur: TableMetadata): Long = cur.nextInstant(Long.MinValue)
 
   def check(cur: TableMetadata, sharedTs: Long): Unit = {
     val need = needFor(cur)

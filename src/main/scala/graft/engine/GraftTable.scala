@@ -948,28 +948,15 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val withSnap = m.currentSnapshot match {
       case None => base
       case Some(s) =>
+        // files keep their sequence numbers, and the clone keeps the
+        // source's lastSequence: re-sequencing would let equality
+        // deletes stop hiding rows
         val files = abs(s.files); val dels = abs(s.deleteFiles)
-        val id = Math.abs(UUID.randomUUID().getMostSignificantBits)
-        val now = System.currentTimeMillis()
-        val snap = Snapshot(
-          snapshotId = id, parentId = None, timestampMs = now,
-          operation = "clone", schemaId = m.currentSchemaId,
-          specId = m.currentSpecId, inlineFiles = files,
-          summary = Map(
-            "total-records" -> files.map(_.recordCount).sum.toString,
-            "total-data-files" -> files.size.toString,
-            "total-files-size-bytes" -> files.map(_.fileSizeBytes).sum.toString,
-            "total-delete-files" -> dels.size.toString,
-            "total-position-deletes" -> dels.filter(_.equalityIds.isEmpty)
-              .map(_.recordCount).sum.toString,
-            "added-data-files" -> files.size.toString,
-            "added-records" -> files.map(_.recordCount).sum.toString,
-            "added-files-size-bytes" -> files.map(_.fileSizeBytes).sum.toString,
+        base.withNewSnapshot("clone", None, files, dels,
+          Snapshot.summary(files, dels, files) ++ Map(
             "source-table" -> location,
             "source-snapshot-id" -> s.snapshotId.toString),
-          inlineDeleteFiles = dels)
-        base.copy(currentSnapshotId = Some(id), snapshots = Vector(snap),
-          snapshotLog = Vector(SnapshotLogEntry(now, id)))
+          System.currentTimeMillis())
     }
     MetadataIO.commit(withSnap)
     // CONFIRM: strip the timestamp now that the clone exists, so a
@@ -1631,70 +1618,40 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     cur.currentSnapshot.map(deletesReaching(_, carried)).getOrElse(Vector.empty)
 
   /** New-snapshot metadata transform — pure function of `cur`, safe to
-    * re-run inside the optimistic-commit retry loop. `tsHint` lets a
-    * multi-table transaction stamp every table's snapshot with ONE
-    * shared commit timestamp, so `TIMESTAMP AS OF` any instant reads a
-    * transaction-consistent set (no probe time can fall between one
-    * transaction's per-table snapshots); monotonicity still wins —
-    * a hint older than the table's history is bumped past it.
+    * re-run inside the optimistic-commit retry loop. Every data
+    * commit, branch commit and cherrypick comes through here; the
+    * stamping itself is [[TableMetadata.withNewSnapshot]]'s. `tsHint`
+    * lets a multi-table transaction stamp every table's snapshot with
+    * ONE shared commit timestamp, so `TIMESTAMP AS OF` any instant
+    * reads a transaction-consistent set; the instant rule still wins —
+    * a hint older than the table's history is bumped past it. A
+    * `branch` commit parents on that branch's head and moves only the
+    * branch.
     */
   private def withSnapshot(cur: TableMetadata, op: String,
       files: Vector[DataFileEntry],
       deleteFiles: Vector[DataFileEntry],
-      tsHint: Option[Long] = None): TableMetadata = {
-    // STRICTLY monotonic per table: two commits inside one wall-clock
-    // millisecond would otherwise tie on timestampMs, and every
-    // consumer that orders history (snapshots/history views, snapshot
-    // expiry's keep-set, commit-sequence queries) would fall back to
-    // the RANDOM snapshot id — nondeterministic commit order observed
-    // as flaky oracle mismatches. The max spans the snapshot LOG too:
-    // pointer moves (rollback/fast-forward) append log-only entries,
-    // and a data commit in the same millisecond must sort AFTER them —
-    // snapshotAsOfTime is log-ordered.
-    val now = math.max(tsHint.getOrElse(System.currentTimeMillis()), math.max(
-      cur.snapshots.map(_.timestampMs).maxOption.getOrElse(Long.MinValue),
-      cur.snapshotLog.map(_.timestampMs).maxOption.getOrElse(Long.MinValue)) + 1)
-    val id = Math.abs(UUID.randomUUID().getMostSignificantBits)
+      tsHint: Option[Long] = None,
+      branch: Option[String] = None,
+      extraSummary: Map[String, String] = Map.empty): TableMetadata = {
+    val parent = branch.fold(cur.currentSnapshot)(b => Some(branchHead(cur, b)))
     // commit sequencing: files appearing for the FIRST time get the next
     // sequence number; carried files keep theirs. Equality deletes hide
     // only strictly-older sequences, so a batch committed WITH an
     // equality delete survives it.
     val nextSeq = cur.lastSequence + 1
-    val knownPaths = cur.currentSnapshot
+    val knownPaths = parent
       .map(s => (s.files ++ s.deleteFiles).map(_.path).toSet)
       .getOrElse(Set.empty)
     def sequenced(fs: Vector[DataFileEntry]) =
       fs.map(f => if (knownPaths(f.path)) f else f.copy(seq = nextSeq))
     val seqFiles = sequenced(files)
     val seqDeletes = sequenced(deleteFiles)
-    val snap = Snapshot(
-      snapshotId = id, parentId = cur.currentSnapshotId, timestampMs = now,
-      operation = op, schemaId = cur.currentSchemaId,
-      specId = cur.currentSpecId,
-      inlineFiles = seqFiles,
-      summary = {
-        // added-* keys (Iceberg snapshot-summary convention) make
-        // incremental consumers O(1) per snapshot: streaming admission
-        // reads the byte/row cost of admitting a commit from the
-        // summary instead of diffing file vectors at every trigger
-        val added = seqFiles.filter(f => !knownPaths(f.path))
-        Map(
-          "total-records" -> seqFiles.map(_.recordCount).sum.toString,
-          "total-data-files" -> seqFiles.size.toString,
-          "total-files-size-bytes" -> seqFiles.map(_.fileSizeBytes).sum.toString,
-          "total-delete-files" -> seqDeletes.size.toString,
-          "total-position-deletes" -> seqDeletes.filter(_.equalityIds.isEmpty)
-            .map(_.recordCount).sum.toString,
-          "added-data-files" -> added.size.toString,
-          "added-records" -> added.map(_.recordCount).sum.toString,
-          "added-files-size-bytes" -> added.map(_.fileSizeBytes).sum.toString)
-      },
-      inlineDeleteFiles = seqDeletes)
-    cur.copy(
-      currentSnapshotId = Some(id),
-      snapshots = cur.snapshots :+ snap,
-      snapshotLog = cur.snapshotLog :+ SnapshotLogEntry(now, id),
-      lastSequence = nextSeq)
+    cur.withNewSnapshot(op, parent.map(_.snapshotId), seqFiles, seqDeletes,
+      Snapshot.summary(seqFiles, seqDeletes,
+        seqFiles.filterNot(f => knownPaths(f.path))) ++ extraSummary,
+      tsHint.getOrElse(System.currentTimeMillis()), branch)
+      .copy(lastSequence = nextSeq)
   }
 
   /** TRUNCATE TABLE: a new EMPTY snapshot — metadata-only (no file
@@ -2713,19 +2670,17 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     * recorded reach every file and stay until `rewriteDeleteFiles()`
     * drops their dead rows.
     */
-  def rewriteDataFilesBinpack(minFileSizeBytes: Long = 32L << 20,
-      targetFileSizeBytes: Long = 128L << 20,
-      minInputFiles: Int = 2): GraftTable = {
+  def rewriteDataFilesBinpack(
+      minFileSizeBytes: Long = GraftTable.BinpackMinFileSizeBytes,
+      targetFileSizeBytes: Long = GraftTable.BinpackTargetFileSizeBytes,
+      minInputFiles: Int = GraftTable.BinpackMinInputFiles): GraftTable = {
     require(minFileSizeBytes > 0, "minFileSizeBytes must be positive")
     require(targetFileSizeBytes > 0, "targetFileSizeBytes must be positive")
     require(minInputFiles >= 2,
       "minInputFiles must be >= 2 (one file compacts to itself)")
     val m = meta
     val snap = m.currentSnapshot.getOrElse(return this)
-    val selected = snap.files
-      .filter(f => f.fileSizeBytes > 0 && f.fileSizeBytes < minFileSizeBytes)
-      .groupBy(_.partitionValues).filter(_._2.size >= minInputFiles)
-      .values.flatten.toVector
+    val selected = smallFiles(snap, minFileSizeBytes, minInputFiles)
     if (selected.isEmpty) return this
     val rows = liveRead(m, snap, selected)
     val written =
@@ -2749,6 +2704,31 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     commitSnapshot(Some(m), "replace", written)(_ =>
       (carried ++ written, deletesKept(m, carried)))
     this
+  }
+
+  /** Binpack's selection, metadata-only: the data files under
+    * `minFileSizeBytes` (size 0 = unknown, never selected), grouped per
+    * partition, from partitions holding at least `minInputFiles` of
+    * them.
+    */
+  private def smallFiles(snap: Snapshot, minFileSizeBytes: Long,
+      minInputFiles: Int): Vector[DataFileEntry] =
+    snap.files
+      .filter(f => f.fileSizeBytes > 0 && f.fileSizeBytes < minFileSizeBytes)
+      .groupBy(_.partitionValues).filter(_._2.size >= minInputFiles)
+      .values.flatten.toVector
+
+  /** `df` range-partitioned on `keys` and sorted within each partition,
+    * so each output file covers a disjoint, sorted slice of the key.
+    * An explicit `targetFiles` pins the output layout; 0 lets the range
+    * shuffle size itself (shuffle partitions / AQE).
+    */
+  private def rangeSorted(df: DataFrame, keys: Seq[Column],
+      targetFiles: Int): DataFrame = {
+    val ranged =
+      if (targetFiles > 0) df.repartitionByRange(targetFiles, keys: _*)
+      else df.repartitionByRange(keys: _*)
+    ranged.sortWithinPartitions(keys: _*)
   }
 
   /** Iceberg's rewrite_manifests: compact a fragmented manifest LIST —
@@ -2788,25 +2768,16 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       val merged = entries.grouped(targetEntries).map(g =>
         Manifests.writeManifest(location, "data", g, fieldType)).toVector
       val refs = kept ++ merged ++ snap.manifests.filter(_.kind == "delete")
-      val now = math.max(System.currentTimeMillis(), math.max(
-        cur.snapshots.map(_.timestampMs).maxOption.getOrElse(Long.MinValue),
-        cur.snapshotLog.map(_.timestampMs).maxOption.getOrElse(Long.MinValue)) + 1)
-      val id = Math.abs(UUID.randomUUID().getMostSignificantBits)
-      val rewritten = Snapshot(
-        snapshotId = id, parentId = cur.currentSnapshotId, timestampMs = now,
-        operation = "replace", schemaId = cur.currentSchemaId,
-        specId = cur.currentSpecId,
-        summary = snap.summary ++ Map(
-          "added-data-files" -> "0", "added-records" -> "0",
-          "added-files-size-bytes" -> "0",
+      // the inventory is unchanged: same totals, nothing added, and no
+      // new sequence number
+      cur.withNewSnapshot("replace", cur.currentSnapshotId,
+        Vector.empty, Vector.empty,
+        snap.summary ++ Snapshot.summary(snap.files, snap.deleteFiles,
+          Vector.empty) ++ Map(
           "manifests-replaced" -> small.size.toString,
           "manifests-created" -> merged.size.toString),
-        manifestList = Some(Manifests.writeList(location, id, refs)),
-        location = location)
-      cur.copy(
-        currentSnapshotId = Some(id),
-        snapshots = cur.snapshots :+ rewritten,
-        snapshotLog = cur.snapshotLog :+ SnapshotLogEntry(now, id))
+        System.currentTimeMillis(),
+        manifestList = id => Some(Manifests.writeList(location, id, refs)))
     } catch { case _: Noop => () }
     this
   }
@@ -2821,7 +2792,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *
     * Merge-on-read interaction (the contract [[rewriteDataFilesBinpack]]
     * documents for the partial case, stated here for the full one):
-    * `read()` materializes EVERY positional and equality delete into
+    * the read of the snapshot the rewrite commits against
+    * materializes EVERY positional and equality delete into
     * the rewritten rows, so the commit carries NO delete files — after
     * a full rewrite the read path is plain scans again. Pinned by
     * MergeOnReadSpec ("full rewrite materializes deletes away...").
@@ -2830,18 +2802,13 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val m = meta
     sortBy.foreach(c => require(m.currentSchema.fieldByName(c).isDefined,
       s"sort column $c not in schema"))
-    val df0 = read()
+    // rows from `m`, the snapshot the commit is based on: a second
+    // metadata read could see a racing commit and fail the rewrite
+    // only after every file was written
+    val df0 = readCurrent(m)
     val df =
       if (sortBy.isEmpty) df0
-      else {
-        val cols = sortBy.map(c => col(s"`$c`"))
-        // explicit targetFiles pins the output layout; otherwise the
-        // range shuffle sizes itself (shuffle partitions / AQE)
-        val ranged =
-          if (targetFiles > 0) df0.repartitionByRange(targetFiles, cols: _*)
-          else df0.repartitionByRange(cols: _*)
-        ranged.sortWithinPartitions(cols: _*)
-      }
+      else rangeSorted(df0, sortBy.map(c => col(s"`$c`")), targetFiles)
     val written = writeFiles(m, df)
     commitSnapshot(Some(m), "replace", written)(_ => (written, Vector.empty))
     this
@@ -2956,14 +2923,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           try {
             // delete rows at 100 TB can be billions — never force one
             // file; range-partition by (file, pos) so each output file
-            // covers a contiguous, well-compressed slice (explicit
-            // targetFiles pins the layout, else AQE sizes the shuffle).
-            // No surviving row: the write leaves nothing behind
-            val keys = Seq(col("file_path"), col("pos"))
-            val ranged =
-              if (targetFiles > 0) rows.repartitionByRange(targetFiles, keys: _*)
-              else rows.repartitionByRange(keys: _*)
-            writeDeleteFile(m, ranged.sortWithinPartitions(keys: _*),
+            // covers a contiguous, well-compressed slice. No surviving
+            // row: the write leaves nothing behind
+            writeDeleteFile(m,
+              rangeSorted(rows, Seq(col("file_path"), col("pos")), targetFiles),
               snap.files)
           } finally rows.unpersist()
       }
@@ -3006,7 +2969,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       s"z-order column ${f.name} has type ${f.dataType}; " +
         "int/long/float/double/timestamp/decimal cluster arithmetically, " +
         "string/date/timestamp_ntz by rank"))
-    val df0 = read()
+    val df0 = readCurrent(m) // the snapshot the commit is based on
     val rankCols = fields.filter(f => rankBased(f.dataType)).map(_.name)
     // rank buckets are a comparison chain per boundary, so cap their
     // resolution at 8 bits (256 buckets/dim — ample for file-level
@@ -3056,11 +3019,8 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       }
     }
     val z = ZOrder.interleave(buckets, bits)
-    val keyed = df0.withColumn("__graft_z", z)
-    val ranged =
-      if (targetFiles > 0) keyed.repartitionByRange(targetFiles, col("__graft_z"))
-      else keyed.repartitionByRange(col("__graft_z"))
-    val out = ranged.sortWithinPartitions(col("__graft_z")).drop("__graft_z")
+    val out = rangeSorted(df0.withColumn("__graft_z", z), Seq(col("__graft_z")),
+      targetFiles).drop("__graft_z")
     val written = writeFiles(m, out)
     commitSnapshot(Some(m), "replace", written)(_ => (written, Vector.empty))
     this
@@ -3183,9 +3143,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     *      policies honored) + `removeOrphanFiles`.
     * Returns the actions taken, in order, for the caller's audit log.
     */
-  def maintain(deleteRatio: Double = 0.1,
-      smallFileBytes: Long = 32L << 20, targetFileBytes: Long = 128L << 20,
-      minInputFiles: Int = 2, keepLast: Int = 10,
+  def maintain(deleteRatio: Double = GraftTable.MaintainDeleteRatio,
+      smallFileBytes: Long = GraftTable.BinpackMinFileSizeBytes,
+      targetFileBytes: Long = GraftTable.BinpackTargetFileSizeBytes,
+      minInputFiles: Int = GraftTable.BinpackMinInputFiles,
+      keepLast: Int = GraftTable.MaintainKeepLast,
       orphanOlderThanMs: Long = GraftTable.OrphanDefaultOlderThanMs,
       renameGraceMsOverride: Option[Long] = None)
       : Seq[String] = {
@@ -3232,13 +3194,10 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     }
     val m1 = meta
     m1.currentSnapshot.foreach { s =>
-      // trigger per PARTITION group — the same predicate the rewrite
-      // selects by — not table-wide: two small files in different
-      // partitions never binpack together
-      val fragmented = s.files
-        .filter(f => f.fileSizeBytes > 0 && f.fileSizeBytes < smallFileBytes)
-        .groupBy(_.partitionValues).exists(_._2.size >= minInputFiles)
-      if (fragmented)
+      // trigger per PARTITION group — the rewrite's own selection —
+      // not table-wide: two small files in different partitions never
+      // binpack together
+      if (smallFiles(s, smallFileBytes, minInputFiles).nonEmpty)
         if (committed(rewriteDataFilesBinpack(smallFileBytes,
             targetFileBytes, minInputFiles)))
           actions += "rewrite_data_files_binpack"
@@ -3494,13 +3453,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
           s"snapshot $snapshotId is not an ancestor of the current snapshot " +
             s"${cur.currentSnapshotId.getOrElse(-1L)}; use setCurrentSnapshot " +
             "to move onto another line")
-      // same strict monotonicity as withSnapshot: history consumers
-      // order by timestamp, and the roll-back entry must sort after
-      // every existing one
-      val now = math.max(System.currentTimeMillis(),
-        cur.snapshotLog.map(_.timestampMs).maxOption.getOrElse(Long.MinValue) + 1)
-      cur.copy(currentSnapshotId = Some(snapshotId),
-        snapshotLog = cur.snapshotLog :+ SnapshotLogEntry(now, snapshotId))
+      cur.withMainAt(snapshotId, System.currentTimeMillis())
     }
     this
   }
@@ -3542,38 +3495,11 @@ final class GraftTable(val spark: SparkSession, val location: String) {
     val m = meta
     val written = writeFiles(m, df)
     MetadataIO.commitRetry(location) { cur =>
-      val ref = branchRef(cur, branch)
-      val head = cur.snapshotById(ref.snapshotId)
-        .getOrElse(sys.error(s"branch $branch head ${ref.snapshotId} expired"))
-      val now = math.max(System.currentTimeMillis(),
-        cur.snapshots.map(_.timestampMs).maxOption.getOrElse(Long.MinValue) + 1)
-      val id = Math.abs(UUID.randomUUID().getMostSignificantBits)
       // branch commits sequence like main ones: a seq-0 file would be
       // wrongly hidden by every pre-existing equality delete
-      val nextSeq = cur.lastSequence + 1
-      val newFiles = written.map(_.copy(seq = nextSeq))
-      val allFiles = head.files ++ newFiles
-      val snap = Snapshot(
-        snapshotId = id, parentId = Some(ref.snapshotId), timestampMs = now,
-        operation = "append", schemaId = cur.currentSchemaId,
-        specId = cur.currentSpecId,
-        inlineFiles = allFiles,
-        summary = Map(
-          "total-records" -> allFiles.map(_.recordCount).sum.toString,
-          "total-data-files" -> allFiles.size.toString,
-          "total-files-size-bytes" -> allFiles.map(_.fileSizeBytes).sum.toString,
-          "total-delete-files" -> head.deleteFiles.size.toString,
-          "total-position-deletes" -> head.deleteFiles
-            .filter(_.equalityIds.isEmpty).map(_.recordCount).sum.toString,
-          "added-data-files" -> newFiles.size.toString,
-          "added-records" -> newFiles.map(_.recordCount).sum.toString,
-          "added-files-size-bytes" -> newFiles.map(_.fileSizeBytes).sum.toString),
-        inlineDeleteFiles = head.deleteFiles)
-      cur.copy(
-        snapshots = cur.snapshots :+ snap,
-        lastSequence = nextSeq,
-        refs = cur.refs.map(r =>
-          if (r.name == branch) r.copy(snapshotId = id) else r))
+      val head = branchHead(cur, branch)
+      withSnapshot(cur, "append", head.files ++ written, head.deleteFiles,
+        branch = Some(branch))
     }
     this
   }
@@ -3593,10 +3519,7 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       require(cur.currentSnapshotId.forall(lineage.contains),
         s"main ${cur.currentSnapshotId.getOrElse(-1L)} is not an ancestor of " +
           s"branch $branch head ${ref.snapshotId}: not a fast-forward")
-      val now = math.max(System.currentTimeMillis(),
-        cur.snapshotLog.map(_.timestampMs).maxOption.getOrElse(Long.MinValue) + 1)
-      cur.copy(currentSnapshotId = Some(ref.snapshotId),
-        snapshotLog = cur.snapshotLog :+ SnapshotLogEntry(now, ref.snapshotId))
+      cur.withMainAt(ref.snapshotId, System.currentTimeMillis())
     }
     this
   }
@@ -3651,39 +3574,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
       require(!added.exists(f => headPaths(f.path)),
         s"snapshot $snapshotId is already reachable from the current head " +
           "(duplicate publish)")
-      // monotonic over the snapshot LOG too (same rule as withSnapshot):
-      // a pointer move in the same millisecond bumps its log entry past
-      // the snapshots' max, and this commit must sort after it or
-      // snapshotAsOfTime would hide the cherrypick
-      val now = math.max(System.currentTimeMillis(), math.max(
-        cur.snapshots.map(_.timestampMs).maxOption.getOrElse(Long.MinValue),
-        cur.snapshotLog.map(_.timestampMs).maxOption.getOrElse(Long.MinValue)) + 1)
-      val nextSeq = cur.lastSequence + 1
-      val picked = added.map(_.copy(seq = nextSeq))
-      val allFiles = head.map(_.files).getOrElse(Vector.empty) ++ picked
-      val dels = head.map(_.deleteFiles).getOrElse(Vector.empty)
-      val id = Math.abs(UUID.randomUUID().getMostSignificantBits)
-      val pub = Snapshot(
-        snapshotId = id, parentId = cur.currentSnapshotId, timestampMs = now,
-        operation = "append", schemaId = cur.currentSchemaId,
-        specId = cur.currentSpecId, inlineFiles = allFiles,
-        summary = Map(
-          "total-records" -> allFiles.map(_.recordCount).sum.toString,
-          "total-data-files" -> allFiles.size.toString,
-          "total-files-size-bytes" -> allFiles.map(_.fileSizeBytes).sum.toString,
-          "total-delete-files" -> dels.size.toString,
-          "added-data-files" -> picked.size.toString,
-          "added-records" -> picked.map(_.recordCount).sum.toString,
-          "added-files-size-bytes" -> picked.map(_.fileSizeBytes).sum.toString,
-          "total-position-deletes" ->
-            dels.filter(_.equalityIds.isEmpty).map(_.recordCount).sum.toString,
-          "source-snapshot-id" -> snapshotId.toString),
-        inlineDeleteFiles = dels)
-      cur.copy(
-        snapshots = cur.snapshots :+ pub,
-        currentSnapshotId = Some(id),
-        lastSequence = nextSeq,
-        snapshotLog = cur.snapshotLog :+ SnapshotLogEntry(now, id))
+      // the picked files are new to the head, so they take the next
+      // sequence number
+      withSnapshot(cur, "append",
+        head.map(_.files).getOrElse(Vector.empty) ++ added,
+        head.map(_.deleteFiles).getOrElse(Vector.empty),
+        extraSummary = Map("source-snapshot-id" -> snapshotId.toString))
     }
     this
   }
@@ -3691,6 +3587,12 @@ final class GraftTable(val spark: SparkSession, val location: String) {
   private def branchRef(cur: TableMetadata, branch: String): TableRef =
     cur.refs.find(r => r.name == branch && r.refType == "BRANCH")
       .getOrElse(sys.error(s"no branch $branch"))
+
+  private def branchHead(cur: TableMetadata, branch: String): Snapshot = {
+    val ref = branchRef(cur, branch)
+    cur.snapshotById(ref.snapshotId)
+      .getOrElse(sys.error(s"branch $branch head ${ref.snapshotId} expired"))
+  }
 
   /** Read the snapshot a ref points at (VERSION AS OF by name). */
   def readRef(name: String): DataFrame = {
@@ -4303,6 +4205,20 @@ object GraftTable {
     * flight and survive.
     */
   val OrphanDefaultOlderThanMs: Long = 3L * 24 * 3600 * 1000
+
+  /** Binpack defaults ([[GraftTable.rewriteDataFilesBinpack]], and
+    * [[GraftTable.maintain]]'s small-file step): files under 32 MiB are
+    * small, packed toward 128 MiB, from partitions with at least two.
+    */
+  val BinpackMinFileSizeBytes: Long = 32L << 20
+  val BinpackTargetFileSizeBytes: Long = 128L << 20
+  val BinpackMinInputFiles: Int = 2
+
+  /** [[GraftTable.maintain]] defaults: materialize deletes once they
+    * reach 10% of live rows; expire past the 10 newest snapshots.
+    */
+  val MaintainDeleteRatio: Double = 0.1
+  val MaintainKeepLast: Int = 10
 
   /** CREATE TABLE (reference D2). */
   def create(spark: SparkSession, location: String, name: String,

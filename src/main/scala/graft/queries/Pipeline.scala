@@ -83,14 +83,18 @@ object Pipeline {
     * pipeline materializes pairs once and feeds every downstream
     * consumer from the parquet).
     */
-  private def dupPairsPath(s: SparkSession, d: String): String =
-    Scratch.setupOnce("q92_pairs", d) {
+  private def dupPairs(s: SparkSession, d: String): DataFrame = {
+    // the schema is read from the written file once, with the pairs: a
+    // bare read.parquet runs one schema-inference job per execution
+    val (p, schema) = Scratch.setupOnce("q92_pairs", d) {
       val p = Scratch.dir("duppairs")
       Dedup.nearDupJaccard(nearDupCorpus(s, d), "doc_id", "text",
           k = 3, threshold = 0.5)
         .write.mode("overwrite").parquet(p)
-      p
+      (p, s.read.parquet(p).schema)
     }
+    s.read.schema(schema).parquet(p)
+  }
 
   /** q41's exact-Jaccard pairs extended to connected components for
     * the DuckDB oracle: bidirected edges + a recursive reachability
@@ -796,7 +800,7 @@ object Pipeline {
     QueryDef(
       "q92_dup_clusters",
       (s, d) => Clusters.dupClusters(
-          s.read.parquet(dupPairsPath(s, d)), "id1", "id2")
+          dupPairs(s, d), "id1", "id2")
         .orderBy(col("id")),
       Some(dupClusterSqlPrefix +
         """
@@ -812,7 +816,7 @@ object Pipeline {
     QueryDef(
       "q93_cluster_dedup",
       (s, d) => Clusters.dedupByCluster(nearDupCorpus(s, d), "doc_id",
-          s.read.parquet(dupPairsPath(s, d)), "id1", "id2")
+          dupPairs(s, d), "id1", "id2")
         .select(col("doc_id"))
         .orderBy(col("doc_id")),
       Some(dupClusterSqlPrefix +

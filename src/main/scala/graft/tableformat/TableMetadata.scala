@@ -177,6 +177,27 @@ final case class Snapshot(snapshotId: Long, parentId: Option[Long],
   }
 }
 
+object Snapshot {
+
+  /** Iceberg's snapshot summary (the spec's `summary` field): `total-*`
+    * over the snapshot's live data and delete files, `added-*` over
+    * the data files this commit adds. The added keys make incremental
+    * consumers O(1) per snapshot: streaming admission prices a commit
+    * from them instead of diffing file vectors at every trigger.
+    */
+  def summary(files: Vector[DataFileEntry], deleteFiles: Vector[DataFileEntry],
+      added: Vector[DataFileEntry]): Map[String, String] = Map(
+    "total-records" -> files.map(_.recordCount).sum.toString,
+    "total-data-files" -> files.size.toString,
+    "total-files-size-bytes" -> files.map(_.fileSizeBytes).sum.toString,
+    "total-delete-files" -> deleteFiles.size.toString,
+    "total-position-deletes" -> deleteFiles.filter(_.equalityIds.isEmpty)
+      .map(_.recordCount).sum.toString,
+    "added-data-files" -> added.size.toString,
+    "added-records" -> added.map(_.recordCount).sum.toString,
+    "added-files-size-bytes" -> added.map(_.fileSizeBytes).sum.toString)
+}
+
 /** A named ref: "BRANCH" moves with writes on that branch; "TAG" is an
   * immutable snapshot pointer (Iceberg's refs model; the reference's
   * `t.refs` metadata table, cell 44).
@@ -224,9 +245,6 @@ final case class TableMetadata(
   def nextFieldId: Int =
     (schemas.flatMap(_.fields.map(_.id)) :+ 0).max + 1
 
-  /** Snapshot visible at a wall-clock time: the latest snapshot with
-    * timestampMs <= ts (reference: FOR SYSTEM_TIME AS OF, apiv15.py:154-157).
-    */
   /** The snapshot that was CURRENT on main at `tsMs` — resolved through
     * the snapshot LOG (the main pointer's history), never the global
     * snapshots list: staged branch commits and abandoned rollback lines
@@ -243,6 +261,64 @@ final case class TableMetadata(
   /** Snapshot by exact id (reference: VERSION AS OF, notebook cell 45). */
   def snapshotById(id: Long): Option[Snapshot] =
     snapshots.find(_.snapshotId == id)
+
+  /** The latest instant this document has stamped, over every snapshot
+    * and every snapshot-log entry (None before the first commit).
+    */
+  def lastInstant: Option[Long] =
+    (snapshots.iterator.map(_.timestampMs) ++
+      snapshotLog.iterator.map(_.timestampMs)).maxOption
+
+  /** THE instant rule: a new snapshot or log entry is stamped at
+    * `clockMs`, lifted strictly past [[lastInstant]]. Strict, so two
+    * commits in one millisecond never tie (history consumers order by
+    * instant, and [[snapshotAsOfTime]] by the log). Over snapshots
+    * AND log, so a writer whose clock lags one that ran ahead still
+    * stamps after it: a branch commit never sorts before a pointer
+    * move, and a pointer move's log entry never precedes the
+    * snapshot it makes current — or `TIMESTAMP AS OF` would serve
+    * that snapshot as of a time before it existed.
+    */
+  def nextInstant(clockMs: Long): Long =
+    lastInstant.fold(clockMs)(last => math.max(clockMs, last + 1))
+
+  /** Main moves to an existing snapshot (rollback, set-current,
+    * fast-forward), logged at [[nextInstant]].
+    */
+  def withMainAt(snapshotId: Long, clockMs: Long): TableMetadata =
+    logged(snapshotId, nextInstant(clockMs))
+
+  private def logged(snapshotId: Long, at: Long): TableMetadata =
+    copy(currentSnapshotId = Some(snapshotId),
+      snapshotLog = snapshotLog :+ SnapshotLogEntry(at, snapshotId))
+
+  /** The one place a snapshot is made: stamps it at [[nextInstant]],
+    * draws its id, appends it, and moves main to it with a log entry
+    * at the same instant — or, on a `branch`, moves only that ref.
+    * The caller supplies the content: files with their sequence
+    * numbers already assigned (`lastSequence` is the caller's too), and
+    * the summary. A pre-sealed snapshot passes `manifestList`, which
+    * writes the list under the drawn id. `schemaId`/`specId` default
+    * to the current ones.
+    */
+  private[graft] def withNewSnapshot(operation: String, parentId: Option[Long],
+      files: Vector[DataFileEntry], deleteFiles: Vector[DataFileEntry],
+      summary: Map[String, String], clockMs: Long,
+      branch: Option[String] = None,
+      manifestList: Long => Option[String] = _ => None,
+      schemaId: Int = currentSchemaId,
+      specId: Int = currentSpecId): TableMetadata = {
+    val at = nextInstant(clockMs)
+    val id = Math.abs(java.util.UUID.randomUUID().getMostSignificantBits)
+    val snap = Snapshot(id, parentId, at, operation, schemaId, specId,
+      files, summary, deleteFiles, manifestList(id), location)
+    val added = copy(snapshots = snapshots :+ snap)
+    branch match {
+      case None => added.logged(id, at)
+      case Some(b) => added.copy(refs = refs.map(r =>
+        if (r.name == b) r.copy(snapshotId = id) else r))
+    }
+  }
 }
 
 object TableMetadata {
